@@ -26,6 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _PARTITION_COLS = ["stream", "client", "date", "hour"]
 
@@ -181,6 +182,8 @@ class ArchiveStore:
         self.spark = spark
         self.root = root
         self.table_format = table_format
+        # stream -> ((first file, size, mtime_ns), data schema); see cat
+        self._schema_cache: dict[str, tuple[tuple, StructType]] = {}
 
     def _require_parquet(self, op: str) -> None:
         if self.table_format != "parquet":
@@ -337,7 +340,13 @@ class ArchiveStore:
           PartitionFilters in the scan node
         - client consistency guard (S14): if ``client`` is None and the
           range holds >1 client, raise (the reference errors the same
-          way, triton/store_reader.go:90-99)
+          way, triton/store_reader.go:90-99). On a local root the
+          pruning walk below already names the ``client=`` dir of
+          every part file the scan reads; when that is at most one
+          client, no row can name a second, so the guard costs no
+          Spark job. Only a listing with >1 client, a URI root or a
+          manifest ``table_format`` runs the row-level
+          ``distinct().limit(2)`` check.
         - manifest order (S15/S16): orderBy(date, _archive_sort) when
           ``ordered``; skip it for analytical consumers that don't need
           replay fidelity (saves a global sort)
@@ -363,6 +372,16 @@ class ArchiveStore:
         ``_archive_sort`` made an ordered cat silently drop every
         INT64 file, 280 -> 180 rows, while count() said 280). Replay
         integrity fails loudly instead.
+
+        Schema cache: with ``mergeSchema`` off Spark infers the data
+        schema from the path-sorted first part file, with a one-task
+        job per read. Part files are immutable, so the schema inferred
+        once is kept per stream, keyed on that first file's path, size
+        and mtime, and handed back through ``.schema(...)`` while the
+        key holds. Partition columns stay out of it, so Spark still
+        infers them from the paths. A new first file (an earlier hour,
+        a compacted hour) misses and re-infers; one entry per stream
+        keeps the cache bounded.
         """
         start_date = coerce_date(start_date)
         end_date = coerce_date(end_date) if end_date else start_date
@@ -511,14 +530,18 @@ class ArchiveStore:
                         src = self.spark.read.parquet(self.root)
                         last = None
                         break
+                key = self._schema_key(pruned)
+                cached = self._schema_cache.get(stream, (None, None))
+                hit = key is not None and cached[0] == key
                 try:
                     # when no in-range partitions exist on local disk
                     # (or on an object store), read the stream subtree
                     # — empty-after-filter results keep the schema of
                     # the existing files
-                    src = (self.spark.read
-                           .option("basePath", self.root)
-                           .parquet(*(pruned or [stream_dir])))
+                    reader = self.spark.read.option("basePath", self.root)
+                    if hit:
+                        reader = reader.schema(cached[1])
+                    src = reader.parquet(*(pruned or [stream_dir]))
                     if pruned and pruned[0].endswith(".parquet"):
                         # POST-PLAN VERIFICATION (r10 matrix soak,
                         # sink-compact pair): handing Spark explicit
@@ -543,6 +566,10 @@ class ArchiveStore:
                                 f"{sorted(want - got)[:3]} (compact/"
                                 "expire raced the plan); re-listing")
                             continue
+                    if key is not None and not hit:
+                        self._schema_cache[stream] = (key, StructType(
+                            [f for f in src.schema.fields
+                             if f.name not in _PARTITION_COLS]))
                     last = None
                     break
                 except Exception as exc:  # noqa: BLE001
@@ -575,8 +602,33 @@ class ArchiveStore:
             # unknown stream: keep the old root read (returns an empty
             # result through the filters rather than a listing error)
             src = self.spark.read.parquet(self.root)
+        listed = None
+        if pruned and pruned[0].endswith(".parquet"):
+            # the scan reads exactly these files, so its rows carry no
+            # client but these files' client= dirs
+            listed = {p[len(stream_dir) + 1:].split(os.sep, 1)[0]
+                      for p in pruned}
         return self._filter_cat(src, stream, start_date, end_date,
-                                client, ordered)
+                                client, ordered, listed)
+
+    def _schema_key(self, files: list[str]) -> tuple | None:
+        """Cache key for the data schema Spark would infer from
+        ``files``: with ``mergeSchema`` off it reads only the
+        path-sorted first data file (``ParquetUtils.splitFiles``), and
+        part files are immutable (job-unique names; compact writes new
+        ones), so (path, size, mtime) of that file fixes the schema.
+        None when ``files`` are not explicit part files or inference
+        would merge every footer."""
+        if not (files and files[0].endswith(".parquet")) or \
+                self.spark.conf.get("spark.sql.parquet.mergeSchema") \
+                .lower() == "true":
+            return None
+        first = min(files)
+        try:
+            st = os.stat(first)
+        except OSError:
+            return None     # raced a compact swap: infer, the plan retries
+        return first, st.st_size, st.st_mtime_ns
 
     def _manifest_committed_names(self) -> set:
         """Basenames recorded in the streaming sink's _spark_metadata
@@ -728,9 +780,13 @@ class ArchiveStore:
 
     def _filter_cat(self, src: DataFrame, stream: str,
                     start_date: _dt.date, end_date: _dt.date,
-                    client: str | None, ordered: bool) -> DataFrame:
+                    client: str | None, ordered: bool,
+                    listed: "set[str] | None" = None) -> DataFrame:
         """Shared cat tail: range/stream/client filters, the S14 guard,
-        replay ordering — identical for path and manifest layouts."""
+        replay ordering — identical for path and manifest layouts.
+        ``listed``: the ``client=`` dirs of every file ``src`` scans,
+        when known; at most one of them answers the guard without a
+        job."""
         df = (
             src
             .where((F.col("stream") == stream)
@@ -739,7 +795,7 @@ class ArchiveStore:
         )
         if client is not None:
             df = df.where(F.col("client") == client)
-        else:
+        elif listed is None or len(listed) > 1:
             clients = [r[0] for r in df.select("client").distinct().limit(2).collect()]
             if len(clients) > 1:
                 raise ValueError(

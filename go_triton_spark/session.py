@@ -7,6 +7,21 @@ Pandas-UDF/Arrow batched), broadcast threshold left to Spark —
 bounded dims (region/nation/band literals) broadcast explicitly,
 SF-scaling dims are deliberately unhinted (registry.scaling_dim) so
 the size-based planner/AQE decides per scale.
+
+File listing stays on the driver under a local master. Spark lists
+more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+(32) paths with a distributed job of one task per path. The streaming
+file source hands every micro-batch's new files over as explicit
+paths, and ``cat`` hands over every part file of its range, so past 32
+files each micro-batch and each replay paid a listing job. Under
+``local[...]`` those tasks run in the driver's own JVM, where they
+only compete with the write or scan they precede, and each stats one
+local file. The builder therefore raises the threshold past any path
+count when the master is ``local`` or ``local[...]``. Every other
+master (a cluster, ``local-cluster``) keeps Spark's default, under
+which executors share the listing, as they should for an object store
+on a real cluster. Like every default here, ``SPARK_GRAFT_EXTRA_CONFS``
+can override it.
 """
 
 from __future__ import annotations
@@ -17,11 +32,14 @@ from pyspark.sql import SparkSession
 
 
 def builder(app_name: str = "go-triton-spark", master: str | None = None,
-            shuffle_partitions: int | None = None) -> SparkSession.Builder:
+            shuffle_partitions: int | None = None,
+            extra_confs: str | None = None) -> SparkSession.Builder:
     """Return a pre-configured SparkSession.Builder.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or local[*]);
     on a real cluster pass ``None`` via spark-submit and the conf wins.
+    ``extra_confs`` defaults to ``$SPARK_GRAFT_EXTRA_CONFS``; pass ``""``
+    to build a session that ignores it without touching the environment.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -62,12 +80,17 @@ def builder(app_name: str = "go-triton-spark", master: str | None = None,
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     )
+    if master == "local" or master.startswith("local["):
+        # list leaf files on the driver (see the module docstring)
+        b = b.config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                     str(2**31 - 1))
     # escape hatch for experiments/ops: semicolon-separated k=v pairs
     # applied LAST so they override any default above (e.g. the scale
     # profiler sets spark.ui.enabled=true to read per-stage shuffle
     # bytes from the status REST API)
-    for kv in filter(None, os.environ.get(
-            "SPARK_GRAFT_EXTRA_CONFS", "").split(";")):
+    if extra_confs is None:
+        extra_confs = os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "")
+    for kv in filter(None, extra_confs.split(";")):
         k, _, v = kv.partition("=")
         if k.strip() and v.strip():
             b = b.config(k.strip(), v.strip())

@@ -11,9 +11,15 @@ reference never could:
 - batch duration breakdown (addBatch/getBatch/walCommit)
 - state-store memory for stateful operators
 
-At scale this is the signal for trigger sizing (batches falling behind
--> raise maxFilesPerTrigger / add executors) and the feed for the
-checkpoint-age view (S18) without touching the offset log.
+At scale this is the signal for trigger sizing and the feed for the
+checkpoint-age view (S18) without touching the offset log. Read the
+duration breakdown before resizing: ``getBatch`` (plus
+``latestOffset``) is the source's listing and planning of the batch's
+new files, ``addBatch`` is the write. Raise ``maxFilesPerTrigger`` or add
+executors when ``addBatch`` dominates and batches fall behind. A batch
+whose ``getBatch`` rivals its ``addBatch`` is spending its time listing,
+not writing, which neither lever shortens: check how the session lists
+files (``session.py`` keeps listing on the driver under a local master).
 """
 
 from __future__ import annotations

@@ -184,6 +184,130 @@ def test_cat_client_guard(spark, store, sf_dir):
     assert store.cat("events", dt.date(2015, 6, 30), client="client_a").count() == 3
 
 
+def _spy_listed(monkeypatch, st):
+    """Record the listing-derived client set each cat hands the guard
+    (None: the row-level check runs)."""
+    seen = []
+    real = st._filter_cat
+
+    def spy(*args, **kwargs):
+        seen.append(args[6] if len(args) > 6 else kwargs.get("listed"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(st, "_filter_cat", spy)
+    return seen
+
+
+def test_cat_client_guard_from_listing(spark, store, sf_dir, monkeypatch):
+    """The guard reads the client set off the pruning walk's file
+    listing. Two clients with part files in range still raise; a
+    second client whose in-range hour holds only hidden or quarantined
+    crash residue contributes no file, so cat answers from the listing
+    exactly what the row-level check answers: one client, no error."""
+    ev = _events(spark, sf_dir).limit(3)
+    when = dt.datetime(2015, 6, 30, 4, tzinfo=UTC)
+    store.ingest_dataframe(ev, "events", "client_a", when=when)
+    seen = _spy_listed(monkeypatch, store)
+    residue = os.path.join(store.root, "stream=events", "client=client_b",
+                           "date=20150630", "hour=04")
+    os.makedirs(residue)
+    for name in (".part-00000-x.c000.snappy.parquet.crash",
+                 ".hidden.parquet", "_SUCCESS"):
+        open(os.path.join(residue, name), "wb").close()
+    out = store.cat("events", when.date())
+    assert seen[-1] == {"client=client_a"}
+    assert out.count() == 3
+    # the row-level check over the same scan gives the same answer
+    src = spark.read.option("basePath", store.root).parquet(
+        os.path.join(store.root, "stream=events"))
+    rows = store._filter_cat(src, "events", when.date(), when.date(),
+                             None, False, None)
+    assert rows.count() == 3
+
+    # a second client with a real part file in range still raises
+    store.ingest_dataframe(ev, "events", "client_b", when=when)
+    with pytest.raises(ValueError, match="Multiple clients"):
+        store.cat("events", when.date())
+    assert seen[-1] == {"client=client_a", "client=client_b"}
+
+
+def test_cat_client_guard_row_level_on_uri_and_manifest_roots(
+        spark, tmp_path, sf_dir, monkeypatch):
+    """Where no file listing exists (a URI root's date-dir read, a
+    manifest table_format's own log), the guard keeps the row-level
+    check: listed is None and two clients still raise."""
+    ev = _events(spark, sf_dir).limit(3)
+    when = dt.datetime(2015, 6, 30, 4, tzinfo=UTC)
+    # a format name other than "parquet" that still reads parquet
+    # stands in for delta/iceberg (no connector jars here)
+    manifest = "org.apache.spark.sql.execution.datasources.parquet." \
+        "ParquetFileFormat"
+    for st in (ArchiveStore(spark, "file://" + str(tmp_path / "uri")),
+               ArchiveStore(spark, str(tmp_path / "m"),
+                            table_format=manifest)):
+        seen = _spy_listed(monkeypatch, st)
+        st.ingest_dataframe(ev, "events", "client_a", when=when)
+        assert st.cat("events", when.date()).count() == 3
+        st.ingest_dataframe(ev, "events", "client_b", when=when)
+        with pytest.raises(ValueError, match="Multiple clients"):
+            st.cat("events", when.date())
+        assert seen == [None, None]
+
+
+def _fresh_schema(spark, root, stream="events"):
+    """The schema an uncached read of every visible part file infers,
+    minus the partition columns cat drops."""
+    files = []
+    for base, dirs, names in os.walk(os.path.join(root, f"stream={stream}")):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        files += [os.path.join(base, n) for n in names
+                  if n.endswith(".parquet") and not n.startswith((".", "_"))]
+    return (spark.read.option("basePath", root).parquet(*files)
+            .drop("stream", "client", "date", "hour").schema)
+
+
+def test_cat_schema_cache_tracks_the_first_file(spark, store, sf_dir):
+    """cat hands Spark a cached data schema while the path-sorted first
+    part file is unchanged, and re-infers when it changes: after a
+    new batch, after compact replaced the first file, and after an
+    ingest into an earlier hour whose file adds a column. Every time
+    the schema equals a fresh uncached read's; one entry per stream."""
+    ev = _events(spark, sf_dir).limit(10)
+    d = dt.date(2015, 6, 30)
+    store.ingest_dataframe(ev, "events", "archive",
+                           when=dt.datetime(2015, 6, 30, 5, tzinfo=UTC))
+    assert store.cat("events", d).schema == _fresh_schema(spark, store.root)
+    key = store._schema_cache["events"][0]
+
+    # a new batch: the cached entry serves (or re-keys) correctly
+    store.ingest_dataframe(ev, "events", "archive",
+                           when=dt.datetime(2015, 6, 30, 5, tzinfo=UTC))
+    assert store.cat("events", d).schema == _fresh_schema(spark, store.root)
+    assert store.cat("events", d).count() == 20
+
+    # compact rewrites the hour under new names: the first file changes
+    store.compact("events", d, "archive")
+    assert store.cat("events", d).schema == _fresh_schema(spark, store.root)
+    assert store._schema_cache["events"][0] != key
+    assert store.cat("events", d).count() == 20
+
+    # an earlier hour's file sorts first and adds a column
+    wide = ev.withColumn("extra", F.lit("x"))
+    store.ingest_dataframe(wide, "events", "archive",
+                           when=dt.datetime(2015, 6, 30, 1, tzinfo=UTC))
+    got = store.cat("events", d).schema
+    assert got == _fresh_schema(spark, store.root)
+    assert "extra" in got.fieldNames()
+    assert store.cat("events", d).where("extra = 'x'").count() == 10
+
+    # a second stream gets its own entry; never more than one each
+    store.ingest_dataframe(ev, "other", "archive",
+                           when=dt.datetime(2015, 6, 30, 5, tzinfo=UTC))
+    store.cat("other", d)
+    store.cat("events", d)
+    assert sorted(store._schema_cache) == ["events", "other"]
+
+
 def test_cat_json(spark, store, sf_dir):
     import json
     ev = _events(spark, sf_dir).limit(2)

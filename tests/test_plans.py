@@ -382,6 +382,23 @@ def test_qgram_single_gram_rank_pass(spark):
             assert not ("gram#" in line and "bucket#" in line), line
 
 
+def _plan_nodes(node):
+    """Every node of a JVM physical plan, pre-order, descending into
+    the current plan of an AdaptiveSparkPlan and the cached plan of an
+    InMemoryTableScan (both are leaves to ``children()``)."""
+    yield node
+    kids = []
+    if node.nodeName() == "AdaptiveSparkPlan":
+        kids.append(node.executedPlan())
+    elif node.nodeName() == "InMemoryTableScan":
+        kids.append(node.relation().cachedPlan())
+    it = node.children().iterator()
+    while it.hasNext():
+        kids.append(it.next())
+    for kid in kids:
+        yield from _plan_nodes(kid)
+
+
 def test_shingle_chain_evaluates_once(spark):
     """r13 shape contract for _shingle_df: the interpreted shingle
     chain (split -> transform -> array_distinct) must appear ONCE in
@@ -392,21 +409,22 @@ def test_shingle_chain_evaluates_once(spark):
     chain twice (once serially in the scan's filter)."""
     from go_triton_spark.operators.dedup import _shingle_df
 
-    spark.catalog.clearCache()  # print the full cache-fill plan
+    spark.catalog.clearCache()  # plan the full cache fill
     df = _shingle_df(spark, SF)
     try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("concat_ws") == 1, plan
-        # the one evaluation sits above the exchange: no Filter with
-        # the chain below an Exchange (scan-stage filters carry no
-        # concat_ws at all)
-        below_exchange = False
-        for line in plan.splitlines():
-            if "Exchange" in line:
-                below_exchange = True
-                continue
-            if below_exchange and "Filter" in line:
-                assert "concat_ws" not in line, line
+        nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+        chain = [n.simpleString(10000) for n in nodes
+                 if "concat_ws" in n.simpleString(10000)]
+        assert len(chain) == 1, chain
+        # the one evaluation sits above the exchange: no Filter in the
+        # subtree below any Exchange carries the chain
+        exchanges = [n for n in nodes if n.nodeName() == "Exchange"]
+        assert exchanges
+        for ex in exchanges:
+            for n in _plan_nodes(ex):
+                if n.nodeName() == "Filter":
+                    assert "concat_ws" not in n.simpleString(10000), \
+                        n.simpleString(10000)
     finally:
         df.unpersist()
 
