@@ -22,6 +22,17 @@ master (a cluster, ``local-cluster``) keeps Spark's default, under
 which executors share the listing, as they should for an object store
 on a real cluster. Like every default here, ``SPARK_GRAFT_EXTRA_CONFS``
 can override it.
+
+Python workers fork from the engine's own daemon,
+``go_triton_spark.pyworker``, named in Spark's
+``spark.python.daemon.module``. pyspark's worker calls
+``importlib.invalidate_caches()`` before every task, which made each
+zip importer on its ``sys.path`` (pyspark.zip, py4j, the spark-core
+jar) re-parse its archive: ~0.18 s of every Python task. The daemon's
+importers re-read only an archive that changed. It starts with ``-m``,
+so this package must be importable on every executor, which every
+decoder closure already requires (``PYTHONPATH`` below locally,
+``--py-files`` or an install on a cluster).
 """
 
 from __future__ import annotations
@@ -79,6 +90,8 @@ def builder(app_name: str = "go-triton-spark", master: str | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        # workers fork from the engine's daemon (see the module docstring)
+        .config("spark.python.daemon.module", "go_triton_spark.pyworker")
     )
     if master == "local" or master.startswith("local["):
         # list leaf files on the driver (see the module docstring)

@@ -5,7 +5,9 @@ this path are the ones the caller asked for. A ``store`` micro-batch
 and a ``cat`` over more than 32 files (Spark's parallel-listing
 threshold) list their files on the driver under a local master, and a
 warm single-client ``cat`` launches no job before the caller's action
-(no client-guard scan, no schema-inference read).
+(no client-guard scan, no schema-inference read). Python workers fork
+from the engine's daemon, whose zip importers keep an unchanged
+archive's directory across tasks.
 """
 
 import datetime as dt
@@ -53,6 +55,54 @@ def test_listing_threshold_only_under_a_local_master(monkeypatch):
     assert builder(master="local[3]")._options[key] == "8"
     assert builder(master="local[3]", extra_confs="")._options[key] \
         == str(2**31 - 1)
+
+
+def test_python_workers_fork_from_the_engine_daemon(monkeypatch):
+    from go_triton_spark.session import builder
+
+    key = "spark.python.daemon.module"
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONFS", raising=False)
+    for master in ("local", "local[3]", "spark://head:7077", "yarn",
+                   "local-cluster[2,1,1024]"):
+        assert builder(master=master)._options[key] \
+            == "go_triton_spark.pyworker"
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONFS", f"{key}=pyspark.daemon")
+    assert builder(master="local[3]")._options[key] == "pyspark.daemon"
+
+
+def test_python_task_keeps_zip_directories(spark):
+    def zip_importers(batches):
+        # a task's zip importers, and the directory reads one
+        # importlib.invalidate_caches() costs them
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or real(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        kinds = [type(f) for f in sys.path_importer_cache.values()
+                 if isinstance(f, zipimport.zipimporter)]
+        yield pd.DataFrame({
+            "plain": [sum(k is zipimport.zipimporter for k in kinds)],
+            "stable": [sum(k.__name__ == "StableZipImporter" for k in kinds)],
+            "reads": [len(reads)]})
+
+    probe = spark.range(0, 4, 1, 2).mapInPandas(
+        zip_importers, "plain long, stable long, reads long")
+    for _ in range(2):     # the second job runs in reused workers
+        rows = probe.collect()
+        assert len(rows) == 2
+        for r in rows:
+            assert r.plain == 0 and r.stable > 0 and r.reads == 0, rows
 
 
 def test_store_micro_batch_lists_files_on_driver(spark, tmp_path):
