@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from go_triton_spark.config import StreamConfig, config_for_name, load_config
+from go_triton_spark.operators.registry import read_parquet
 from go_triton_spark.plans.archive_store import ArchiveStore
 from go_triton_spark.producer import Client, MockClient
 from go_triton_spark.streaming.checkpoints import (checkpoint_stats,
@@ -142,8 +143,9 @@ class TritonEngine:
     def register_tables(self, sf_dir: str, tables: tuple[str, ...] = (
             "region", "nation", "customer", "supplier", "part",
             "orders", "lineitem", "events", "documents", "embeddings")) -> None:
-        """Register the driver's parquet tables as temp views."""
+        """Register the driver's parquet tables as temp views, read
+        through the registry's cached schemas (``read_parquet``)."""
         for t in tables:
             path = os.path.join(sf_dir, f"{t}.parquet")
             if os.path.exists(path):
-                self.spark.read.parquet(path).createOrReplaceTempView(t)
+                read_parquet(self.spark, path).createOrReplaceTempView(t)

@@ -23,6 +23,8 @@ Shared shingle definition (word 3-grams, both engines):
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -198,9 +200,14 @@ _MINHASH_PERMS = 16       # signature length
 _LSH_ROWS = 2             # rows per band
 _LSH_BANDS = _MINHASH_PERMS // _LSH_ROWS  # 8 bands
 _PRIME = 2147483647  # 2^31 - 1 (Mersenne); hash universe and modulus
-# deterministic permutation parameters (public-textbook (a*x+b) mod p)
-_PERM_A = [2 * i + 1 for i in range(1, _MINHASH_PERMS + 1)]
-_PERM_B = [7919 * i + 104729 for i in range(_MINHASH_PERMS)]
+# permutation parameters of (a*h + b) mod p, drawn once from a fixed
+# seed uniformly in [1, p). Small a and b (the old a = 3..33) leave
+# a*h + b below p for every h < p/33, so all 16 permutations keep the
+# order of h, share one argmin, and the 8 bands stop being independent
+# draws: a doc and its one-word extension then differed in every band.
+_PERM_RNG = random.Random(0x5EED)
+_PERM_A = [_PERM_RNG.randrange(1, _PRIME) for _ in range(_MINHASH_PERMS)]
+_PERM_B = [_PERM_RNG.randrange(1, _PRIME) for _ in range(_MINHASH_PERMS)]
 
 
 @query(
@@ -227,7 +234,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     sh = _shingle_df(spark, sf_dir)
     # 31-bit shingle hashes so the (a*h + b) permutations never overflow
-    # a long (a <= 33, h < 2^31 -> product < 2^36)
+    # a long (a, b < 2^31, h < 2^31 -> a*h + b < 2^62 + 2^31)
     hashed = sh.select(
         "doc_id",
         F.expr("transform(shingles, s -> pmod(xxhash64(s), cast(2147483647 as bigint)))")

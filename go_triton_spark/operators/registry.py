@@ -39,6 +39,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from go_triton_spark.plans.archive_store import parquet_schema_key
 
 
 @dataclass(frozen=True)
@@ -159,8 +162,60 @@ def local_df(spark: SparkSession, rows: list, cols: list) -> DataFrame:
     return spark.sql(f"SELECT {sel} FROM VALUES {vals}")
 
 
+#: table path -> (parquet_schema_key, data schema); one entry per path.
+#: Process-wide: the key fixes what inference returns, whichever
+#: session or caller reads.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _data_files(path: str) -> list[str]:
+    """The files Spark's parquet reader takes as data under ``path``
+    (hidden names skipped, as its file index does). Empty when a
+    ``_metadata``/``_common_metadata`` summary decides inference."""
+    if not os.path.isdir(path):
+        return [path]
+    files = []
+    for base, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(".")
+                   and not (d.startswith("_") and "=" not in d)]
+        if {"_metadata", "_common_metadata"} & set(names):
+            return []
+        files += [os.path.join(base, n) for n in names
+                  if not n.startswith((".", "_"))]
+    return files
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the inference job on a
+    warm read.
+
+    With ``mergeSchema`` off Spark infers a parquet schema from one
+    footer, the path-sorted first data file, with a one-task job on
+    every read. The schema inferred once is kept per path, keyed on
+    that file and the inference confs (``parquet_schema_key``, shared
+    with ``cat``), and handed back through ``.schema(...)`` while the
+    key holds. Partition columns of a directory stay out of it, so
+    Spark still infers them from the paths."""
+    files = _data_files(path)
+    key = parquet_schema_key(spark, files)
+    cached = _SCHEMAS.get(path)
+    if key is not None and cached is not None and cached[0] == key:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        rel = os.path.relpath(os.path.dirname(min(files)), path)
+        parts = {seg.split("=", 1)[0] for seg in rel.split(os.sep)
+                 if "=" in seg}
+        _SCHEMAS[path] = (key, StructType(
+            [f for f in df.schema.fields if f.name not in parts]))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """One driver table, ``{sf_dir}/{name}.parquet``, through
+    ``read_parquet``: a warm read of an unchanged file launches no
+    schema-inference job, so building a query costs no Spark job."""
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # TIMESTAMP(NANOS) parquet columns surface as bigint nanos under
     # spark.sql.legacy.parquet.nanosAsLong; normalize to microsecond
     # timestamp_ntz (floor-truncate, matching DuckDB's %f formatting).

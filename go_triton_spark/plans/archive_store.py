@@ -30,6 +30,35 @@ from pyspark.sql.types import StructType
 
 _PARTITION_COLS = ["stream", "client", "date", "hour"]
 
+#: SQL confs that change the schema parquet inference reads off a footer
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+
+def parquet_schema_key(spark: SparkSession, files: list[str]) -> tuple | None:
+    """Cache key for the schema Spark would infer from the parquet data
+    files ``files``: with ``mergeSchema`` off it reads only the
+    path-sorted first data file (``ParquetUtils.splitFiles``), so
+    (path, size, mtime) of that file and the inference confs fix the
+    schema. Part files are immutable (job-unique names; compact writes
+    new ones), and a rewritten file changes size or mtime. None when
+    that first file is not a parquet file or inference would merge
+    every footer; the caller then lets Spark infer."""
+    first = min(files, default="")
+    if not first.endswith(".parquet") or \
+            spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true":
+        return None
+    try:
+        st = os.stat(first)
+    except OSError:
+        return None     # raced a compact swap: infer, the plan retries
+    return (first, st.st_size, st.st_mtime_ns,
+            tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+
 
 def coerce_date(d: "_dt.date | str") -> _dt.date:
     """Accept a date, an ISO string (2026-08-14), or the reference's
@@ -182,7 +211,7 @@ class ArchiveStore:
         self.spark = spark
         self.root = root
         self.table_format = table_format
-        # stream -> ((first file, size, mtime_ns), data schema); see cat
+        # stream -> (parquet_schema_key, data schema); see cat
         self._schema_cache: dict[str, tuple[tuple, StructType]] = {}
 
     def _require_parquet(self, op: str) -> None:
@@ -377,11 +406,12 @@ class ArchiveStore:
         schema from the path-sorted first part file, with a one-task
         job per read. Part files are immutable, so the schema inferred
         once is kept per stream, keyed on that first file's path, size
-        and mtime, and handed back through ``.schema(...)`` while the
-        key holds. Partition columns stay out of it, so Spark still
-        infers them from the paths. A new first file (an earlier hour,
-        a compacted hour) misses and re-infers; one entry per stream
-        keeps the cache bounded.
+        and mtime and on the inference confs (``parquet_schema_key``),
+        and handed back through ``.schema(...)`` while the key holds.
+        Partition columns stay out of it, so Spark still infers them
+        from the paths. A new first file (an earlier hour, a compacted
+        hour) misses and re-infers; one entry per stream keeps the
+        cache bounded.
         """
         start_date = coerce_date(start_date)
         end_date = coerce_date(end_date) if end_date else start_date
@@ -530,7 +560,7 @@ class ArchiveStore:
                         src = self.spark.read.parquet(self.root)
                         last = None
                         break
-                key = self._schema_key(pruned)
+                key = parquet_schema_key(self.spark, pruned)
                 cached = self._schema_cache.get(stream, (None, None))
                 hit = key is not None and cached[0] == key
                 try:
@@ -610,25 +640,6 @@ class ArchiveStore:
                       for p in pruned}
         return self._filter_cat(src, stream, start_date, end_date,
                                 client, ordered, listed)
-
-    def _schema_key(self, files: list[str]) -> tuple | None:
-        """Cache key for the data schema Spark would infer from
-        ``files``: with ``mergeSchema`` off it reads only the
-        path-sorted first data file (``ParquetUtils.splitFiles``), and
-        part files are immutable (job-unique names; compact writes new
-        ones), so (path, size, mtime) of that file fixes the schema.
-        None when ``files`` are not explicit part files or inference
-        would merge every footer."""
-        if not (files and files[0].endswith(".parquet")) or \
-                self.spark.conf.get("spark.sql.parquet.mergeSchema") \
-                .lower() == "true":
-            return None
-        first = min(files)
-        try:
-            st = os.stat(first)
-        except OSError:
-            return None     # raced a compact swap: infer, the plan retries
-        return first, st.st_size, st.st_mtime_ns
 
     def _manifest_committed_names(self) -> set:
         """Basenames recorded in the streaming sink's _spark_metadata

@@ -33,6 +33,18 @@ importers re-read only an archive that changed. It starts with ``-m``,
 so this package must be importable on every executor, which every
 decoder closure already requires (``PYTHONPATH`` below locally,
 ``--py-files`` or an install on a cluster).
+
+PySpark's DataFrame call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+every ``Column`` method and every ``pyspark.sql.functions`` call
+records its Python ``file:line`` in the JVM first: about five py4j
+round trips plus a failed ``import IPython`` per call, hundreds per
+query build. What is lost is that Python fragment in the query
+context of a DataFrame error. Errors themselves stay loud: an
+unresolved column still raises ``AnalysisException`` with its SQL
+context. To get the fragment back, set the key to ``true`` through
+``SPARK_GRAFT_EXTRA_CONFS`` before the process makes its first
+DataFrame call; PySpark reads it once per process.
 """
 
 from __future__ import annotations
@@ -92,6 +104,8 @@ def builder(app_name: str = "go-triton-spark", master: str | None = None,
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
         # workers fork from the engine's daemon (see the module docstring)
         .config("spark.python.daemon.module", "go_triton_spark.pyworker")
+        # no call-site capture per Column/F.* call (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master == "local" or master.startswith("local["):
         # list leaf files on the driver (see the module docstring)

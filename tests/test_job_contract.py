@@ -5,23 +5,31 @@ this path are the ones the caller asked for. A ``store`` micro-batch
 and a ``cat`` over more than 32 files (Spark's parallel-listing
 threshold) list their files on the driver under a local master, and a
 warm single-client ``cat`` launches no job before the caller's action
-(no client-guard scan, no schema-inference read). Python workers fork
-from the engine's daemon, whose zip importers keep an unchanged
-archive's directory across tasks.
+(no client-guard scan, no schema-inference read). A warm
+``load_table`` launches no job either, and building a query pays no
+PySpark call-site capture. Python workers fork from the engine's
+daemon, whose zip importers keep an unchanged archive's directory
+across tasks.
 """
 
 import datetime as dt
 import json
 import os
 
+import pytest
+
 from go_triton_spark.config import load_config
 from go_triton_spark.engine import TritonEngine
+from go_triton_spark.operators import registry
 from go_triton_spark.plans.archive_store import ArchiveStore
 from go_triton_spark.types import EVENTS_SCHEMA
 
 UTC = dt.timezone.utc
 LISTING = "Listing leaf files"
 N_FILES = 40    # above parallelPartitionDiscovery.threshold's default 32
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings")
+DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def _jobs(spark) -> dict[int, str]:
@@ -160,3 +168,112 @@ def test_warm_cat_launches_no_job_before_the_action(spark, tmp_path):
     assert out.count() == 400
     jobs = _jobs_since(spark, before)
     assert jobs and not [j for j in jobs if j[1].startswith(LISTING)], jobs
+
+
+@pytest.fixture
+def sf01(sf_dir):
+    """The sf0.01 corpus, beside the smoke corpus."""
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01")
+
+
+def test_warm_load_table_launches_no_job(spark, sf01, tmp_path):
+    for t in TABLES:                # cold: at most one inference job each
+        registry.load_table(spark, sf01, t)
+    before = _jobs(spark)
+    for t in TABLES:
+        registry.load_table(spark, sf01, t)
+    TritonEngine(spark, str(tmp_path)).register_tables(sf01)
+    assert _jobs_since(spark, before) == []
+    assert spark.table("orders").count() > 0
+
+
+def test_cached_schema_equals_a_fresh_read(spark, sf01, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for t in TABLES:
+        path = os.path.join(sf01, f"{t}.parquet")
+        registry.load_table(spark, sf01, t)
+        warm = registry.read_parquet(spark, path).schema
+        assert warm == spark.read.parquet(path).schema, t
+        assert registry._SCHEMAS[path][1] == warm, t
+    # an events.ts stored as TIMESTAMP(NANOS) is a long under
+    # nanosAsLong, warm or cold, and load_table normalizes it alike
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1_500_000_000_123_456_789],
+                                            pa.timestamp("ns"))}),
+                   path, version="2.6")
+    for _ in range(2):
+        assert registry.read_parquet(spark, path).schema == \
+            spark.read.parquet(path).schema
+        assert registry.read_parquet(spark, path).dtypes == [("ts", "bigint")]
+        ev = registry.load_table(spark, str(tmp_path), "events")
+        assert ev.dtypes == [("ts", "timestamp_ntz")]
+        assert ev.head().ts == dt.datetime(2017, 7, 14, 2, 40, 0, 123456)
+
+
+@pytest.fixture
+def binary_as_string(spark):
+    key = "spark.sql.parquet.binaryAsString"
+    spark.conf.set(key, "false")
+    yield lambda v: spark.conf.set(key, v)
+    spark.conf.unset(key)
+
+
+def test_rewrite_or_inference_conf_reinfers(spark, tmp_path,
+                                            binary_as_string):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1], "b": [b"x"]}), path)
+    assert registry.read_parquet(spark, path).dtypes == \
+        [("a", "bigint"), ("b", "binary")]
+    # the same file rewritten in place re-infers
+    pq.write_table(pa.table({"a": [1], "b": [b"x"], "c": [2]}), path)
+    assert registry.read_parquet(spark, path).columns == ["a", "b", "c"]
+    # a flipped inference conf re-infers, for load_table and for cat
+    # (files without Spark's own schema in the footer, as Spark-written
+    # ones answer inference from that schema whatever the confs)
+    store = ArchiveStore(spark, str(tmp_path / "archive"))
+    hour = tmp_path / "archive" / "stream=events" / "client=bench" / \
+        "date=20150630" / "hour=05"
+    hour.mkdir(parents=True)
+    pq.write_table(pa.table({"b": [b"x"]}), str(hour / "part-0.parquet"))
+    day = dt.date(2015, 6, 30)
+    assert dict(store.cat("events", day, ordered=False).dtypes)["b"] == "binary"
+    binary_as_string("true")
+    assert dict(registry.read_parquet(spark, path).dtypes)["b"] == "string"
+    assert dict(store.cat("events", day, ordered=False).dtypes)["b"] == "string"
+    # a partitioned directory keeps inferring its partition columns
+    part = str(tmp_path / "p.parquet")
+    spark.sql("SELECT id, id % 2 AS k FROM range(4)").write \
+        .partitionBy("k").parquet(part)
+    for _ in range(2):
+        got = registry.read_parquet(spark, part)
+        assert got.schema == spark.read.parquet(part).schema
+        assert got.where("k = 1").count() == 2
+
+
+def test_builder_turns_off_call_site_capture(monkeypatch):
+    from go_triton_spark.session import builder
+
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONFS", raising=False)
+    for master in ("local", "local[3]", "spark://head:7077", "yarn",
+                   "local-cluster[2,1,1024]"):
+        assert builder(master=master)._options[DEBUGGING] == "false"
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONFS", f"{DEBUGGING}=true")
+    assert builder(master="local[3]")._options[DEBUGGING] == "true"
+
+
+def test_live_session_skips_call_site_capture(spark, monkeypatch):
+    from pyspark.errors import AnalysisException
+    from pyspark.errors import utils
+    from pyspark.sql import functions as F
+
+    # re-read the conf from the live session, not a cached answer
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    assert spark.conf.get(DEBUGGING) == "false"
+    assert utils.is_debugging_enabled() is False
+    with pytest.raises(AnalysisException, match="nope"):
+        spark.range(1).select(F.col("nope") + 1).schema

@@ -49,6 +49,28 @@ def test_minhash_matches_exact_jaccard_pairs(spark):
     assert lsh == exact and len(exact) > 0
 
 
+def test_minhash_finds_nested_near_dups(spark, tmp_path):
+    """A doc x, x plus one word, and that plus one more word: three
+    pairs at Jaccard 0.93-0.97, which 8 independent bands miss with
+    probability ~1e-8 each. The two added shingles hash (31-bit, as
+    the query does) below 10^4, far under the base doc's lowest,
+    49482187. Permutations with small a and b (a = 3..33, b ~ 1e5)
+    never wrap such a hash, so it was every minhash of the doc that
+    gained it: each step of the chain moved all 8 bands and all three
+    pairs were missed."""
+    x = " ".join(f"w{i}" for i in range(30))
+    texts = [x, x + " dup86789", x + " dup86789 dup216786"]
+    lows = spark.sql(
+        "SELECT pmod(xxhash64(s), 2147483647) AS h FROM VALUES "
+        "('w28_w29_dup86789'), ('w29_dup86789_dup216786') AS t(s)")
+    assert [r.h for r in lows.collect()] == [7310, 4605]
+    spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "documents.parquet"))
+    got = {(r["id_a"], r["id_b"]) for r in REGISTRY["dedup_minhash_lsh"]
+           .spark(spark, str(tmp_path)).collect()}
+    assert got == {(0, 1), (0, 2), (1, 2)}
+
+
 def test_simhash_is_16_bit_and_stable(spark):
     rows = _run(spark, "dedup_simhash").collect()
     assert all(0 <= r["simhash16"] < 65536 for r in rows)
