@@ -216,9 +216,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``read_parquet``: a warm read of an unchanged file launches no
     schema-inference job, so building a query costs no Spark job."""
     df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
-    # TIMESTAMP(NANOS) parquet columns surface as bigint nanos under
-    # spark.sql.legacy.parquet.nanosAsLong; normalize to microsecond
-    # timestamp_ntz (floor-truncate, matching DuckDB's %f formatting).
+    # The gated corpora store events.ts as TIMESTAMP(MICROS) (footer
+    # timestamp[us]), which reads as a timestamp. This branch serves
+    # externally supplied files that store it as TIMESTAMP(NANOS): under
+    # spark.sql.legacy.parquet.nanosAsLong those surface as bigint nanos;
+    # normalize to microsecond timestamp_ntz (floor-truncate, matching
+    # DuckDB's %f formatting). test_cached_schema_equals_a_fresh_read
+    # covers it with a nanos file of its own.
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
             "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))

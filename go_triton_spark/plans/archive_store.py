@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -188,6 +190,23 @@ def _prune_retrying(prune, attempts: int = 8):
         except _VanishedMidWalk as exc:
             last = exc
     raise last
+
+
+def _drop_tombstone(path: str) -> None:
+    """Delete an expired date's tombstone: a second walk if the first
+    is torn, already-gone counts as done, anything left raises."""
+    import shutil
+
+    err = None
+    for _pass in (0, 1):
+        try:
+            shutil.rmtree(path)
+            return
+        except OSError as exc:
+            err = exc
+        if not os.path.lexists(path):
+            return
+    raise OSError(f"expire: {path} survived two deletion passes") from err
 
 
 class ArchiveStore:
@@ -1208,6 +1227,14 @@ class ArchiveStore:
                   f"hour_ino={_ino(hour_dir)} tmp_ino={_ino(tmp_dir)}",
                   flush=True)
 
+        def _drop_staging_if_expired():
+            # `expire` dropped the date mid-rewrite, and the write's
+            # mkdirs may have re-created ``date=...`` around this
+            # attempt's staging: remove it (it is ours alone) so the
+            # vanished-hour branch of ``compact`` can rmdir the date
+            if not os.path.isdir(hour_dir):
+                shutil.rmtree(tmp_dir, ignore_errors=True)
+
         _audit("pre-write")
         # read PINNED to the entry listing (r12 ingest-compact soak):
         # reading the DIRECTORY let the scan pick up part files a
@@ -1215,10 +1242,14 @@ class ArchiveStore:
         # making "what got rewritten" torn — with an explicit file
         # list, anything not in `files` is by construction a
         # straggler the rescue below must carry across the swap
-        (self.spark.read.parquet(
-            *[os.path.join(hour_dir, f) for f in files])
-             .repartitionByRange(n_out, "_archive_sort")
-             .write.parquet(tmp_dir))
+        try:
+            (self.spark.read.parquet(
+                *[os.path.join(hour_dir, f) for f in files])
+                 .repartitionByRange(n_out, "_archive_sort")
+                 .write.parquet(tmp_dir))
+        except Exception:
+            _drop_staging_if_expired()
+            raise
         _audit("post-write")
 
         def _rescue_stragglers(doomed: str) -> int:
@@ -1321,7 +1352,11 @@ class ArchiveStore:
         else:
             # fallback pair of renames: a listing in the gap can
             # see the hour briefly absent
-            os.rename(hour_dir, old_dir)
+            try:
+                os.rename(hour_dir, old_dir)
+            except FileNotFoundError:
+                _drop_staging_if_expired()
+                raise
             try:
                 os.rename(tmp_dir, hour_dir)
             except OSError:
@@ -1350,8 +1385,6 @@ class ArchiveStore:
         reference has no retention at all (archives accumulate in S3
         forever); this is north-star data-lifecycle surface.
         """
-        import shutil
-
         self._require_parquet("expire")
         slice_dir = os.path.join(
             self.root, f"stream={stream}", f"client={client}")
@@ -1378,35 +1411,34 @@ class ArchiveStore:
         if not os.path.isdir(slice_dir):
             return stats
         for name in sorted(os.listdir(slice_dir)):
+            if name.startswith(".date=") and "._expired." in name:
+                # an interrupted expire's tombstone; an hour's grace
+                # keeps this off one a live peer is still deleting
+                born = name.rsplit("._expired.", 1)[1].split(".")[0]
+                if born.isdigit() and time.time() - int(born) > 3600:
+                    _drop_tombstone(os.path.join(slice_dir, name))
+                continue
             if not name.startswith("date="):
                 continue
             if name[len("date="):] < cutoff:
-                target = os.path.join(slice_dir, name)
-                # Deletion must be IDEMPOTENT against concurrent
-                # maintenance: a peer expire may have dropped the date
-                # between our listdir and here (FileNotFoundError on
-                # the root), and a concurrent compact of the same date
-                # renames entries (hour-dir swap, straggler rescue,
-                # quarantine) WHILE our rmtree walk unlinks them — the
-                # walk then hits paths that vanished mid-stream
-                # (FileNotFoundError from a child) or a directory that
-                # briefly re-gains an entry (ENOTEMPTY). The goal
-                # state is simply "date dir gone": swallow
-                # already-gone, retry once over a torn walk, and
-                # surface anything persistent loudly.
+                # Rename the date to a hidden tombstone, then delete
+                # that. A compact of the same date works by path under
+                # ``date=...``: once the rename lands, its lock and
+                # staging creates fail with FileNotFoundError instead of
+                # re-adding entries mid-walk (deleting in place let it
+                # re-create ``._compact_lock`` between passes and fail
+                # expire), and nothing else knows the tombstone's name.
+                # Readers never list hidden names. A peer expire that
+                # renamed the date first already won: counted dropped.
+                tomb = os.path.join(
+                    slice_dir, f".{name}._expired.{int(time.time())}."
+                    f"{uuid.uuid4().hex[:8]}")
                 try:
-                    shutil.rmtree(target)
+                    os.rename(os.path.join(slice_dir, name), tomb)
                 except FileNotFoundError:
-                    pass        # peer got there first — goal state holds
-                except OSError:
-                    try:
-                        shutil.rmtree(target)   # re-walk post-swap state
-                    except FileNotFoundError:
-                        pass
-                if os.path.lexists(target):
-                    raise OSError(
-                        f"expire: {target} survived two deletion "
-                        f"passes (concurrent writer resurrecting it?)")
+                    pass
+                else:
+                    _drop_tombstone(tomb)
                 stats["dropped"] += 1
             else:
                 stats["kept"] += 1

@@ -1226,3 +1226,63 @@ def test_expire_idempotent_against_concurrent_maintenance(
     monkeypatch.setattr(shutil, "rmtree", stuck)
     with pytest.raises(OSError):
         store.expire("events", "gamma", keep.date())
+
+
+def test_expire_converges_while_compact_recreates_its_lock(
+        spark, store, sf_dir, monkeypatch):
+    """A compact of the date being expired creates its hour lock in the
+    date dir just before expire's deletion walk removes the dir itself,
+    on every pass. Deleting in place, each pass then failed with
+    ENOTEMPTY and expire raised "survived two deletion passes" (seen
+    under CPU load in the four-way concurrency soak). Expire must drop
+    the date, and the compact's lock create must fail with
+    FileNotFoundError instead of re-creating ``date=...``."""
+    when = dt.datetime(2026, 8, 1, 5, tzinfo=UTC)
+    store.ingest_dataframe(_events(spark, sf_dir).limit(10), "events",
+                           "archive", when=when)
+    slice_dir = os.path.join(store.root, "stream=events", "client=archive")
+    date_dir = os.path.join(slice_dir, "date=20260801")
+    lock = os.path.join(date_dir, ".hour=05._compact_lock")
+    real_rmdir, compacts = os.rmdir, []
+
+    def rmdir(path, *a, **k):
+        if k.get("dir_fd") is None and "date=20260801" in str(path):
+            try:    # the peer compact's O_EXCL lock create
+                os.close(os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+                compacts.append("created")
+            except FileNotFoundError:
+                compacts.append("FileNotFoundError")
+        return real_rmdir(path, *a, **k)
+
+    monkeypatch.setattr(os, "rmdir", rmdir)
+    stats = store.expire("events", "archive", dt.date(2026, 8, 2))
+    monkeypatch.undo()
+    assert stats == {"dropped": 1, "kept": 0}
+    assert compacts and set(compacts) == {"FileNotFoundError"}, compacts
+    assert os.listdir(slice_dir) == [], "date or tombstone left behind"
+    with pytest.raises(FileNotFoundError):
+        store.compact("events", when.date(), "archive")
+    assert not os.path.lexists(date_dir)
+
+
+def test_compact_racing_expire_leaves_no_date_behind(spark, store, sf_dir,
+                                                     monkeypatch):
+    """Expire drops the date while compact rewrites one of its hours,
+    after Hadoop's mkdirs re-created the date around compact's staging
+    dir. The hour is counted vanished, and the staging (this attempt's
+    own) goes with the re-created date: expire's delete sticks."""
+    from go_triton_spark.plans import archive_store
+
+    when = dt.datetime.now(tz=UTC) - dt.timedelta(days=3, hours=5)
+    hour_dir, _ = _seed_fragmented_hour(spark, store, sf_dir, when)
+    date_dir = os.path.dirname(hour_dir)
+
+    def expire_wins(tmp_dir, hour):
+        os.rename(date_dir, date_dir + ".gone")     # expire's tombstone
+        os.makedirs(tmp_dir)                        # the write's mkdirs
+        return False                                # -> rename fallback
+
+    monkeypatch.setattr(archive_store, "_exchange_dirs", expire_wins)
+    stats = store.compact("events", when.date(), "archive")
+    assert stats["hours_vanished"] == 1 and stats["hours"] == 0
+    assert not os.path.lexists(date_dir), os.listdir(date_dir)

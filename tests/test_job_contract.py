@@ -9,7 +9,9 @@ warm single-client ``cat`` launches no job before the caller's action
 ``load_table`` launches no job either, and building a query pays no
 PySpark call-site capture. Python workers fork from the engine's
 daemon, whose zip importers keep an unchanged archive's directory
-across tasks.
+across tasks. The driver JVM starts from a class-data archive that a
+first session dumps; a corrupt or declined archive never costs a
+session its start or ``cli cat`` its clean stdout.
 """
 
 import datetime as dt
@@ -277,3 +279,157 @@ def test_live_session_skips_call_site_capture(spark, monkeypatch):
     assert utils.is_debugging_enabled() is False
     with pytest.raises(AnalysisException, match="nope"):
         spark.range(1).select(F.col("nope") + 1).schema
+
+
+# ------------------------------------------------------ class-data archive
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MAPPED_ARCHIVES = (
+    "from go_triton_spark.session import get_spark\n"
+    "pid = get_spark('cds-probe')._jvm.java.lang.ProcessHandle.current().pid()\n"
+    "with open(f'/proc/{pid}/maps') as fh:\n"
+    "    print(sorted({l.split()[-1] for l in fh if l.rstrip().endswith('.jsa')}))\n")
+
+
+@pytest.fixture
+def fake_spark_home(tmp_path, monkeypatch):
+    """A SPARK_HOME with one jar and a stock conf dir (templates only),
+    and a private archive cache."""
+    home = tmp_path / "spark"
+    (home / "jars").mkdir(parents=True)
+    (home / "jars" / "a.jar").write_bytes(b"jar")
+    (home / "conf").mkdir()
+    (home / "conf" / "spark-defaults.conf.template").write_text("")
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    # the builder sets SPARK_CONF_DIR itself: record the current value
+    # first, so teardown restores it
+    monkeypatch.setenv("SPARK_CONF_DIR", "")
+    monkeypatch.delenv("SPARK_CONF_DIR")
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONFS", raising=False)
+    return home
+
+
+def test_cds_needs_a_conf_dir_without_real_files(fake_spark_home, tmp_path,
+                                                monkeypatch):
+    from go_triton_spark.session import JAVA_OPTS, builder
+
+    # templates only: the builder points SPARK_CONF_DIR at its own
+    # empty directory and dumps an archive
+    opts = builder(master="local[2]")._options
+    assert "-XX:ArchiveClassesAtExit=" in opts[JAVA_OPTS]
+    own = tmp_path / "cache" / "go_triton_spark" / "conf"
+    assert os.environ["SPARK_CONF_DIR"] == str(own)
+    assert os.listdir(own) == []
+
+    # a real spark-defaults.conf in the default conf dir: no flags
+    # (they would override its extraJavaOptions), no conf dir swap
+    monkeypatch.delenv("SPARK_CONF_DIR")
+    (fake_spark_home / "conf" / "spark-defaults.conf").write_text(
+        "spark.driver.extraJavaOptions -Dfrom.defaults=1\n")
+    assert JAVA_OPTS not in builder(master="local[2]")._options
+    assert "SPARK_CONF_DIR" not in os.environ
+
+    # the user's own conf dir is kept as set
+    user = tmp_path / "user-conf"
+    user.mkdir()
+    (user / "spark-defaults.conf").write_text("spark.ui.enabled false\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(user))
+    assert JAVA_OPTS not in builder(master="local[2]")._options
+    assert os.environ["SPARK_CONF_DIR"] == str(user)
+
+
+def test_cds_flags_go_next_to_the_users_java_options(fake_spark_home,
+                                                     monkeypatch):
+    from go_triton_spark.session import JAVA_OPTS, builder
+
+    mine = "-Dgo.triton.probe=1 -Xss4m"
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONFS", f"{JAVA_OPTS}={mine}")
+    for b in (builder(master="local[2]"),
+              builder(master="local[2]", extra_confs=f"{JAVA_OPTS}={mine}")):
+        opts = b._options[JAVA_OPTS]
+        assert opts.endswith(" " + mine), opts
+        assert "-Xlog:all=warning:stderr" in opts
+        assert "-XX:ArchiveClassesAtExit=" in opts
+    # options that run CDS their own way get nothing added
+    assert builder(master="local[2]", extra_confs=f"{JAVA_OPTS}=-Xshare:off"
+                   )._options[JAVA_OPTS] == "-Xshare:off"
+
+
+@pytest.fixture(scope="module")
+def cds_sessions(spark, tmp_path_factory):
+    """Two sessions in their own processes against a private cache whose
+    key path holds a corrupt archive: a ``cli cat`` that dumps a fresh
+    archive at exit, then a session that starts from it."""
+    import subprocess
+    import sys
+    import zipfile
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    from go_triton_spark import session
+
+    base = tmp_path_factory.mktemp("cds")
+    conf = base / "conf"        # an empty conf dir the user set
+    conf.mkdir()
+    archive = base / "cache" / "go_triton_spark" / (
+        f"spark-{session._archive_key(_find_spark_home(), str(conf))}.jsa")
+    archive.parent.mkdir(parents=True)
+    archive.write_bytes(b"\xa8\xab\x0b\xf0 not an archive" * 4096)
+    root = base / "root"
+    ArchiveStore(spark, str(root / "archive")).ingest_dataframe(
+        spark.createDataFrame(
+            [(i, dt.datetime(2026, 8, 1, 5, tzinfo=UTC), i, "click", 1.0,
+              "{}") for i in range(5)], EVENTS_SCHEMA),
+        "events", "archive", when=dt.datetime(2026, 8, 1, 5, tzinfo=UTC))
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("SPARK_GRAFT_EXTRA_CONFS", "TRITON_CONFIG")}
+    env.update(XDG_CACHE_HOME=str(base / "cache"), SPARK_CONF_DIR=str(conf),
+               TRITON_ROOT=str(root), TRITON_CLIENT="archive")
+
+    def run(*args, **more_env):
+        return subprocess.run([sys.executable, *args], env=env | more_env,
+                              cwd=REPO, capture_output=True, text=True,
+                              timeout=600)
+
+    cat = run("-m", "go_triton_spark.cli", "cat", "--stream", "events",
+              "--start-date", "20260801")
+    stamped = session._stamped(str(archive))
+    size = archive.stat().st_size if archive.exists() else 0
+    probe = run("-c", MAPPED_ARCHIVES)
+    # a jar in front of the classpath the archive was dumped for: the
+    # JVM declines the archive
+    with zipfile.ZipFile(base / "extra.jar", "w") as jar:
+        jar.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
+    declined = run("-c", MAPPED_ARCHIVES, SPARK_GRAFT_EXTRA_CONFS=(
+        f"spark.driver.extraClassPath={base / 'extra.jar'}"))
+    return {"archive": str(archive), "cat": cat, "stamped": stamped,
+            "size": size, "probe": probe, "declined": declined,
+            "kept_after_decline": archive.exists()}
+
+
+def test_corrupt_archive_is_replaced_and_stdout_stays_clean(cds_sessions):
+    cat = cds_sessions["cat"]
+    assert cat.returncode == 0, cat.stderr[-3000:]
+    # stdout holds the replayed rows and nothing else: the dumping JVM's
+    # warnings (one per class it skips) go to stderr
+    rows = [json.loads(line) for line in cat.stdout.splitlines()]
+    assert sorted(r["event_id"] for r in rows) == list(range(5))
+    assert "[warning][cds]" in cat.stderr
+    assert f"{cds_sessions['archive']} is stale or corrupt" in cat.stderr
+    # the corrupt file was never handed to the JVM: replaced at exit
+    assert cds_sessions["stamped"] and cds_sessions["size"] > 1 << 20
+
+
+def test_live_session_maps_the_archive(cds_sessions):
+    probe = cds_sessions["probe"]
+    assert probe.returncode == 0, probe.stderr[-3000:]
+    assert cds_sessions["archive"] in probe.stdout, probe.stdout
+
+
+def test_declined_archive_is_removed_at_exit(cds_sessions):
+    declined = cds_sessions["declined"]
+    assert declined.returncode == 0, declined.stderr[-3000:]
+    assert cds_sessions["archive"] not in declined.stdout, declined.stdout
+    assert "did not map" in declined.stderr
+    assert not cds_sessions["kept_after_decline"]
