@@ -1,23 +1,22 @@
 """Native decode fast path (r9 verdict Next #2; default-ON since r12).
 
-The clean-room pure-Python codecs (vp8/vp8l/png/jpeg/tiff/zstd/lz4/xz)
-are the correctness story: differentially validated, fuzz-batched, and
-the thing the driver gates pin. They are also the honest throughput
-floor — measured ~4 ms/kilopixel for VP8 (SCALE.md), 2-3 orders of
-magnitude off native code. At a real 100 TB corpus with megapixel
-images that floor dominates the pipeline, and the container DOES ship
-the system libraries (libwebp.so.7, libpng16, libtiff.so.6, libjpeg.so.62,
-libzstd.so.1, liblz4.so.1, liblzma via stdlib lzma). This module binds
-them with ctypes and routes the HOT decode loops through C while
-keeping the engine's output contracts:
+The clean-room pure-Python codecs (vp8/vp8l/png/jpeg/tiff and the
+FLAC/ADPCM/GIF/QOI/snappy-CRC hot loops) are the correctness story:
+differentially validated, fuzz-batched, and the thing the oracle gates
+pin. They are also the honest throughput floor — measured ~4
+ms/kilopixel for VP8 (SCALE.md), 2-3 orders of magnitude off native
+code. At a real 100 TB corpus with megapixel images that floor
+dominates the pipeline, and the container DOES ship the system
+libraries (libwebp.so.7, libpng16, libtiff.so.6, libjpeg.so.62). This
+module binds them with ctypes and routes the HOT decode loops through
+C while keeping the engine's output contracts:
 
 - **bit-identical to the pure path** for WebP (lossy VP8 via
   WebPDecodeYUV + this engine's own integer yuv_to_rgb — the YUV
   planes are already proven bit-exact against libwebp by
   tests/test_vp8_codec.py; lossless VP8L via WebPDecodeRGBA), PNG
   (libpng RGBA read, alpha dropped exactly like parse_png), TIFF
-  (TIFFReadRGBAImage), and byte-identical for zstd / lz4 / xz
-  decompression. Asserted over the generator corpora by
+  (TIFFReadRGBAImage). Asserted over the generator corpora by
   tests/test_native_fastpath.py.
 - **conforming-but-not-bit-identical for JPEG**: ITU-T T.81 leaves
   IDCT precision implementation-defined; the pure decoder uses the
@@ -36,6 +35,10 @@ path. The pytest suite pins the PURE path as its default
 (tests/conftest.py sets TRITON_NATIVE_DECODE=0) so the clean-room
 decoders stay continuously exercised; the parity/differential legs
 opt back in explicitly.
+
+Compressed-shard ingest (xz/zstd/lz4) is not routed here: it has one
+decoder per format, stdlib lzma and pyarrow's libzstd/liblz4
+(operators/ingest.py), and this flag does not reach it.
 
 Cluster note: ctypes binds per-process, so executors resolve the
 libraries locally; a heterogeneous cluster where some hosts lack a
@@ -1310,214 +1313,6 @@ def gif_lzw_decode_native(data: bytes, min_code_size: int,
     return bytes(out)
 
 
-# ------------------------------------------------- zstd / lz4 / xz
-
-_zstd_lib = None
-_zstd_tried = False
-
-
-def _zstd():
-    global _zstd_lib, _zstd_tried
-    if _zstd_tried:
-        return _zstd_lib
-    _zstd_tried = True
-    lib = _try_cdll("libzstd.so.1", "libzstd.so",
-                    ctypes.util.find_library("zstd"))
-    if lib is None:
-        return None
-    try:
-        lib.ZSTD_getFrameContentSize.restype = ctypes.c_ulonglong
-        lib.ZSTD_getFrameContentSize.argtypes = [ctypes.c_char_p,
-                                                 ctypes.c_size_t]
-        lib.ZSTD_decompress.restype = ctypes.c_size_t
-        lib.ZSTD_decompress.argtypes = [
-            ctypes.c_void_p, ctypes.c_size_t, ctypes.c_char_p,
-            ctypes.c_size_t]
-        lib.ZSTD_isError.restype = ctypes.c_uint
-        lib.ZSTD_isError.argtypes = [ctypes.c_size_t]
-        lib.ZSTD_createDStream.restype = ctypes.c_void_p
-        lib.ZSTD_freeDStream.argtypes = [ctypes.c_void_p]
-        lib.ZSTD_decompressStream.restype = ctypes.c_size_t
-        # argtypes REQUIRED: without them ctypes passes the 64-bit
-        # DStream handle as c_int — truncation segfault (same class
-        # as the TIFFGetField fix)
-        lib.ZSTD_decompressStream.argtypes = [
-            ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p]
-    except AttributeError:
-        return None
-    _zstd_lib = lib
-    return lib
-
-
-_ZSTD_CONTENTSIZE_UNKNOWN = 2**64 - 1
-_ZSTD_CONTENTSIZE_ERROR = 2**64 - 2
-
-
-class _ZstdInBuffer(ctypes.Structure):
-    _fields_ = [("src", ctypes.c_char_p), ("size", ctypes.c_size_t),
-                ("pos", ctypes.c_size_t)]
-
-
-class _ZstdOutBuffer(ctypes.Structure):
-    _fields_ = [("dst", ctypes.c_void_p), ("size", ctypes.c_size_t),
-                ("pos", ctypes.c_size_t)]
-
-
-def zstd_decompress_native(data: bytes) -> Optional[bytes]:
-    """One-shot when the frame header carries the content size (what
-    libzstd's simple compress API writes), streaming otherwise.
-    Returns None when the library is absent or rejects the bytes —
-    the caller falls back to the pure decoder, whose typed ZstdError
-    keeps the ingest corrupt-skip contract."""
-    lib = _zstd()
-    if lib is None:
-        return None
-    csize = lib.ZSTD_getFrameContentSize(data, len(data))
-    if csize not in (_ZSTD_CONTENTSIZE_UNKNOWN, _ZSTD_CONTENTSIZE_ERROR) \
-            and 0 < csize <= 1 << 31:
-        out = ctypes.create_string_buffer(int(csize))
-        got = lib.ZSTD_decompress(out, int(csize), data, len(data))
-        if not lib.ZSTD_isError(got):
-            return out.raw[:got]
-        # fall through: e.g. CONCATENATED frames (header names only the
-        # first frame's size, so the one-shot dst is too small) — the
-        # streaming loop below decodes multi-frame streams correctly
-    if csize == _ZSTD_CONTENTSIZE_ERROR:
-        return None
-    # streaming: unknown/zero content size, implausibly large header,
-    # or a failed one-shot (multi-frame input)
-    ds = lib.ZSTD_createDStream()
-    if not ds:
-        return None
-    try:
-        chunks = []
-        inb = _ZstdInBuffer(data, len(data), 0)
-        buf = ctypes.create_string_buffer(1 << 17)
-        while True:
-            outb = _ZstdOutBuffer(
-                ctypes.cast(buf, ctypes.c_void_p), len(buf), 0)
-            ret = lib.ZSTD_decompressStream(
-                ds, ctypes.byref(outb), ctypes.byref(inb))
-            if lib.ZSTD_isError(ret):
-                return None
-            if outb.pos:
-                chunks.append(buf.raw[:outb.pos])
-            if ret == 0 and inb.pos >= inb.size:
-                return b"".join(chunks)
-            if outb.pos == 0 and inb.pos >= inb.size:
-                return None                # truncated frame
-            if sum(map(len, chunks)) > 1 << 33:
-                return None                # runaway output guard
-    finally:
-        lib.ZSTD_freeDStream(ds)
-
-
-_lz4_lib = None
-_lz4_tried = False
-
-
-class _Lz4FDecompressOptions(ctypes.Structure):
-    _fields_ = [("stableDst", ctypes.c_uint),
-                ("skipChecksums", ctypes.c_uint),
-                ("reserved1", ctypes.c_uint), ("reserved0", ctypes.c_uint)]
-
-
-def _lz4():
-    global _lz4_lib, _lz4_tried
-    if _lz4_tried:
-        return _lz4_lib
-    _lz4_tried = True
-    lib = _try_cdll("liblz4.so.1", "liblz4.so",
-                    ctypes.util.find_library("lz4"))
-    if lib is None:
-        return None
-    try:
-        lib.LZ4F_createDecompressionContext.restype = ctypes.c_size_t
-        lib.LZ4F_createDecompressionContext.argtypes = [
-            ctypes.POINTER(ctypes.c_void_p), ctypes.c_uint]
-        lib.LZ4F_freeDecompressionContext.argtypes = [ctypes.c_void_p]
-        lib.LZ4F_decompress.restype = ctypes.c_size_t
-        lib.LZ4F_decompress.argtypes = [
-            ctypes.c_void_p, ctypes.c_void_p,
-            ctypes.POINTER(ctypes.c_size_t), ctypes.c_void_p,
-            ctypes.POINTER(ctypes.c_size_t),
-            ctypes.POINTER(_Lz4FDecompressOptions)]
-        lib.LZ4F_isError.restype = ctypes.c_uint
-        lib.LZ4F_isError.argtypes = [ctypes.c_size_t]
-    except AttributeError:
-        return None
-    _lz4_lib = lib
-    return lib
-
-
-_LZ4F_VERSION = 100
-
-
-def lz4_frame_decompress_native(data: bytes) -> Optional[bytes]:
-    """LZ4 frame-format decompress via LZ4F streaming (frame content
-    size is optional in the format, so no one-shot exists)."""
-    lib = _lz4()
-    if lib is None:
-        return None
-    if not data:
-        return None                        # pure decoder owns the error
-    ctx = ctypes.c_void_p()
-    err = lib.LZ4F_createDecompressionContext(ctypes.byref(ctx),
-                                              _LZ4F_VERSION)
-    if lib.LZ4F_isError(err):
-        return None
-    try:
-        chunks = []
-        pos = 0
-        total = 0
-        # ONE copy of the input; advance with pointer arithmetic — the
-        # old per-iteration data[pos:] slice re-copied the remaining
-        # tail every 128 KiB chunk, O(n^2) on large frames (review)
-        src = (ctypes.c_char * len(data)).from_buffer_copy(data)
-        base = ctypes.addressof(src)
-        buf = ctypes.create_string_buffer(1 << 17)
-        ret = None
-        while pos < len(data):
-            src_size = ctypes.c_size_t(len(data) - pos)
-            dst_size = ctypes.c_size_t(len(buf))
-            ret = lib.LZ4F_decompress(
-                ctx, buf, ctypes.byref(dst_size),
-                ctypes.c_void_p(base + pos),
-                ctypes.byref(src_size), None)
-            if lib.LZ4F_isError(ret):
-                return None
-            if dst_size.value:
-                chunks.append(buf.raw[:dst_size.value])
-                total += dst_size.value
-            if src_size.value == 0 and dst_size.value == 0:
-                return None                # no progress: truncated
-            pos += src_size.value
-            if total > 1 << 33:
-                return None
-        if ret != 0:
-            # input exhausted mid-frame: LZ4F still expects bytes — a
-            # TRUNCATED stream. Returning the partial output here
-            # silently diverged from the pure decoder's loud Lz4Error
-            # (review find); None re-judges via the pure path.
-            return None
-        return b"".join(chunks)
-    finally:
-        lib.LZ4F_freeDecompressionContext(ctx)
-
-
-def xz_decompress_native(data: bytes) -> Optional[bytes]:
-    """stdlib lzma IS the native path (CPython's _lzma links the
-    system liblzma); present everywhere this container runs but
-    guarded anyway for minimal builds."""
-    try:
-        import lzma
-        return lzma.decompress(data, format=lzma.FORMAT_XZ)
-    except ImportError:
-        return None
-    except Exception:
-        return None                        # rejected bytes -> pure path
-
-
 # ------------------------------------------------------------ dispatch
 
 _IMAGE_DECODERS = {}
@@ -1539,27 +1334,6 @@ def maybe_image(fmt: str, data: bytes,
         return fn(data)
     except Exception:
         return None
-
-
-def decompress_with_fallback(kind: str, data: bytes, pure_fn,
-                             prefer_native: "bool | None" = None) -> bytes:
-    """Ingest-side twin of maybe_image: native decompress when opted
-    in and accepted, else the pure decoder — whose TYPED error
-    (ZstdError / Lz4Error / XzError) the ingest corrupt-skip relies
-    on, so native rejections are re-judged by the pure path rather
-    than raised here."""
-    if native_enabled(prefer_native):
-        fn = {"zstd": zstd_decompress_native,
-              "lz4": lz4_frame_decompress_native,
-              "xz": xz_decompress_native}.get(kind)
-        if fn is not None:
-            try:
-                out = fn(data)
-            except Exception:
-                out = None
-            if out is not None:
-                return out
-    return pure_fn(data)
 
 
 def decode_image_native(data: bytes) -> Optional[dict]:
@@ -1600,15 +1374,5 @@ def native_status() -> dict:
         "tiff": _tiff() is not None,
         "jpeg_shim": _jpeg_shim_lib() is not None,
         "crc32c_shim": _crc_shim_lib() is not None,
-        "zstd": _zstd() is not None,
-        "lz4": _lz4() is not None,
-        "xz": _have_lzma(),
     }
 
-
-def _have_lzma() -> bool:
-    try:
-        import lzma  # noqa: F401
-        return True
-    except ImportError:
-        return False

@@ -1,17 +1,18 @@
-"""Compressed text-shard ingest: `.jsonl.lz4` / `.jsonl.zst`.
+"""Compressed text-shard ingest: `.jsonl.lz4` / `.jsonl.zst` / `.jsonl.xz`.
 
-The two compressions that actually wrap large public LLM corpora on
-object stores — zstd (The Pile, Dolma, RedPajama releases) and LZ4
-frames — decoded by this package's own pure-Python codecs
-(codec/lz4.py, codec/zstd.py) since neither binding ships in this
-container. Each query synthesizes per-doc shards from the documents
-table (scaffolding — production shards arrive via
-``spark.read.format("binaryFile")``), then runs the REAL pipeline: frame
-decode -> JSONL parse -> per-record projection, with checksum-gated
-corrupt-skip. The oracle recomputes the per-record values straight from
-the source table, so the driver gate is a differential test of the
-whole decompress+parse path: any mis-decoded byte shifts the
-codepoint-sum column.
+The compressions that wrap large public LLM corpora on object stores —
+zstd (The Pile, Dolma, RedPajama releases), LZ4 frames and xz
+(Wikipedia dumps) — each decoded by exactly one library that every
+executor already has: stdlib ``lzma`` (liblzma) for xz, and the
+libzstd / liblz4 bundled in pyarrow (which ``mapInPandas`` cannot run
+without) for zstd and lz4. Each query synthesizes per-doc shards from
+the documents table with the same libraries (scaffolding — production
+shards arrive via ``spark.read.format("binaryFile")``), then runs the
+REAL pipeline: frame decode -> JSONL parse -> per-record projection,
+with corrupt-skip on every shard the decoder rejects. The oracle
+recomputes the per-record values straight from the source table, so
+the oracle gate checks the whole decompress+parse path: any
+mis-decoded byte shifts the codepoint-sum column.
 
 Scale shape: one Arrow-batched ``mapInPandas`` pass, zero shuffles,
 rows independent — the same embarrassingly-parallel contract as the
@@ -22,9 +23,11 @@ group) is the only axis that matters, and nothing here fights it.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+import lzma
+from collections.abc import Callable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -37,7 +40,7 @@ _SHARD_SCHEMA = T.StructType([
     T.StructField("cp_sum", T.LongType()),
 ])
 
-# Both queries emit one row per JSONL record: (doc_id, seq) key,
+# Every query emits one row per JSONL record: (doc_id, seq) key,
 # codepoint count and codepoint SUM of the decoded body — the sum makes
 # the gate sensitive to any single mis-decoded character, not just to
 # length drift.
@@ -75,27 +78,59 @@ def _extract_records(doc_id: int, payload: bytes) -> list[tuple]:
     return rows
 
 
-@query(
-    "text_lz4_jsonl_ingest",
-    oracle=_SHARD_ORACLE % 11,
-    tags=("llm", "text", "ingest"),
-)
-def text_lz4_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`.jsonl.lz4` shard ingest through the pure-Python LZ4 frame
-    decoder (codec/lz4.py): magic + descriptor with xxHash32 header
-    checksum, greedy-compressed blocks with per-block xxHash32, the
-    EndMark and whole-content checksum — all verified on read.
+def _compress(kind: str, raw: bytes) -> bytes:
+    if kind == "xz":
+        return lzma.compress(raw, format=lzma.FORMAT_XZ,
+                             check=lzma.CHECK_CRC64)
+    level = 3 if kind == "zstd" else None
+    return pa.Codec(kind, compression_level=level).compress(raw,
+                                                            asbytes=True)
 
-    Corruption flips one byte inside the first block's body on every
-    173rd shard; the block checksum rejects it and the shard is
-    skipped (counted by the oracle's WHERE). The JSON bodies repeat
-    the doc text across records, so LZ4 back-references genuinely
-    fire (the second record compresses to a match chain, not
-    literals).
+
+def _decompress(kind: str, data: bytes) -> bytes:
+    """Decode one `kind` shard ("xz", "zstd" or "lz4"); ValueError on
+    corrupt input.
+
+    xz decodes every concatenated stream and skips the null padding
+    between them (a multiple of 4 bytes, per the xz spec); anything
+    else after a stream is corrupt. ``lzma.decompress`` would silently
+    drop a tail that does not parse, so the loop runs one
+    ``LZMADecompressor`` per stream. zstd and lz4 frames go through
+    pyarrow's libzstd / liblz4, which decode concatenated frames, skip
+    skippable ones and reject trailing junk. An empty lz4 shard is no
+    frame at all and is rejected (liblz4 alone returns b"").
     """
-    from go_triton_spark.codec.lz4 import Lz4Error, frame_compress, \
-        frame_decompress
+    if kind == "xz":
+        out = []
+        while True:
+            dec = lzma.LZMADecompressor(format=lzma.FORMAT_XZ)
+            try:
+                out.append(dec.decompress(data))
+            except lzma.LZMAError as e:
+                raise ValueError(f"corrupt xz shard: {e}") from e
+            if not dec.eof:
+                raise ValueError("truncated xz shard")
+            rest = dec.unused_data
+            data = rest.lstrip(b"\0")
+            if (len(rest) - len(data)) % 4:
+                raise ValueError("xz stream padding not 4-byte aligned")
+            if not data:
+                return b"".join(out)
+    if kind == "lz4" and not data:
+        raise ValueError("empty lz4 shard")
+    try:
+        return pa.input_stream(pa.py_buffer(data), compression=kind).read()
+    except OSError as e:
+        raise ValueError(f"corrupt {kind} shard: {e}") from e
 
+
+def _shard_ingest(spark: SparkSession, sf_dir: str, kind: str,
+                  bad_doc: int,
+                  corrupt: Callable[[bytes], bytes]) -> DataFrame:
+    """Compress each doc's shard as `kind`, apply `corrupt` to every
+    173rd shard (doc_id % 173 == bad_doc), then decode, parse and
+    project; a shard the decoder rejects is skipped (the oracle's
+    WHERE drops the same docs)."""
     (d,) = tables(spark, sf_dir, "documents")
     src = spread(d.select("doc_id", "text"), spark, rows_per_task=500)
 
@@ -104,25 +139,42 @@ def text_lz4_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 doc_id = int(doc_id)
-                shard = bytearray(
-                    frame_compress(_shard_rows(doc_id, str(text))))
-                if doc_id % 173 == 11:
-                    shard[min(22, len(shard) - 6)] ^= 0xFF
+                shard = _compress(kind, _shard_rows(doc_id, str(text)))
+                if doc_id % 173 == bad_doc:
+                    shard = corrupt(shard)
                 try:
-                    # opt-in native fast path (TRITON_NATIVE_DECODE=1):
-                    # liblz4 when it accepts the frame, else the pure
-                    # decoder — which keeps the typed corrupt-skip
-                    from go_triton_spark.codec.native import \
-                        decompress_with_fallback
-                    payload = decompress_with_fallback(
-                        "lz4", bytes(shard), frame_decompress)
-                except Lz4Error:
+                    payload = _decompress(kind, shard)
+                except ValueError:
                     continue  # corrupt-skip
                 rows.extend(_extract_records(doc_id, payload))
             yield pd.DataFrame(
                 rows, columns=[f.name for f in _SHARD_SCHEMA])
 
     return src.mapInPandas(run, schema=_SHARD_SCHEMA)
+
+
+def _flip(data: bytes, i: int) -> bytes:
+    return data[:i] + bytes([data[i] ^ 0xFF]) + data[i + 1:]
+
+
+@query(
+    "text_lz4_jsonl_ingest",
+    oracle=_SHARD_ORACLE % 11,
+    tags=("llm", "text", "ingest"),
+)
+def text_lz4_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`.jsonl.lz4` shard ingest: LZ4 frames written and read by
+    pyarrow's liblz4 (magic, frame descriptor with xxHash32 header
+    checksum, blocks, EndMark).
+
+    Corruption flips the frame descriptor's header-checksum byte
+    (index 6 after the 4-byte magic, FLG and BD) on every 173rd shard;
+    liblz4 rejects the header and the shard is skipped (counted by the
+    oracle's WHERE). liblz4 frames carry no block checksum, so a
+    flipped body byte would not be caught. The JSON bodies repeat the
+    doc text across records, so LZ4 back-references genuinely fire.
+    """
+    return _shard_ingest(spark, sf_dir, "lz4", 11, lambda s: _flip(s, 6))
 
 
 @query(
@@ -132,48 +184,15 @@ def text_lz4_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_xz_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`.jsonl.xz` shard ingest — the other compression real corpora
-    ship in (Wikipedia dumps, The Pile's .jsonl.xz variants) — through
-    the pure-Python XZ/LZMA2/LZMA decoder (codec/xz.py): adaptive
-    range coder, 12-state machine, LZMA2 chunk framing with dict
-    resets, and the full container layer (block-header CRC32, CRC64
-    block check, index + footer CRC32).
+    ship in (Wikipedia dumps, The Pile's .jsonl.xz variants) — written
+    and read by stdlib ``lzma`` (liblzma) with a CRC64 block check.
 
-    The shards are compressed by stdlib ``lzma`` — real liblzma on
-    every executor — so the driver gate is a standing
-    cross-implementation differential test of the whole decoder.
     Corruption flips one byte in the middle of every 173rd shard's
-    compressed data; a layered CRC rejects it and the shard is
-    skipped (counted by the oracle's WHERE).
+    compressed data; liblzma rejects it and the shard is skipped
+    (counted by the oracle's WHERE).
     """
-    import lzma
-
-    from go_triton_spark.codec.xz import XzError, xz_decompress
-
-    (d,) = tables(spark, sf_dir, "documents")
-    src = spread(d.select("doc_id", "text"), spark, rows_per_task=500)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                shard = bytearray(lzma.compress(
-                    _shard_rows(doc_id, str(text)),
-                    format=lzma.FORMAT_XZ, check=lzma.CHECK_CRC64))
-                if doc_id % 173 == 47:
-                    shard[len(shard) // 2] ^= 0xFF
-                try:
-                    from go_triton_spark.codec.native import \
-                        decompress_with_fallback
-                    payload = decompress_with_fallback(
-                        "xz", bytes(shard), xz_decompress)
-                except XzError:
-                    continue  # corrupt-skip
-                rows.extend(_extract_records(doc_id, payload))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _SHARD_SCHEMA])
-
-    return src.mapInPandas(run, schema=_SHARD_SCHEMA)
+    return _shard_ingest(spark, sf_dir, "xz", 47,
+                         lambda s: _flip(s, len(s) // 2))
 
 
 @query(
@@ -183,46 +202,12 @@ def text_xz_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_zst_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`.jsonl.zst` shard ingest — the compression wrapping most large
-    public text corpora (The Pile, Dolma, RedPajama) — through the
-    pure-Python RFC 8878 decoder (codec/zstd.py): FSE-described and
-    predefined sequence tables, Huffman literals (1- and 4-stream),
-    repeat offsets, full frame layer.
+    public text corpora (The Pile, Dolma, RedPajama) — written and
+    read by the libzstd bundled in pyarrow.
 
-    The shards are compressed by the REAL libzstd bundled in pyarrow
-    (available on every executor), so the driver gate doubles as a
-    cross-implementation differential test: any entropy-decode bug
-    shifts the codepoint-sum column. Corruption truncates the final
-    byte of every 173rd shard — structurally detected regardless of
-    where the frame ends (missing bitstream sentinel / overrun block),
-    since libzstd frames carry no content checksum by default.
+    Corruption truncates the final byte of every 173rd shard; libzstd
+    detects the cut frame and the shard is skipped (counted by the
+    oracle's WHERE). libzstd frames carry no content checksum by
+    default, so the reject is structural, not checksum-driven.
     """
-    import pyarrow as pa
-
-    from go_triton_spark.codec.zstd import ZstdError, decompress
-
-    (d,) = tables(spark, sf_dir, "documents")
-    src = spread(d.select("doc_id", "text"), spark, rows_per_task=500)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codec = pa.Codec("zstd", compression_level=3)
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                comp = codec.compress(_shard_rows(doc_id, str(text)))
-                shard = (comp.to_pybytes()
-                         if hasattr(comp, "to_pybytes") else bytes(comp))
-                if doc_id % 173 == 29:
-                    shard = shard[:-1]
-                try:
-                    from go_triton_spark.codec.native import \
-                        decompress_with_fallback
-                    payload = decompress_with_fallback(
-                        "zstd", shard, decompress)
-                except ZstdError:
-                    continue  # corrupt-skip
-                rows.extend(_extract_records(doc_id, payload))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _SHARD_SCHEMA])
-
-    return src.mapInPandas(run, schema=_SHARD_SCHEMA)
+    return _shard_ingest(spark, sf_dir, "zstd", 29, lambda s: s[:-1])

@@ -2,14 +2,13 @@
 
 The opt-in system-library decode path must be INVISIBLE except for
 speed: bit-identical output for WebP (lossy via WebPDecodeYUV + the
-engine's own yuv_to_rgb; lossless via WebPDecodeRGBA), PNG, TIFF, and
-byte-identical for zstd/lz4/xz decompression. JPEG is the documented
-exception — ITU-T T.81 leaves IDCT precision implementation-defined,
-so the pure float-IDCT decoder and libjpeg's islow integer IDCT
-legitimately differ; the bound here (+-2 per channel, metadata exact)
-is measured and pinned. Corrupt bytes must raise the SAME loud
-ValueError with the flag on (native rejection falls back to the pure
-decoder, which owns the verdict).
+engine's own yuv_to_rgb; lossless via WebPDecodeRGBA), PNG and TIFF.
+JPEG is the documented exception — ITU-T T.81 leaves IDCT precision
+implementation-defined, so the pure float-IDCT decoder and libjpeg's
+islow integer IDCT legitimately differ; the bound here (+-2 per
+channel, metadata exact) is measured and pinned. Corrupt bytes must
+raise the SAME loud ValueError with the flag on (native rejection
+falls back to the pure decoder, which owns the verdict).
 
 Each test skips when its system library is absent, so the suite stays
 green on a minimal container while pinning the contract wherever the
@@ -18,21 +17,16 @@ fast path can actually engage.
 
 from __future__ import annotations
 
-import lzma
-
 import numpy as np
 import pytest
 
 from go_triton_spark.codec import native
 from go_triton_spark.codec.image import parse_image
 from go_triton_spark.codec.jpeg import build_jpeg_ycbcr, parse_jpeg
-from go_triton_spark.codec.lz4 import frame_compress, frame_decompress
 from go_triton_spark.codec.png import build_png, parse_png
 from go_triton_spark.codec.tiff import build_tiff, parse_tiff
 from go_triton_spark.codec.vp8l import build_webp, build_webp_anim, \
     parse_webp
-from go_triton_spark.codec.xz import xz_decompress
-from go_triton_spark.codec.zstd import decompress as zstd_decompress
 
 _ST = native.native_status()
 
@@ -41,8 +35,6 @@ _png = pytest.mark.skipif(not _ST["png"], reason="libpng absent")
 _tiff = pytest.mark.skipif(not _ST["tiff"], reason="libtiff absent")
 _jpeg = pytest.mark.skipif(not _ST["jpeg_shim"],
                            reason="jpeg shim unavailable (no gcc?)")
-_zstd = pytest.mark.skipif(not _ST["zstd"], reason="libzstd absent")
-_lz4 = pytest.mark.skipif(not _ST["lz4"], reason="liblz4 absent")
 
 
 def _img(kind: str, h: int, w: int, seed: int = 0) -> np.ndarray:
@@ -229,88 +221,6 @@ def test_jpeg_grayscale_and_corrupt():
         parse_jpeg(data[:40], prefer_native=True)
 
 
-# ----------------------------------------------- zstd / lz4 / xz
-
-_PAYLOADS = [b"", b"x", b'{"doc": 1}\n' * 4000,
-             bytes(range(256)) * 997, b"\x00" * 100_000]
-
-
-@_zstd
-def test_zstd_native_byte_identical():
-    import pyarrow as pa
-    codec = pa.Codec("zstd", compression_level=3)
-    for raw in _PAYLOADS:
-        comp = bytes(codec.compress(raw))
-        got = native.zstd_decompress_native(comp)
-        assert got == raw == zstd_decompress(comp)
-    # via the ingest-facing wrapper, flag forced on
-    comp = bytes(codec.compress(_PAYLOADS[2]))
-    assert native.decompress_with_fallback(
-        "zstd", comp, zstd_decompress, prefer_native=True) == _PAYLOADS[2]
-
-
-@_zstd
-def test_zstd_corrupt_falls_back_to_typed_error():
-    from go_triton_spark.codec.zstd import ZstdError
-    import pyarrow as pa
-    comp = bytes(pa.Codec("zstd").compress(b"hello" * 1000))[:-3]
-    with pytest.raises(ZstdError):
-        native.decompress_with_fallback("zstd", comp, zstd_decompress,
-                                        prefer_native=True)
-
-
-@_lz4
-def test_lz4_native_byte_identical():
-    for raw in _PAYLOADS:
-        comp = frame_compress(raw)
-        got = native.lz4_frame_decompress_native(comp)
-        assert got == raw == frame_decompress(comp)
-    comp = frame_compress(_PAYLOADS[2])
-    assert native.decompress_with_fallback(
-        "lz4", comp, frame_decompress, prefer_native=True) == _PAYLOADS[2]
-
-
-@_lz4
-def test_lz4_real_liblz4_frames_via_pyarrow():
-    """Frames produced by the REAL liblz4 (pyarrow's lz4 frame codec)
-    decode identically through the native path and the pure decoder."""
-    import pyarrow as pa
-    codec = pa.Codec("lz4")
-    for raw in _PAYLOADS:
-        comp = bytes(codec.compress(raw))
-        assert native.lz4_frame_decompress_native(comp) == raw \
-            == frame_decompress(comp)
-
-
-@_lz4
-def test_lz4_corrupt_falls_back_to_typed_error():
-    from go_triton_spark.codec.lz4 import Lz4Error
-    comp = bytearray(frame_compress(b"hello" * 1000))
-    comp[9] ^= 0xFF
-    with pytest.raises(Lz4Error):
-        native.decompress_with_fallback("lz4", bytes(comp),
-                                        frame_decompress,
-                                        prefer_native=True)
-
-
-def test_xz_native_byte_identical():
-    for raw in _PAYLOADS:
-        comp = lzma.compress(raw, format=lzma.FORMAT_XZ,
-                             check=lzma.CHECK_CRC64)
-        assert native.xz_decompress_native(comp) == raw \
-            == xz_decompress(comp)
-
-
-def test_xz_corrupt_falls_back_to_typed_error():
-    from go_triton_spark.codec.xz import XzError
-    comp = bytearray(lzma.compress(b"hello" * 1000,
-                                   format=lzma.FORMAT_XZ))
-    comp[len(comp) // 2] ^= 0xFF
-    with pytest.raises(XzError):
-        native.decompress_with_fallback("xz", bytes(comp), xz_decompress,
-                                        prefer_native=True)
-
-
 # ------------------------------------------------------- dispatch
 
 @_webp
@@ -361,7 +271,7 @@ def test_flag_defaults_on_when_unset(monkeypatch):
 def test_native_status_shape():
     st = native.native_status()
     assert set(st) == {"enabled_by_env", "webp", "png", "tiff",
-                       "jpeg_shim", "crc32c_shim", "zstd", "lz4", "xz"}
+                       "jpeg_shim", "crc32c_shim"}
 
 
 # ------------------------------------------------------------ crc32c
@@ -405,39 +315,6 @@ def test_tri_snappy_framing_native_crc_equal(monkeypatch):
     assert frame_decompress(fr) == raw
 
 
-@_lz4
-def test_lz4_concatenated_frames_agree_across_paths():
-    """r10 find: the pure decoder used to stop at the first EndMark,
-    silently dropping the tail of a concatenated shard AND diverging
-    from liblz4 (which decodes all frames). Both paths now decode the
-    whole stream, skip skippable frames, and reject trailing junk."""
-    import struct as _s
-    a, b = b"A" * 300, b"B" * 300
-    two = frame_compress(a) + frame_compress(b)
-    assert frame_decompress(two) == a + b
-    assert native.lz4_frame_decompress_native(two) == a + b
-    skip = _s.pack("<I", 0x184D2A50) + _s.pack("<I", 4) + b"meta"
-    mix = frame_compress(a) + skip + frame_compress(b)
-    assert frame_decompress(mix) == a + b
-    assert native.lz4_frame_decompress_native(mix) == a + b
-    from go_triton_spark.codec.lz4 import Lz4Error
-    with pytest.raises(Lz4Error):
-        frame_decompress(frame_compress(a) + b"junk")
-
-
-@_zstd
-def test_zstd_concatenated_frames_agree_across_paths():
-    """Concatenated zstd frames: the native one-shot (sized for the
-    FIRST frame only) must fall through to the streaming loop, not
-    give up — output equal to the pure decoder."""
-    import pyarrow as pa
-    codec = pa.Codec("zstd")
-    a, b = b"A" * 300, b"B" * 300
-    two = bytes(codec.compress(a)) + bytes(codec.compress(b))
-    assert zstd_decompress(two) == a + b
-    assert native.zstd_decompress_native(two) == a + b
-
-
 # ------------------------------------------------ property fuzz
 
 from hypothesis import given, settings
@@ -459,32 +336,6 @@ def test_fuzz_image_native_equality(h, w, seed):
                         (build_webp(img), parse_webp),
                         (build_tiff(img, compression="lzw"), parse_tiff)):
         _same_dict(parse(data), parse(data, prefer_native=True))
-
-
-@_zstd
-@_lz4
-@given(st.binary(max_size=5000), st.integers(0, 3))
-@settings(max_examples=40, deadline=None)
-def test_fuzz_decompress_native_equality(payload, mode):
-    """Arbitrary payloads through zstd/lz4/xz: native decompress of a
-    valid frame equals the pure decoder byte-for-byte."""
-    import pyarrow as pa
-    if mode == 0:
-        comp = bytes(pa.Codec("zstd").compress(payload))
-        assert native.zstd_decompress_native(comp) == payload \
-            == zstd_decompress(comp)
-    elif mode == 1:
-        comp = frame_compress(payload)
-        assert native.lz4_frame_decompress_native(comp) == payload \
-            == frame_decompress(comp)
-    elif mode == 2:
-        comp = bytes(pa.Codec("lz4").compress(payload))
-        assert native.lz4_frame_decompress_native(comp) == payload \
-            == frame_decompress(comp)
-    else:
-        comp = lzma.compress(payload, format=lzma.FORMAT_XZ)
-        assert native.xz_decompress_native(comp) == payload \
-            == xz_decompress(comp)
 
 
 @given(st.binary(max_size=2000))
@@ -560,21 +411,6 @@ def test_gif_corrupt_still_raises_with_flag_on(monkeypatch):
 
 
 # ------------------------------------------------ review-find pins
-
-@_lz4
-def test_lz4_truncated_frame_native_parity():
-    """A frame cut mid-block must NOT come back as silent partial
-    output from the native path (review find): the wrapper must land
-    on the pure decoder's loud Lz4Error either way."""
-    from go_triton_spark.codec.lz4 import Lz4Error
-    comp = frame_compress(b"payload " * 5000)
-    cut = comp[:len(comp) // 2]
-    assert native.lz4_frame_decompress_native(cut) is None
-    with pytest.raises(Lz4Error):
-        native.decompress_with_fallback("lz4", cut, frame_decompress,
-                                        prefer_native=True)
-    assert native.lz4_frame_decompress_native(b"") is None
-
 
 @_png
 def test_png_color_management_falls_back_to_pure():

@@ -6,6 +6,7 @@ later good records flow.
 """
 
 import datetime as dt
+import glob
 import json
 import os
 
@@ -382,10 +383,27 @@ def test_mixed_batch_and_streaming_archive_replays_uniformly(engine, tmp_path):
     assert ids == sorted(list(range(10)) + list(range(500, 507)))
 
 
+def _child_pids(pid):
+    kids = []
+    for path in glob.glob(f"/proc/{pid}/task/*/children"):
+        with open(path) as f:
+            kids += [int(k) for k in f.read().split()]
+    return kids
+
+
+def _alive(pid):
+    """True while `pid` runs (a zombie awaiting its reaper has exited)."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except FileNotFoundError:
+        return False
+
+
 def test_kill_nine_mid_ingest_no_record_loss(spark, tmp_path):
     """Crash semantics, for real: SIGKILL the `store` CLI process
-    mid-run (no drain, no JVM shutdown hooks), write more input while
-    it is down, then resume from the same checkpoint in-process. The
+    mid-run (no drain), write more input while it is down, then
+    resume from the same checkpoint in-process. The
     claim under test is the reference's own guarantee
     (triton/store.go:51-67): AT-LEAST-ONCE — nothing is lost; only
     the batch in flight at the kill may replay (cat lists the
@@ -431,9 +449,20 @@ events:
                 "store subprocess died before first commit"
             time.sleep(0.5)
         assert committed(), "no micro-batch committed within 180s"
+        jvms = _child_pids(proc.pid)
     finally:
         proc.send_signal(signal.SIGKILL)  # crash, not a drain
     proc.wait(30)
+    # The orphaned gateway JVM lives on until it reads EOF, and may
+    # commit one more batch meanwhile; restarting on the same
+    # checkpoint before it exits fails with
+    # SparkConcurrentModificationException. Wait it out, as an
+    # operator must after a kill -9 of `store`.
+    deadline = time.time() + 60
+    while time.time() < deadline and any(map(_alive, jvms)):
+        time.sleep(0.05)
+    assert not any(map(_alive, jvms)), \
+        f"store's JVM {jvms} outlived the kill by 60s"
 
     # records arriving while the process is down
     _write_events_json(src, _recs(10, start=100))

@@ -8,8 +8,8 @@ exactly that — vp8l.py wrote the meta-prefix bit before the
 color-cache info (the spec orders them cache-first), invisible to
 every self-test because the both-flags-off case writes the identical
 00 bit pair, and rejected by libwebp on every cache/meta-enabled
-stream. zstd/LZ4 get the same treatment against libzstd/liblz4
-through pyarrow in their own test files.
+stream. (zstd/LZ4/xz need no such suite: the engine decodes them with
+libzstd/liblz4 through pyarrow and liblzma through stdlib lzma.)
 """
 
 import ctypes

@@ -1,8 +1,8 @@
 """Operation-pair race soak matrix (r9 verdict Next #5).
 
-Generalizes tools/stress_cat_compact.py (which reproduced + verified
-the r9 cat-vs-compact silent-row-loss fix) to EVERY maintenance pair
-that can race on a live archive:
+Generalizes the former tools/stress_cat_compact.py (since removed; it
+reproduced + verified the r9 cat-vs-compact silent-row-loss fix) to
+EVERY maintenance pair that can race on a live archive:
 
     cat-compact      readers vs fragmenting compact loop (r9 pair)
     cat-expire       readers vs an ingest/expire retention churn
