@@ -41,25 +41,16 @@ STEP_TABLE = [
 INDEX_ADJUST = [-1, -1, -1, -1, 2, 4, 6, 8]
 
 
-def decode_ima(nibbles, predictor: int, index: int,
-               use_native: "bool | None" = None) -> np.ndarray:
+def decode_ima(nibbles, predictor: int, index: int) -> np.ndarray:
     """Decode a nibble sequence from an initial (predictor, index)
     state. Returns int64 samples, one per nibble — the block header
-    sample is NOT included (callers prepend it).
-
-    ``use_native=None`` resolves the TRITON_NATIVE_DECODE flag per
-    call; per-stream callers (decode_ima_blocks) resolve it ONCE and
-    pass the bool so the flag-off pure path pays no per-block env
-    lookup (r11 verdict item #3)."""
-    # Opt-in native fast path (r11): the shim runs the identical state
-    # machine; None (shim absent / bad index) falls through to the
-    # pure loop, which owns the loud rejection.
-    if use_native is None:
-        use_native = _native.native_enabled(None)
-    if use_native:
-        got = _native.ima_decode_native(nibbles, predictor, index)
-        if got is not None:
-            return got
+    sample is NOT included (callers prepend it)."""
+    # Native fast path (r11): the compiled shim runs the identical
+    # state machine; None (shim absent / bad index) falls through to
+    # the pure loop, which owns the loud rejection.
+    got = _native.ima_decode_native(nibbles, predictor, index)
+    if got is not None:
+        return got
     out = np.empty(len(nibbles), dtype=np.int64)
     pred = int(predictor)
     idx = int(index)
@@ -86,7 +77,6 @@ def decode_ima_blocks(data: bytes, block_align: int) -> np.ndarray:
         raise ValueError("IMA block_align must be >= 5")
     if len(data) % block_align:
         raise ValueError("IMA data chunk is not whole blocks")
-    use_native = _native.native_enabled(None)  # once per stream
     chunks = []
     for off in range(0, len(data), block_align):
         block = data[off:off + block_align]
@@ -99,7 +89,7 @@ def decode_ima_blocks(data: bytes, block_align: int) -> np.ndarray:
         nibbles[1::2] = packed >> 4
         chunks.append(np.concatenate([[predictor],
                                       decode_ima(nibbles, predictor,
-                                                 index, use_native)]))
+                                                 index)]))
     return np.concatenate(chunks) if chunks else np.empty(0, np.int64)
 
 

@@ -62,12 +62,11 @@ _CRC16_TABLE = _crc16_table()
 
 def _crc16(data: bytes) -> int:
     # table-driven (8x fewer Python ops than bit-at-a-time — this runs
-    # over EVERY frame byte); the native shim leg covers flag-on runs
+    # over EVERY frame byte); the compiled shim takes large buffers
     if len(data) > 4096:
-        if _native.native_enabled(None):
-            v = _native.crc16_8005_native(data)
-            if v is not None:
-                return v
+        v = _native.crc16_8005_native(data)
+        if v is not None:
+            return v
     crc = 0
     tab = _CRC16_TABLE
     for b in data:
@@ -477,22 +476,20 @@ def _predicted(br: _BitReader, blocksize: int, sbps: int, order: int,
                coefs, shift: int, warm=None) -> np.ndarray:
     if warm is None:
         warm = [br.sbits(sbps) for _ in range(order)]
-    # Opt-in native fast path (r11, same contract as the image legs):
-    # the Rice + predictor loops run in the compiled shim,
-    # bit-identical by transcription; ANY deviation returns None and
+    # Native fast path (r11, same contract as the image legs): the
+    # Rice + predictor loops run in the compiled shim, bit-identical
+    # by transcription; shim absent or ANY deviation returns None and
     # the pure loop below re-decodes from the same bit position and
-    # raises its typed error — flag-on never changes accept/reject.
-    if _native.native_enabled(None):
-        got = _native.flac_predicted_native(
-            br.data, br.pos * 8 - br.n, blocksize, order, coefs,
-            shift, warm)
-        if got is not None:
-            out, newbit = got
-            br.pos = (newbit + 7) // 8
-            br.n = br.pos * 8 - newbit
-            br.acc = (br.data[br.pos - 1] & ((1 << br.n) - 1)
-                      if br.n else 0)
-            return out
+    # raises its typed error — the shim never changes accept/reject.
+    got = _native.flac_predicted_native(
+        br.data, br.pos * 8 - br.n, blocksize, order, coefs, shift, warm)
+    if got is not None:
+        out, newbit = got
+        br.pos = (newbit + 7) // 8
+        br.n = br.pos * 8 - newbit
+        br.acc = (br.data[br.pos - 1] & ((1 << br.n) - 1)
+                  if br.n else 0)
+        return out
     method = br.bits(2)
     if method > 1:
         raise ValueError(f"reserved residual method {method}")

@@ -186,7 +186,7 @@ def _sub_blocks(data: bytes, pos: int) -> tuple[bytes, int]:
         pos += n
 
 
-def parse_gif(data: bytes, prefer_native: "bool | None" = None) -> dict:
+def parse_gif(data: bytes) -> dict:
     """Decode one complete GIF; return pixels + metadata.
 
     Returns dict with: width, height, n_pixels, n_frames, and
@@ -259,16 +259,13 @@ def parse_gif(data: bytes, prefer_native: "bool | None" = None) -> dict:
         min_code = data[pos]
         pos += 1
         payload, pos = _sub_blocks(data, pos)
-        # opt-in native fast path for the one hot loop (everything
-        # else in this parser is numpy): the compiled-shim LZW
-        # (codec/native.py) is an exact transcription of lzw_decode's
-        # semantics; any deviation returns None and the pure decoder
+        # native fast path for the one hot loop (everything else in
+        # this parser is numpy): the compiled-shim LZW (codec/native.py)
+        # is an exact transcription of lzw_decode's semantics; shim
+        # absent or any deviation returns None and the pure decoder
         # re-judges the stream with its typed errors
-        raw = None
         from go_triton_spark.codec import native as _native
-        if _native.native_enabled(prefer_native):
-            raw = _native.gif_lzw_decode_native(bytes(payload),
-                                                min_code, w * h)
+        raw = _native.gif_lzw_decode_native(bytes(payload), min_code, w * h)
         if raw is None:
             raw = lzw_decode(payload, min_code, w * h)
         idx = np.frombuffer(raw, np.uint8).reshape(h, w)

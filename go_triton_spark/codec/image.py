@@ -43,7 +43,7 @@ def sniff_image_format(data: bytes) -> str:
     raise ValueError("unknown image format (no recognized magic)")
 
 
-def parse_image(data: bytes, prefer_native: "bool | None" = None) -> dict:
+def parse_image(data: bytes) -> dict:
     """Decode one image payload of any supported format.
 
     Dispatches on sniffed magic; the returned dict always carries
@@ -55,29 +55,30 @@ def parse_image(data: bytes, prefer_native: "bool | None" = None) -> dict:
     (ALPH alpha composited over the lossy frame, ANIM/ANMF animation
     with parse_gif's frames contract).
 
-    ``prefer_native`` (or TRITON_NATIVE_DECODE=1) opts into the
-    system-library / compiled-shim fast path (codec/native.py) for
-    PNG/JPEG/WebP/TIFF/GIF/QOI; BMP is already plain numpy slicing.
-    Native misses always fall back to the clean-room decoders, which
-    own the loud corrupt-skip ValueError contract."""
+    JPEG, WebP, compressed TIFF, GIF and QOI decode through the
+    system-library / compiled-shim fast path (codec/native.py) when
+    the library loads and its gate accepts the bytes; PNG, BMP and
+    uncompressed TIFF have no native leg. Hosts without a library and
+    every native miss use the clean-room decoders, which own the loud
+    corrupt-skip ValueError contract."""
     fmt = sniff_image_format(data)
     if fmt == "png":
         from go_triton_spark.codec.png import parse_png
-        return parse_png(data, prefer_native)
+        return parse_png(data)
     if fmt == "bmp":
         from go_triton_spark.codec.bmp import parse_bmp
         return parse_bmp(data)
     if fmt == "jpeg":
         from go_triton_spark.codec.jpeg import parse_jpeg
-        return parse_jpeg(data, prefer_native)
+        return parse_jpeg(data)
     if fmt == "gif":
         from go_triton_spark.codec.gif import parse_gif
-        return parse_gif(data, prefer_native)
+        return parse_gif(data)
     if fmt == "tiff":
         from go_triton_spark.codec.tiff import parse_tiff
-        return parse_tiff(data, prefer_native)
+        return parse_tiff(data)
     if fmt == "qoi":
         from go_triton_spark.codec.qoi import parse_qoi
-        return parse_qoi(data, prefer_native)
+        return parse_qoi(data)
     from go_triton_spark.codec.vp8l import parse_webp
-    return parse_webp(data, prefer_native)
+    return parse_webp(data)

@@ -863,7 +863,7 @@ def _finish(frame, qt) -> np.ndarray:
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
-def parse_jpeg(data: bytes, prefer_native: "bool | None" = None) -> dict:
+def parse_jpeg(data: bytes) -> dict:
     """Decode one complete JPEG — baseline sequential (SOF0) or
     progressive (SOF2, spectral selection + successive approximation,
     round 7) — and return pixels + metadata.
@@ -875,17 +875,21 @@ def parse_jpeg(data: bytes, prefer_native: "bool | None" = None) -> dict:
     truncation, missing tables, invalid Huffman codes, or unsupported
     modes (arithmetic, lossless, hierarchical, 12-bit).
 
-    With ``prefer_native=True`` (or TRITON_NATIVE_DECODE=1) decode
-    routes through the system libjpeg via the compiled shim (codec/
-    native.py). NOTE: conforming but NOT bit-identical — T.81 leaves
+    Decode routes through the system libjpeg via the compiled shim
+    (codec/native.py) when the shim loads and its gate accepts the
+    frame type. NOTE: conforming but NOT bit-identical — T.81 leaves
     IDCT precision implementation-defined (this decoder: exact float
     IDCT + round-half-even; libjpeg: islow integer IDCT); measured
     per-channel delta is within +-2, pinned by
-    tests/test_native_fastpath.py. Misses fall back here.
+    tests/test_native_fastpath.py. Hosts without the shim and every
+    native miss decode here.
     """
     from go_triton_spark.codec import native as _native
 
-    m = _native.maybe_image("jpeg", data, prefer_native)
+    try:
+        m = _native.decode_jpeg_native(data)
+    except Exception:       # any native hiccup: the pure path re-judges
+        m = None
     if m is not None:
         return m
     if len(data) < 4 or data[:2] != b"\xFF\xD8":

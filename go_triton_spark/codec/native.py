@@ -1,23 +1,22 @@
-"""Native decode fast path (r9 verdict Next #2; default-ON since r12).
+"""Native decode fast path (r9 verdict Next #2).
 
 The clean-room pure-Python codecs (vp8/vp8l/png/jpeg/tiff and the
 FLAC/ADPCM/GIF/QOI/snappy-CRC hot loops) are the correctness story:
 differentially validated, fuzz-batched, and the thing the oracle gates
 pin. They are also the honest throughput floor — measured ~4
 ms/kilopixel for VP8 (SCALE.md), 2-3 orders of magnitude off native
-code. At a real 100 TB corpus with megapixel images that floor
-dominates the pipeline, and the container DOES ship the system
-libraries (libwebp.so.7, libpng16, libtiff.so.6, libjpeg.so.62). This
-module binds them with ctypes and routes the HOT decode loops through
-C while keeping the engine's output contracts:
+code. Most hosts ship the system libraries (libwebp.so.7,
+libtiff.so.6, libjpeg.so.62) and gcc. This module binds them with
+ctypes (plus one compiled shim for libjpeg and one for the CRC/LZW/
+QOI/ADPCM/FLAC loops) and routes the HOT decode loops through C while
+keeping the engine's output contracts:
 
 - **bit-identical to the pure path** for WebP (lossy VP8 via
   WebPDecodeYUV + this engine's own integer yuv_to_rgb — the YUV
   planes are already proven bit-exact against libwebp by
-  tests/test_vp8_codec.py; lossless VP8L via WebPDecodeRGBA), PNG
-  (libpng RGBA read, alpha dropped exactly like parse_png), TIFF
-  (TIFFReadRGBAImage). Asserted over the generator corpora by
-  tests/test_native_fastpath.py.
+  tests/test_vp8_codec.py; lossless VP8L via WebPDecodeRGBA), TIFF
+  (TIFFReadRGBAImage) and every shim loop. Asserted over the
+  generator corpora by tests/test_native_fastpath.py.
 - **conforming-but-not-bit-identical for JPEG**: ITU-T T.81 leaves
   IDCT precision implementation-defined; the pure decoder uses the
   exact float IDCT with round-half-even while libjpeg uses the islow
@@ -25,26 +24,29 @@ C while keeping the engine's output contracts:
   channel (measured; pinned by the test). The shim disables fancy
   upsampling so chroma replication matches the pure decoder.
 
-Routing policy (see parse_image / parse_webp / parse_png / ...):
-the native attempt is ON BY DEFAULT since the r12 optimization round
-(disable with ``TRITON_NATIVE_DECODE=0`` or ``prefer_native=False``),
-and ANY native failure — library missing, unsupported feature,
-rejected bytes — falls back to the pure decoder, which keeps the loud
-corrupt-skip ValueError contract byte-for-byte identical to the pure
-path. The pytest suite pins the PURE path as its default
-(tests/conftest.py sets TRITON_NATIVE_DECODE=0) so the clean-room
-decoders stay continuously exercised; the parity/differential legs
-opt back in explicitly.
+Routing policy (parse_webp / parse_jpeg / parse_tiff / parse_gif /
+parse_qoi / parse_flac / decode_ima / masked_crc32c): the path is
+chosen from what the process can observe, never from an option. The
+native leg runs when its library or shim loads and the format's gate
+accepts the bytes; otherwise the pure decoder runs, so a host without
+a library keeps working. ANY native miss — unsupported feature,
+rejected bytes, an exception — falls back to the pure decoder, which
+keeps the loud corrupt-skip ValueError contract. PNG and uncompressed
+TIFF have no native leg: the pure decoders measured faster (ROADMAP
+item 4 has the per-format table). The test suite reaches the pure
+decoders the way a host without the libraries does (the
+``pure_decoders`` fixture in tests/conftest.py makes every loader
+below return None).
 
 Compressed-shard ingest (xz/zstd/lz4) is not routed here: it has one
 decoder per format, stdlib lzma and pyarrow's libzstd/liblz4
-(operators/ingest.py), and this flag does not reach it.
+(operators/ingest.py).
 
 Cluster note: ctypes binds per-process, so executors resolve the
 libraries locally; a heterogeneous cluster where some hosts lack a
 library degrades per-host to the pure path instead of failing the
-stage. The JPEG shim is compiled once per host (gcc, cached in the
-temp dir, content-hashed) and is likewise optional.
+stage. The shims are compiled once per host (gcc, cached in the temp
+dir, content-hashed) and are likewise optional.
 
 Reference parity note: the reference engine links the native codec
 libraries directly (it is C++/Go); this module is the Spark-side
@@ -61,33 +63,6 @@ import struct
 from typing import Optional
 
 import numpy as np
-
-_ENV_FLAG = "TRITON_NATIVE_DECODE"
-
-
-def native_enabled(prefer_native: "bool | None" = None) -> bool:
-    """Resolve the dispatch: an explicit kwarg wins; otherwise the
-    TRITON_NATIVE_DECODE env var (read per call so executors forked
-    after a conf change still honor it).
-
-    Default flipped ON in the r12 optimization round (guide §4.2 "do
-    the heavy lifting in native code"): the suite-level A/B of record
-    (SCALE.md r11) measured flag-on at 0.893x with zero correctness
-    movement, and every native leg degrades per-host to the pure path
-    when a library/shim is absent and per-FILE to the pure path when
-    the accept-set gate declines — semantics stay pinned by the pure
-    decoders' oracle gates either way. Set TRITON_NATIVE_DECODE=0 to
-    force the pure clean-room path everywhere (tests/conftest.py does
-    exactly that, so the test suite keeps exercising the pure
-    decoders by default and enables native only in the explicit
-    parity/differential legs)."""
-    if prefer_native is not None:
-        return bool(prefer_native)
-    raw = os.environ.get(_ENV_FLAG)
-    if raw is None:
-        return True
-    return raw.strip() not in ("0", "false", "no", "")
-
 
 def _try_cdll(*names):
     for name in names:
@@ -206,149 +181,6 @@ def decode_webp_native(data: bytes) -> Optional[dict]:
     return None
 
 
-# --------------------------------------------------------------- libpng
-
-class _PngImage(ctypes.Structure):
-    # png_image, the libpng "simplified API" control struct (public
-    # ABI, png.h) — the same layout the differential tests bind
-    _fields_ = [("opaque", ctypes.c_void_p), ("version", ctypes.c_uint32),
-                ("width", ctypes.c_uint32), ("height", ctypes.c_uint32),
-                ("format", ctypes.c_uint32), ("flags", ctypes.c_uint32),
-                ("colormap_entries", ctypes.c_uint32),
-                ("warning_or_error", ctypes.c_uint32),
-                ("message", ctypes.c_char * 64)]
-
-
-_PNG_FORMAT_RGBA = 3  # PNG_FORMAT_FLAG_ALPHA | PNG_FORMAT_FLAG_COLOR
-
-_png_lib = None
-_png_tried = False
-
-
-def _png():
-    global _png_lib, _png_tried
-    if _png_tried:
-        return _png_lib
-    _png_tried = True
-    lib = _try_cdll("libpng16.so.16", "libpng16.so",
-                    ctypes.util.find_library("png16"))
-    if lib is None:
-        return None
-    try:
-        lib.png_image_begin_read_from_memory.restype = ctypes.c_int
-        lib.png_image_begin_read_from_memory.argtypes = [
-            ctypes.POINTER(_PngImage), ctypes.c_char_p, ctypes.c_size_t]
-        lib.png_image_finish_read.restype = ctypes.c_int
-        lib.png_image_finish_read.argtypes = [
-            ctypes.POINTER(_PngImage), ctypes.c_void_p, ctypes.c_void_p,
-            ctypes.c_int32, ctypes.c_void_p]
-        lib.png_image_free.restype = None
-        lib.png_image_free.argtypes = [ctypes.POINTER(_PngImage)]
-    except AttributeError:
-        return None
-    _png_lib = lib
-    return lib
-
-
-_PNG_CM_CHUNKS = (b"gAMA", b"cHRM", b"sRGB", b"iCCP")
-
-
-def _png_has_color_management(data: bytes) -> bool:
-    """True when a color-management chunk precedes the pixel data —
-    the simplified libpng API would gamma/ICC-convert those, while
-    parse_png deliberately returns raw samples. Cheap header-side
-    chunk walk (CM chunks must appear before IDAT by spec)."""
-    pos = 8
-    while pos + 8 <= len(data):
-        (clen,) = struct.unpack_from(">I", data, pos)
-        ctype = data[pos + 4:pos + 8]
-        if ctype in _PNG_CM_CHUNKS:
-            return True
-        if ctype in (b"IDAT", b"IEND"):
-            return False
-        pos += 12 + clen
-    return False
-
-
-def _png_chunks_structurally_pure(data: bytes) -> bool:
-    """Mirror parse_png's chunk-walk accept set: every chunk fully
-    present (8-byte header + payload + 4-byte CRC), every CRC-32
-    valid, and a terminating IEND reached. libpng's simplified API is
-    laxer — it decodes a file whose trailing IEND chunk is truncated
-    away, which the pure path rejects loudly ("truncated PNG chunk
-    header"); found by the r12 native-default flip when the
-    cross-format dedup gates' truncated corpus rows stopped being
-    skipped. Without this walk the flag silently WIDENS the accept
-    set on exactly the corrupt-skip contract the operators pin."""
-    import zlib as _zlib
-
-    pos = 8
-    while pos + 8 <= len(data):
-        (clen,) = struct.unpack_from(">I", data, pos)
-        ctype = data[pos + 4:pos + 8]
-        end = pos + 8 + clen
-        if end + 4 > len(data):
-            return False                       # truncated payload/CRC
-        (crc,) = struct.unpack_from(">I", data, end)
-        if _zlib.crc32(data[pos + 4:end]) & 0xFFFFFFFF != crc:
-            return False                       # pure path raises here
-        pos = end + 4
-        if ctype == b"IEND":
-            return True   # pure path stops at IEND (trailing junk ok)
-    return False                               # missing IEND / header
-
-
-def decode_png_native(data: bytes) -> Optional[dict]:
-    """8-bit-depth PNGs only: libpng's RGBA read, alpha then DROPPED
-    exactly like parse_png (requesting RGB from libpng would instead
-    COMPOSITE alpha onto a background — different pixels). 16-bit
-    files return None: libpng's 16->8 scaling differs from the pure
-    decoder's documented truncation, so they take the pure path."""
-    lib = _png()
-    if lib is None or len(data) < 26 or data[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    # IHDR is always first: width/height/bit_depth/color_type at 16..
-    bit_depth = data[24]
-    color_type = data[25]
-    if bit_depth > 8:
-        return None
-    if not _png_chunks_structurally_pure(data):
-        return None
-    if _png_has_color_management(data):
-        # gAMA/cHRM/sRGB/iCCP: libpng's simplified API CONVERTS pixel
-        # values toward sRGB while parse_png returns the raw samples —
-        # a silent flag-on/off divergence (review find). Pure path.
-        return None
-    img = _PngImage()
-    img.version = 1
-    if not lib.png_image_begin_read_from_memory(ctypes.byref(img), data,
-                                                len(data)):
-        return None
-    if img.width * img.height > 1 << 28:   # decompression-bomb guard,
-        # same bound as the tiff path; free the control struct
-        # begin_read allocated (review find: it leaked per bomb)
-        lib.png_image_free(ctypes.byref(img))
-        return None
-    img.format = _PNG_FORMAT_RGBA
-    buf = (ctypes.c_ubyte * (img.width * img.height * 4))()
-    if not lib.png_image_finish_read(ctypes.byref(img), None, buf, 0,
-                                     None):
-        # finish_read frees on its own error path and png_image_free
-        # is documented idempotent — safe either way
-        lib.png_image_free(ctypes.byref(img))
-        return None
-    rgba = np.frombuffer(bytes(buf), np.uint8) \
-        .reshape(img.height, img.width, 4)
-    return {
-        "width": int(img.width),
-        "height": int(img.height),
-        "bit_depth": int(bit_depth),
-        "color_type": int(color_type),
-        "n_pixels": int(img.width * img.height),
-        "pixels": rgba[:, :, :3].copy(),
-    }
-
-
 # --------------------------------------------------------------- libtiff
 
 _tiff_lib = None
@@ -411,16 +243,18 @@ _ORIENTATION_TOPLEFT = 1
 
 
 def _tiff_pure_compatible(data: bytes) -> bool:
-    """True when the first IFD is within parse_tiff's accept set.
-    libtiff decodes compressions (JPEG-in-TIFF, CCITT, …), extra
-    configurations (tiles, planar, 16-bit) and APPLIES Orientation —
-    all of which the pure decoder either rejects loudly or treats
-    differently. Without this gate TRITON_NATIVE_DECODE=1 silently
-    widens/changes the accept set (r11 advice; mirrors the PNG
-    color-management guard). A False routes to the pure path, which
-    owns the loud rejection."""
-    import struct as _struct
+    """True when the first IFD is compressed (LZW, Deflate, PackBits)
+    and within parse_tiff's accept set.
 
+    Uncompressed strips are declined: the pure decoder reads them
+    with one numpy reshape and beats libtiff 7-14x (64 px 0.03 vs
+    0.15 ms, 2048 px 4.2 vs 49.6 ms, one core). libtiff also decodes
+    compressions (JPEG-in-TIFF, CCITT, ...) and configurations
+    (tiles, planar, 16-bit) the pure decoder rejects, and it APPLIES
+    Orientation, which the pure decoder ignores; the gate declines all
+    of those so the native leg never widens or changes the accept
+    set. A False routes to the pure path, which owns the loud
+    rejection."""
     from go_triton_spark.codec import tiff as _t
 
     if data[:4] == b"II*\x00":
@@ -430,9 +264,9 @@ def _tiff_pure_compatible(data: bytes) -> bool:
     else:
         return False
     try:
-        (ifd_off,) = _struct.unpack_from(bo + "I", data, 4)
+        (ifd_off,) = struct.unpack_from(bo + "I", data, 4)
         tags = _t._read_entries(data, ifd_off, bo)
-    except (ValueError, _struct.error):
+    except (ValueError, struct.error):
         return False
 
     def one(tag, default=None):
@@ -443,7 +277,7 @@ def _tiff_pure_compatible(data: bytes) -> bool:
     spp = one(277, 1)
     comp = one(259, 1)
     ok = (
-        comp in _t._SUPPORTED_COMP
+        comp in _t._SUPPORTED_COMP and comp != _t._COMP_NONE
         and photo in (0, 1, 2, 3)
         # photo 2 with spp>3: libtiff may treat the 4th sample as
         # (possibly associated) alpha; pure ignores it — narrow to
@@ -460,8 +294,8 @@ def _tiff_pure_compatible(data: bytes) -> bool:
     if not ok:
         return False
     # strip-geometry twins of parse_tiff's loud checks (review find:
-    # libtiff tolerates padded uncompressed strips / strip overruns
-    # the pure path rejects, so they must route pure)
+    # libtiff tolerates strip overruns the pure path rejects, so they
+    # must route pure)
     width, height = one(256, 0), one(257, 0)
     if width < 1 or height < 1:
         return False
@@ -471,28 +305,21 @@ def _tiff_pure_compatible(data: bytes) -> bool:
     rows_per_strip = one(278, height)
     if rows_per_strip < 1:
         return False
-    # strip COUNT must cover the image exactly (r11 advice): too few
-    # strips passes the per-strip loop below but parse_tiff's reshape
-    # raises — without this check accept/reject parity would rest on
-    # libtiff's stopOnError behavior instead of the gate
+    # strip COUNT must cover the image exactly (r11 advice): parse_tiff
+    # raises on too few or too many strips — without this check
+    # accept/reject parity would rest on libtiff's stopOnError behavior
+    # instead of the gate
     if len(offsets) != -(-height // rows_per_strip):
         return False
-    rowbytes = width * spp
-    for si, (off, cnt) in enumerate(zip(offsets, counts)):
-        if off + cnt > len(data):
-            return False            # strip out of bounds
-        nrows = min(rows_per_strip, height - si * rows_per_strip)
-        if nrows <= 0:
-            return False            # more strips than rows
-        if comp == _t._COMP_NONE and cnt != nrows * rowbytes:
-            return False            # padded/short uncompressed strip
-    return True
+    # strips out of bounds
+    return all(off + cnt <= len(data) for off, cnt in zip(offsets, counts))
 
 
 def decode_tiff_native(data: bytes) -> Optional[dict]:
     """First IFD via TIFFReadRGBAImageOriented (top-left origin, so no
     flip) over an in-memory TIFFClientOpen stream. Gated by
-    _tiff_pure_compatible so the flag never widens the accept set."""
+    _tiff_pure_compatible: compressed strips only, never wider than
+    the pure accept set."""
     lib = _tiff()
     if lib is None or not _tiff_pure_compatible(data):
         return None
@@ -630,8 +457,8 @@ int triton_jpeg_decode_rgb(const unsigned char *data, size_t len,
     jpeg_read_header(&cinfo, TRUE);
     /* parse_jpeg accepts Huffman SOF0/SOF2 only; libjpeg would also
      * decode arithmetic-coded streams, silently widening the accept
-     * set under the flag — reject them here so flag-on row/skip
-     * counts match the pure path (r11 advice; the Python pre-scan in
+     * set — reject them here so native row/skip counts match the
+     * pure path (r11 advice; the Python pre-scan in
      * decode_jpeg_native is the first line, this is defense in depth
      * for callers reaching the shim directly). */
     if (cinfo.arith_code) {
@@ -736,10 +563,9 @@ def _jpeg_pure_compatible(data: bytes) -> bool:
     """True when the frame type is one parse_jpeg ACCEPTS (Huffman
     SOF0/SOF2, 8-bit precision). libjpeg also decodes SOF1 (extended
     sequential) and arithmetic-coded streams — without this pre-scan
-    the flag would silently WIDEN the accept set and flag-on row/skip
-    counts could differ from the pure path on wild inputs (r11
-    advice; same divergence class the PNG color-management guard
-    closes). A False here routes to the pure decoder, which either
+    the native leg would silently WIDEN the accept set and its
+    row/skip counts could differ from the pure path on wild inputs
+    (r11 advice). A False here routes to the pure decoder, which either
     rejects loudly (the parity case) or — if this conservative scan
     mis-classified — decodes correctly at pure speed."""
     i, n = 2, len(data)
@@ -1279,7 +1105,7 @@ def flac_predicted_native(data: bytes, bitpos: int, blocksize: int,
     Returns ``(samples int64 ndarray, new_bit_position)`` on success,
     None when the shim is absent or the bitstream deviates in ANY way
     — the pure path re-decodes and raises its typed ValueError, so
-    flag-on keeps exact corrupt accept/reject parity."""
+    the shim keeps exact corrupt accept/reject parity."""
     lib = _crc_shim_lib()
     if lib is None or blocksize <= 0 or blocksize > 1 << 26:
         return None
@@ -1313,64 +1139,10 @@ def gif_lzw_decode_native(data: bytes, min_code_size: int,
     return bytes(out)
 
 
-# ------------------------------------------------------------ dispatch
-
-_IMAGE_DECODERS = {}
-
-
-def maybe_image(fmt: str, data: bytes,
-                prefer_native: "bool | None" = None) -> Optional[dict]:
-    """Opt-in gate + never-raises wrapper the parsers call first:
-    returns the native decode dict, or None (flag off, library
-    absent, unsupported feature, rejected/corrupt bytes, any native
-    error) — in which case the caller runs its pure path, preserving
-    the loud ValueError contract for genuinely corrupt bytes."""
-    if not native_enabled(prefer_native):
-        return None
-    fn = _IMAGE_DECODERS.get(fmt)
-    if fn is None:
-        return None
-    try:
-        return fn(data)
-    except Exception:
-        return None
-
-
-def decode_image_native(data: bytes) -> Optional[dict]:
-    """Sniff + route to the per-format native decoder. None whenever
-    no native path applies — callers MUST fall back to the pure
-    decoder (which also owns the loud corrupt-skip ValueError)."""
-    if len(data) < 12:
-        return None
-    try:
-        if data[:8] == b"\x89PNG\r\n\x1a\n":
-            return decode_png_native(data)
-        if data[:3] == b"\xff\xd8\xff":
-            return decode_jpeg_native(data)
-        if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-            return decode_webp_native(data)
-        if data[:4] in (b"II*\x00", b"MM\x00*"):
-            return decode_tiff_native(data)
-    except Exception:
-        return None    # any native hiccup degrades to the pure path
-    return None         # bmp/qoi are already plain numpy; gif: pure
-
-
-_IMAGE_DECODERS.update({
-    "image": decode_image_native,
-    "webp": decode_webp_native,
-    "png": decode_png_native,
-    "jpeg": decode_jpeg_native,
-    "tiff": decode_tiff_native,
-})
-
-
 def native_status() -> dict:
     """Observability: which native paths this process can use."""
     return {
-        "enabled_by_env": native_enabled(),
         "webp": _webp() is not None,
-        "png": _png() is not None,
         "tiff": _tiff() is not None,
         "jpeg_shim": _jpeg_shim_lib() is not None,
         "crc32c_shim": _crc_shim_lib() is not None,

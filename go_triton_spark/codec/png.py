@@ -118,7 +118,7 @@ def _walk_chunks(data: bytes):
     raise ValueError("PNG missing IEND chunk")
 
 
-def parse_png(data: bytes, prefer_native: "bool | None" = None) -> dict:
+def parse_png(data: bytes) -> dict:
     """Parse one complete PNG file; return pixels + metadata.
 
     Returns dict with: width, height, bit_depth, color_type, n_pixels,
@@ -127,15 +127,10 @@ def parse_png(data: bytes, prefer_native: "bool | None" = None) -> dict:
     dropped), row 0 = top — the same contract as parse_bmp so the
     mm_image_* math is format-agnostic.
 
-    With ``prefer_native=True`` (or TRITON_NATIVE_DECODE=1), 8-bit
-    files route through the system libpng (codec/native.py) with
-    bit-identical output; misses fall back here.
+    There is no native leg: inflate already runs in C zlib, and this
+    decoder measured faster than libpng's simplified API from 256 px
+    up (ROADMAP item 4).
     """
-    from go_triton_spark.codec import native as _native
-
-    m = _native.maybe_image("png", data, prefer_native)
-    if m is not None:
-        return m
     if len(data) < len(_SIG) or data[:len(_SIG)] != _SIG:
         raise ValueError("not a PNG file (bad signature)")
     width = height = None

@@ -80,13 +80,12 @@ def build_qoi(pixels, channels: int = 3) -> bytes:
     return bytes(out)
 
 
-def parse_qoi(data: bytes, prefer_native: "bool | None" = None) -> dict:
+def parse_qoi(data: bytes) -> dict:
     """Decode one QOI payload; ValueError on any corruption.
 
-    With ``prefer_native=True`` (or TRITON_NATIVE_DECODE=1) the op
-    loop runs in the compiled shim (codec/native.py), bit-identical;
-    misses fall back here. Explicit kwarg wins over the env flag,
-    matching every other image decoder.
+    The op loop runs in the compiled shim (codec/native.py) when it
+    loads, bit-identical; hosts without the shim and every native miss
+    decode here.
     """
     if len(data) < 14 + len(_END) or data[:4] != _MAGIC:
         raise ValueError("not a QOI stream (bad magic or too short)")
@@ -101,17 +100,16 @@ def parse_qoi(data: bytes, prefer_native: "bool | None" = None) -> dict:
         raise ValueError("QOI end marker missing")
     body = data[14:-8]
 
-    # Opt-in native fast path (r11): the shim runs the identical op
+    # Native fast path (r11): the compiled shim runs the identical op
     # machine; None (shim absent / any stream deviation) falls through
     # to the pure loop, which owns the typed error. Header checks
     # above run in Python for BOTH paths.
     from go_triton_spark.codec import native as _native
 
-    if _native.native_enabled(prefer_native):
-        got = _native.qoi_decode_native(body, n)
-        if got is not None:
-            return {"width": int(w), "height": int(h),
-                    "n_pixels": int(n), "pixels": got.reshape(h, w, 3)}
+    got = _native.qoi_decode_native(body, n)
+    if got is not None:
+        return {"width": int(w), "height": int(h),
+                "n_pixels": int(n), "pixels": got.reshape(h, w, 3)}
 
     out = np.empty((n, 3), dtype=np.uint8)
     index = [(0, 0, 0, 0)] * 64

@@ -59,18 +59,16 @@ def crc32c(data: bytes) -> int:
     return crc ^ 0xFFFFFFFF
 
 
-def masked_crc32c(data: bytes, prefer_native: "bool | None" = None) -> int:
+def masked_crc32c(data: bytes) -> int:
     """Snappy framing checksum mask (same rotation golang/snappy uses).
 
-    With the native opt-in (TRITON_NATIVE_DECODE=1 / prefer_native)
-    the CRC runs through the compiled slice-by-8 shim (codec/
-    native.py) — measured ~99% of .tri frame-decompress wall was this
-    per-byte Python loop. Bit-identical (same polynomial; pinned by
-    tests/test_native_fastpath.py); shim misses fall back here."""
-    c = None
+    The CRC runs through the compiled slice-by-8 shim (codec/
+    native.py) when it loads — measured ~99% of .tri frame-decompress
+    wall was the per-byte Python loop. Bit-identical (same polynomial;
+    pinned by tests/test_native_fastpath.py); hosts without the shim
+    use crc32c here."""
     from go_triton_spark.codec import native as _native
-    if _native.native_enabled(prefer_native):
-        c = _native.crc32c_native(data)
+    c = _native.crc32c_native(data)
     if c is None:
         c = crc32c(data)
     return (((c >> 15) | (c << 17)) + 0xA282EAD8) & 0xFFFFFFFF

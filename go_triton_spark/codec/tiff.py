@@ -239,16 +239,20 @@ def _read_entries(data: bytes, ifd_off: int, bo: str) -> dict:
     return entries
 
 
-def parse_tiff(data: bytes, prefer_native: "bool | None" = None) -> dict:
+def parse_tiff(data: bytes) -> dict:
     """Decode the FIRST image of a TIFF file; returns the shared image
     contract (width/height/n_pixels + (h, w, 3) RGB uint8 pixels).
 
-    With ``prefer_native=True`` (or TRITON_NATIVE_DECODE=1) decode
-    routes through the system libtiff (codec/native.py) with
-    bit-identical output; misses fall back here."""
+    Compressed (LZW/Deflate/PackBits) strips decode through the system
+    libtiff (codec/native.py) when it loads and its gate accepts the
+    file, bit-identical to this decoder; uncompressed strips, hosts
+    without libtiff and every native miss decode here."""
     from go_triton_spark.codec import native as _native
 
-    m = _native.maybe_image("tiff", data, prefer_native)
+    try:
+        m = _native.decode_tiff_native(data)
+    except Exception:       # any native hiccup: the pure path re-judges
+        m = None
     if m is not None:
         return m
     if len(data) < 8:

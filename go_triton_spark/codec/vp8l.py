@@ -50,19 +50,19 @@ import numpy as np
 # Distance-to-plane-code neighborhood map (spec section 4.2.2): codes
 # 1..120 address nearby already-decoded pixels as (dx, dy) offsets;
 # codes > 120 mean scan-line distance (code - 120). The spec's table
-# is exactly the 120 NEAREST already-decoded half-plane neighbors
-# (dy > 0, or dy == 0 with dx > 0) ordered by squared Euclidean
-# distance, ties broken by larger dy then larger dx — verified
-# against the specification's published listing entry-for-entry over
-# its first twelve rows (96 codes), with the 120 cutoff falling on a
-# clean distance boundary (d^2 = 74 in, 80 out; no tie split).
+# holds every already-decoded neighbor in the window dy 0..7, dx -7..8
+# (dy > 0, or dy == 0 with dx > 0: 8 * 16 - 8 = 120 entries), ordered
+# by squared Euclidean distance, ties broken by larger dy then larger
+# dx — equal entry-for-entry to the published listing and libwebp's
+# kCodeToPlane. It is NOT the 120 nearest neighbors: those match only
+# codes 1-96.
 
 
 def _gen_dist_map() -> tuple:
-    cands = [(x, y) for y in range(9) for x in range(-8, 9)
+    cands = [(x, y) for y in range(8) for x in range(-7, 9)
              if y > 0 or x > 0]
     cands.sort(key=lambda p: (p[0] ** 2 + p[1] ** 2, -p[1], -p[0]))
-    return tuple(cands[:120])
+    return tuple(cands)
 
 
 _DIST_MAP = _gen_dist_map()
@@ -877,20 +877,23 @@ def _parse_vp8x(data: bytes, body: bytes, after: int, end: int) -> dict:
     return meta
 
 
-def parse_webp(data: bytes, prefer_native: "bool | None" = None) -> dict:
+def parse_webp(data: bytes) -> dict:
     """Parse a WebP file (RIFF container): lossless VP8L decodes via
     this module; lossy VP8 key frames decode via codec/vp8.py (RFC
     6386, bit-exact against libwebp — tests/test_vp8_codec.py); VP8X
     extended containers decode incl. ALPH alpha and ANIM/ANMF
     animation frames.
 
-    With ``prefer_native=True`` (or TRITON_NATIVE_DECODE=1) bare
-    VP8/VP8L containers route through the system libwebp (codec/
-    native.py) — bit-identical output, ~2-3 orders of magnitude
-    faster on large frames; any native miss falls back here."""
+    Bare VP8/VP8L containers decode through the system libwebp
+    (codec/native.py) when it loads — bit-identical output, ~2-3
+    orders of magnitude faster on large frames; VP8X containers, hosts
+    without libwebp and every native miss decode here."""
     from go_triton_spark.codec import native as _native
 
-    m = _native.maybe_image("webp", data, prefer_native)
+    try:
+        m = _native.decode_webp_native(data)
+    except Exception:       # any native hiccup: the pure path re-judges
+        m = None
     if m is not None:
         return m
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -5,15 +6,32 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# The engine's production default is native-decode ON (r12 optimization;
-# codec/native.py). The test suite pins the PURE clean-room image/audio/
-# CRC decoders as its default so every codec/operator test keeps
-# exercising the spec-first decoders; the native parity/differential legs
-# opt back in explicitly with monkeypatch.setenv / prefer_native=True.
-# Compressed-shard ingest has one decoder per format and ignores the
-# flag. setdefault so an operator can still run the whole suite
-# native-first by exporting the flag.
-os.environ.setdefault("TRITON_NATIVE_DECODE", "0")
+# Loaders of codec/native.py's system libraries and compiled shims. A
+# host without them gets None from each, and every parser then takes
+# its pure decoder.
+NATIVE_LOADERS = ("_webp", "_tiff", "_jpeg_shim_lib", "_crc_shim_lib")
+
+
+@contextlib.contextmanager
+def without_native_libs():
+    """Run the block as a host with no native decode library does:
+    every native loader returns None, so each parser takes its pure
+    decoder. Only this process is affected; Spark workers keep the
+    native path."""
+    from go_triton_spark.codec import native
+
+    with pytest.MonkeyPatch.context() as mp:
+        for name in NATIVE_LOADERS:
+            mp.setattr(native, name, lambda: None)
+        yield
+
+
+@pytest.fixture
+def pure_decoders():
+    """For the pure decoders' unit tests: see without_native_libs."""
+    with without_native_libs():
+        yield
+
 
 SF_SMOKE = "/root/testdata/sf0.001"
 

@@ -10,6 +10,9 @@ from go_triton_spark.codec.adpcm import (STEP_TABLE, build_ima_wav,
                                          encode_ima)
 from go_triton_spark.codec.wav import parse_wav
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 
 def test_step_table_shape():
     assert len(STEP_TABLE) == 89
@@ -82,29 +85,3 @@ def test_encode_decode_tracks_input(seed, idx0):
     # worst tracked error stays under the biggest step the encoder
     # visited plus slack for the attack transient
     assert np.abs(dec - sig).max() < 4000
-
-
-def test_decode_ima_use_native_arg_parity(monkeypatch):
-    """decode_ima's hoisted per-stream flag (r11 verdict #3): an
-    explicit use_native bool must win over the env var, and both
-    routes must agree bit-for-bit with the default per-call
-    resolution."""
-    import os
-
-    import numpy as np
-
-    from go_triton_spark.codec.adpcm import decode_ima
-
-    rng = np.random.default_rng(7)
-    nibbles = rng.integers(0, 16, size=257, dtype=np.uint8)
-    base = decode_ima(nibbles, 100, 30)
-    assert np.array_equal(base, decode_ima(nibbles, 100, 30,
-                                           use_native=False))
-    # use_native=True may fall back to pure (shim absent) but must
-    # never change the samples when the shim is present
-    assert np.array_equal(base, decode_ima(nibbles, 100, 30,
-                                           use_native=True))
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "1")
-    assert np.array_equal(base, decode_ima(nibbles, 100, 30))
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "0")
-    assert np.array_equal(base, decode_ima(nibbles, 100, 30))

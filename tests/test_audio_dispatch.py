@@ -7,6 +7,9 @@ from go_triton_spark.codec.audio import parse_audio, sniff_audio_format
 from go_triton_spark.codec.flac import build_flac
 from go_triton_spark.codec.wav import build_wav
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 SIG = np.where(np.arange(96) % 8 < 4, 700, -700).astype(np.int64)
 
 

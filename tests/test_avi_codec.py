@@ -12,6 +12,9 @@ import pytest
 
 from go_triton_spark.codec.avi import build_avi, parse_avi
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 
 def _hand_avi(frames_bgr_rows: list[bytes], w: int, h: int,
               n_frames: int | None = None, handler: bytes = b"DIB ",

@@ -22,6 +22,9 @@ from go_triton_spark.codec.tri import (
     generate_key_name, parse_key_name, read_tri_bytes, write_tri_bytes,
 )
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 UTC = dt.timezone.utc
 
 

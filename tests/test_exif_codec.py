@@ -8,6 +8,9 @@ from go_triton_spark.codec.exif import (build_exif_jpeg, display_size,
 from go_triton_spark.codec.image import parse_image
 from go_triton_spark.codec.jpeg import build_jpeg_gray
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 BASE = build_jpeg_gray(np.full((8, 16), 77, np.uint8))
 
 

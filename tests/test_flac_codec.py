@@ -17,6 +17,9 @@ from go_triton_spark.codec.flac import (_BitReader, _BitWriter, _crc8,
                                         _crc16, _rice_read, _rice_write,
                                         build_flac, parse_flac)
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 
 def test_crc_polynomials_golden():
     # CRC-8 poly 0x07 and CRC-16 poly 0x8005, both init 0 — values

@@ -18,6 +18,9 @@ from hypothesis import strategies as st
 from go_triton_spark.codec.gif import (build_gif, lzw_decode, lzw_encode,
                                        parse_gif)
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 
 def _screen(w, h, pal_bytes, kbits):
     return (b"GIF89a"
@@ -352,8 +355,6 @@ def test_gate_corpus_transparency_and_corruption_contract():
     carry a real GCE (palette index 15 transparent — composited pixels
     zero with alpha 0), every truncated shape in the 103-period
     rejects, and clean payloads decode to the closed form."""
-    import sys
-    sys.path.insert(0, "/root/repo")
     from go_triton_spark.operators.multimodal import _gif_gate_parts
 
     for doc_id in range(59, 59 + 103 * 30, 103):

@@ -7,6 +7,9 @@ from go_triton_spark.codec.bmp import build_bmp
 from go_triton_spark.codec.image import parse_image, sniff_image_format
 from go_triton_spark.codec.png import build_png
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 
 def test_mixed_column_dispatch_shared_contract():
     px = np.arange(90, dtype=np.uint8).reshape(5, 6, 3)

@@ -26,6 +26,9 @@ from hypothesis import strategies as st
 from go_triton_spark.codec.jpeg import (QUANT_LUMA_K1, ZIGZAG, build_jpeg,
                                         build_jpeg_ycbcr, parse_jpeg)
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 
 # --- naive reference transform (independent of the codec's matrix) ---
 

@@ -1,18 +1,23 @@
 """Native fast-path equality suite (codec/native.py, r9 verdict #2).
 
-The opt-in system-library decode path must be INVISIBLE except for
-speed: bit-identical output for WebP (lossy via WebPDecodeYUV + the
-engine's own yuv_to_rgb; lossless via WebPDecodeRGBA), PNG and TIFF.
-JPEG is the documented exception — ITU-T T.81 leaves IDCT precision
+Each parser picks its path from what the host offers: the native leg
+when its library or shim loads and the format's gate accepts the
+bytes, the pure decoder otherwise. The native leg must be INVISIBLE
+except for speed: bit-identical output for WebP (lossy via
+WebPDecodeYUV + the engine's own yuv_to_rgb; lossless via
+WebPDecodeRGBA), compressed TIFF and every compiled-shim loop. JPEG is
+the documented exception — ITU-T T.81 leaves IDCT precision
 implementation-defined, so the pure float-IDCT decoder and libjpeg's
 islow integer IDCT legitimately differ; the bound here (+-2 per
 channel, metadata exact) is measured and pinned. Corrupt bytes must
-raise the SAME loud ValueError with the flag on (native rejection
-falls back to the pure decoder, which owns the verdict).
+raise the SAME loud ValueError on both paths (a native rejection falls
+back to the pure decoder, which owns the verdict).
 
-Each test skips when its system library is absent, so the suite stays
-green on a minimal container while pinning the contract wherever the
-fast path can actually engage.
+Every test compares the unpatched path (native where the library
+loads) against the same call under ``without_native_libs`` (conftest),
+which is how a host without the libraries runs. Each test skips when
+its library is absent, so the suite stays green on a minimal host
+while pinning the contract wherever the fast path can engage.
 """
 
 from __future__ import annotations
@@ -20,10 +25,9 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from conftest import without_native_libs
 from go_triton_spark.codec import native
-from go_triton_spark.codec.image import parse_image
 from go_triton_spark.codec.jpeg import build_jpeg_ycbcr, parse_jpeg
-from go_triton_spark.codec.png import build_png, parse_png
 from go_triton_spark.codec.tiff import build_tiff, parse_tiff
 from go_triton_spark.codec.vp8l import build_webp, build_webp_anim, \
     parse_webp
@@ -31,7 +35,6 @@ from go_triton_spark.codec.vp8l import build_webp, build_webp_anim, \
 _ST = native.native_status()
 
 _webp = pytest.mark.skipif(not _ST["webp"], reason="libwebp absent")
-_png = pytest.mark.skipif(not _ST["png"], reason="libpng absent")
 _tiff = pytest.mark.skipif(not _ST["tiff"], reason="libtiff absent")
 _jpeg = pytest.mark.skipif(not _ST["jpeg_shim"],
                            reason="jpeg shim unavailable (no gcc?)")
@@ -46,6 +49,20 @@ def _img(kind: str, h: int, w: int, seed: int = 0) -> np.ndarray:
     base = np.add.outer(np.arange(h) * 3, np.arange(w) * 5) % 256
     return np.dstack([base, (base + 40) % 256,
                       (base + 90) % 256]).astype(np.uint8)
+
+
+def _pure(parse, *args):
+    """``parse(*args)`` as a host without the native libraries runs it."""
+    with without_native_libs():
+        return parse(*args)
+
+
+def _outcome(parse, data: bytes):
+    """The decoded dict, or the ValueError message on rejection."""
+    try:
+        return parse(data)
+    except ValueError as e:
+        return str(e)
 
 
 def _same_dict(a: dict, b: dict) -> None:
@@ -72,7 +89,7 @@ def test_webp_lossless_bit_identical(transform):
         else:
             img = _img(("noise", "grad")[trial % 2], h, w, seed=trial)
         data = build_webp(img, transform=transform)
-        _same_dict(parse_webp(data), parse_webp(data, prefer_native=True))
+        _same_dict(_pure(parse_webp, data), parse_webp(data))
 
 
 @_webp
@@ -81,7 +98,7 @@ def test_webp_lossless_alpha_bit_identical():
     img = _img("grad", 22, 18)
     alpha = rng.integers(0, 256, (22, 18), dtype=np.uint8)
     data = build_webp(img, alpha=alpha)
-    _same_dict(parse_webp(data), parse_webp(data, prefer_native=True))
+    _same_dict(_pure(parse_webp, data), parse_webp(data))
 
 
 @_webp
@@ -95,17 +112,18 @@ def test_webp_lossy_bit_identical():
                                        (64, 48, 85), (5, 3, 50))):
         img = _img(("noise", "grad", "flat")[trial % 3], h, w, seed=trial)
         data = _encode_simple(img, float(q))
-        _same_dict(parse_webp(data), parse_webp(data, prefer_native=True))
+        _same_dict(_pure(parse_webp, data), parse_webp(data))
 
 
 @_webp
 def test_webp_vp8x_falls_back_to_pure():
     """Extended containers (here: animation) have no native path —
-    the flag must not change their output."""
+    a host with libwebp must decode them exactly like one without."""
     base = np.full((8, 8, 3), 50, np.uint8)
     data = build_webp_anim([dict(rgb=base, no_blend=True)], 8, 8)
-    a = parse_webp(data)
-    b = parse_webp(data, prefer_native=True)
+    assert native.decode_webp_native(data) is None
+    a = _pure(parse_webp, data)
+    b = parse_webp(data)
     assert a["n_frames"] == b["n_frames"] == 1
     assert np.array_equal(a["pixels"], b["pixels"])
 
@@ -118,47 +136,9 @@ def test_webp_corrupt_still_raises_with_flag_on():
     img = _img("grad", 12, 12)
     data = build_webp(img)
     with pytest.raises(ValueError):
-        parse_webp(data[:-6], prefer_native=True)
+        parse_webp(data[:-6])
     with pytest.raises(ValueError):
-        parse_webp(b"RIFF\x04\x00\x00\x00WEBP", prefer_native=True)
-
-
-# -------------------------------------------------------------- png
-
-@_png
-@pytest.mark.parametrize("interlace", [False, True])
-def test_png_bit_identical(interlace):
-    for trial, (h, w) in enumerate(((1, 1), (9, 40), (40, 9), (32, 32))):
-        img = _img(("noise", "grad")[trial % 2], h, w, seed=trial)
-        data = build_png(img, interlace=interlace)
-        _same_dict(parse_png(data), parse_png(data, prefer_native=True))
-
-
-@_png
-def test_png_corrupt_still_raises_with_flag_on():
-    data = bytearray(build_png(_img("grad", 10, 10)))
-    data[40] ^= 0xFF  # inside IHDR/IDAT region: CRC breaks
-    with pytest.raises(ValueError):
-        parse_png(bytes(data), prefer_native=True)
-
-
-@_png
-@pytest.mark.parametrize("cut", [1, 9, 11, 12, 13])
-def test_png_truncated_iend_rejected_with_flag_on(cut):
-    """r12 find (native-default flip): libpng's simplified API decodes
-    a PNG whose trailing IEND chunk is truncated away, silently
-    WIDENING the accept set vs parse_png's loud 'truncated PNG chunk
-    header' — exactly the corrupt-skip shape the cross-format dedup
-    gates synthesize (last 9/11 bytes cut). The structural pre-walk
-    must route these to the pure path so flag-on == flag-off accept."""
-    data = build_png(_img("grad", 12, 7))
-    with pytest.raises(ValueError):
-        parse_png(data[:-cut], prefer_native=True)
-    # and the walk must NOT reject the intact file (native still used)
-    from go_triton_spark.codec import native as _n
-    assert _n._png_chunks_structurally_pure(data)
-    m = parse_png(data, prefer_native=True)
-    assert m["width"] == 7 and m["height"] == 12
+        parse_webp(b"RIFF\x04\x00\x00\x00WEBP")
 
 
 # ------------------------------------------------------------- tiff
@@ -167,17 +147,25 @@ def test_png_truncated_iend_rejected_with_flag_on(cut):
 @pytest.mark.parametrize("comp", ["none", "lzw", "deflate", "packbits"])
 @pytest.mark.parametrize("big_endian", [False, True])
 def test_tiff_bit_identical(comp, big_endian):
+    """Compressed strips decode natively, bit-identical to the pure
+    decoder; uncompressed strips are declined by the gate (the pure
+    numpy reshape beats libtiff 7-14x) and decode pure."""
     img = _img("noise", 29, 41, seed=7)
     data = build_tiff(img, compression=comp, big_endian=big_endian,
                       predictor=(comp == "lzw"))
-    _same_dict(parse_tiff(data), parse_tiff(data, prefer_native=True))
+    if comp == "none":
+        assert not native._tiff_pure_compatible(data)
+        assert native.decode_tiff_native(data) is None
+    else:
+        assert native.decode_tiff_native(data) is not None
+    _same_dict(_pure(parse_tiff, data), parse_tiff(data))
 
 
 @_tiff
 def test_tiff_corrupt_still_raises_with_flag_on():
-    data = build_tiff(_img("grad", 8, 8))
+    data = build_tiff(_img("grad", 8, 8), compression="lzw")
     with pytest.raises(ValueError):
-        parse_tiff(data[:30], prefer_native=True)
+        parse_tiff(data[:30])
 
 
 # ------------------------------------------------------------- jpeg
@@ -198,8 +186,8 @@ def test_jpeg_within_bound_and_metadata_exact(sub, progressive):
     cr = rng.integers(0, 256, (h, w)).astype(np.uint8)
     data = build_jpeg_ycbcr(y, cb, cr, subsampling=sub,
                             progressive=progressive)
-    a = parse_jpeg(data)
-    b = parse_jpeg(data, prefer_native=True)
+    a = _pure(parse_jpeg, data)
+    b = parse_jpeg(data)
     for k in ("width", "height", "n_pixels", "n_components",
               "progressive", "subsampling"):
         assert a[k] == b[k], k
@@ -212,66 +200,84 @@ def test_jpeg_grayscale_and_corrupt():
     y = (np.add.outer(np.arange(24) * 7, np.arange(24) * 3) % 256) \
         .astype(np.uint8)
     data = build_jpeg_ycbcr(y, None, None, subsampling="4:4:4")
-    a = parse_jpeg(data)
-    b = parse_jpeg(data, prefer_native=True)
+    a = _pure(parse_jpeg, data)
+    b = parse_jpeg(data)
     assert a["n_components"] == b["n_components"] == 1
     assert np.abs(a["pixels"].astype(int)
                   - b["pixels"].astype(int)).max() <= 2
     with pytest.raises(ValueError):
-        parse_jpeg(data[:40], prefer_native=True)
+        parse_jpeg(data[:40])
 
 
-# ------------------------------------------------------- dispatch
-
-@_webp
-@_png
-@_tiff
-def test_parse_image_dispatch_with_env_flag(monkeypatch):
-    """The env opt-in engages per-call (executors read it at decode
-    time) and the dispatch output stays identical across formats."""
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "1")
-    assert native.native_enabled()
-    img = _img("grad", 21, 13)
-    for data in (build_png(img), build_webp(img), build_tiff(img)):
-        m = parse_image(data)
-        assert np.array_equal(m["pixels"], img)
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "0")
-    assert not native.native_enabled()
-
-
-def test_flag_off_never_touches_native(monkeypatch):
-    """With the flag explicitly off (the pure clean-room
-    configuration the test suite pins in conftest.py), maybe_image
-    must not even attempt a native decode."""
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "0")
-    calls = []
-    monkeypatch.setitem(native._IMAGE_DECODERS, "png",
-                        lambda d: calls.append(1))
-    assert native.maybe_image("png", b"\x89PNG\r\n\x1a\n") is None
-    assert not calls
-
-
-def test_flag_defaults_on_when_unset(monkeypatch):
-    """r12: the production default is native ON — an unset env means
-    enabled, and only an explicit falsy token ('0'/'false'/'no'/empty)
-    forces the pure path. The kwarg still wins over the env in both
-    directions."""
-    monkeypatch.delenv("TRITON_NATIVE_DECODE", raising=False)
-    assert native.native_enabled()
-    assert not native.native_enabled(prefer_native=False)
-    for tok in ("0", "false", "no", "", "  0  "):
-        monkeypatch.setenv("TRITON_NATIVE_DECODE", tok)
-        assert not native.native_enabled(), repr(tok)
-        assert native.native_enabled(prefer_native=True), repr(tok)
-    for tok in ("1", "true", "yes"):
-        monkeypatch.setenv("TRITON_NATIVE_DECODE", tok)
-        assert native.native_enabled(), repr(tok)
-
+# -------------------------------------------------------- routing
 
 def test_native_status_shape():
     st = native.native_status()
-    assert set(st) == {"enabled_by_env", "webp", "png", "tiff",
-                       "jpeg_shim", "crc32c_shim"}
+    assert set(st) == {"webp", "tiff", "jpeg_shim", "crc32c_shim"}
+
+
+def _corpus():
+    """One input per native leg, each within that leg's gate."""
+    from go_triton_spark.codec.adpcm import build_ima_wav
+    from go_triton_spark.codec.flac import build_flac, parse_flac
+    from go_triton_spark.codec.gif import build_gif, parse_gif
+    from go_triton_spark.codec.jpeg import build_jpeg
+    from go_triton_spark.codec.qoi import build_qoi, parse_qoi
+    from go_triton_spark.codec.snappy_codec import frame_compress, \
+        frame_decompress
+    from go_triton_spark.codec.wav import parse_wav
+
+    rng = np.random.default_rng(1)
+    img = _img("grad", 16, 16)
+    nib = rng.integers(0, 16, 64, dtype=np.uint8)
+    pal = rng.integers(0, 256, (4, 3), dtype=np.uint8)
+    pcm = rng.integers(-2000, 2000, (4096, 1)).astype(np.int32)
+    return [
+        (parse_webp, build_webp(img)),
+        (parse_tiff, build_tiff(img, compression="lzw")),
+        (parse_jpeg, build_jpeg(img)),
+        (parse_gif, build_gif(rng.integers(0, 4, (9, 9)).astype(np.uint8),
+                              pal)),
+        (parse_qoi, build_qoi(img)),
+        (parse_flac, build_flac(pcm, subframe="lpc2")),
+        (parse_wav, build_ima_wav(nib, 0, 0)),
+        (frame_decompress, frame_compress(b"fox " * 100)),
+    ]
+
+
+_NATIVE_DECODERS = ("decode_webp_native", "decode_tiff_native",
+                    "decode_jpeg_native", "gif_lzw_decode_native",
+                    "qoi_decode_native", "flac_predicted_native",
+                    "crc16_8005_native", "ima_decode_native",
+                    "crc32c_native")
+
+
+def _native_hits(monkeypatch) -> set:
+    """Decode the corpus; return the native decoders that produced a
+    result (rather than declining with None)."""
+    hits = set()
+    for name in _NATIVE_DECODERS:
+        def rec(*a, _name=name, _fn=getattr(native, name)):
+            got = _fn(*a)
+            if got is not None:
+                hits.add(_name)
+            return got
+        monkeypatch.setattr(native, name, rec)
+    for parse, data in _corpus():
+        parse(data)
+    return hits
+
+
+@pytest.mark.skipif(not all(_ST.values()),
+                    reason="needs every native library and shim")
+def test_pure_decoders_fixture_routes_every_parser_pure(monkeypatch):
+    """Under without_native_libs (the pure_decoders fixture of the
+    codec unit tests) no native decoder decodes anything, while the
+    same corpus engages every one of them on this host — so the
+    fixture's loader list covers every native leg."""
+    assert _native_hits(monkeypatch) == set(_NATIVE_DECODERS)
+    with without_native_libs():
+        assert _native_hits(monkeypatch) == set()
 
 
 # ------------------------------------------------------------ crc32c
@@ -297,22 +303,21 @@ def test_crc32c_shim_bit_identical():
 
 
 @_crc
-def test_tri_snappy_framing_native_crc_equal(monkeypatch):
+def test_tri_snappy_framing_native_crc_equal():
     """frame_decompress output (and its loud checksum rejection) is
-    identical with the native CRC engaged."""
+    identical with and without the native CRC."""
     from go_triton_spark.codec.snappy_codec import SnappyError, \
         frame_compress, frame_decompress
 
     raw = b'{"doc": 1, "text": "quick brown fox"}\n' * 5000
     fr = frame_compress(raw)
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "1")
-    assert frame_decompress(fr) == raw
+    assert frame_decompress(fr) == _pure(frame_decompress, fr) == raw
     bad = bytearray(fr)
     bad[-10] ^= 0xFF                       # flip inside the last chunk
     with pytest.raises(SnappyError):
         frame_decompress(bytes(bad))
-    monkeypatch.delenv("TRITON_NATIVE_DECODE")
-    assert frame_decompress(fr) == raw
+    with pytest.raises(SnappyError):
+        _pure(frame_decompress, bytes(bad))
 
 
 # ------------------------------------------------ property fuzz
@@ -321,7 +326,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 
-@_png
 @_webp
 @_tiff
 @given(st.integers(1, 48), st.integers(1, 48), st.integers(0, 2**32 - 1))
@@ -332,10 +336,9 @@ def test_fuzz_image_native_equality(h, w, seed):
     arbitrary content/dimensions, not just the fixture shapes."""
     rng = np.random.default_rng(seed)
     img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    for data, parse in ((build_png(img), parse_png),
-                        (build_webp(img), parse_webp),
+    for data, parse in ((build_webp(img), parse_webp),
                         (build_tiff(img, compression="lzw"), parse_tiff)):
-        _same_dict(parse(data), parse(data, prefer_native=True))
+        _same_dict(_pure(parse, data), parse(data))
 
 
 @given(st.binary(max_size=2000))
@@ -371,16 +374,16 @@ def test_gif_native_lzw_bit_identical():
                (np.add.outer(np.arange(h), np.arange(w)) % ncol)
                .astype(np.uint8))
         g = build_gif(idx, pal, interlace=bool(trial % 3 == 0))
-        a = parse_gif(g)
-        b = parse_gif(g, prefer_native=True)
+        a = _pure(parse_gif, g)
+        b = parse_gif(g)
         for k in ("pixels", "alpha"):
             assert np.array_equal(a[k], b[k]), (trial, k)
     # table growth through every width up to 4096 entries
     big = (np.arange(200 * 300) % 251).astype(np.uint8).reshape(200, 300)
     pal = rng.integers(0, 256, (256, 3), dtype=np.uint8)
     g = build_gif(big, pal)
-    assert np.array_equal(parse_gif(g)["pixels"],
-                          parse_gif(g, prefer_native=True)["pixels"])
+    assert np.array_equal(_pure(parse_gif, g)["pixels"],
+                          parse_gif(g)["pixels"])
 
 
 @_gifshim
@@ -398,56 +401,30 @@ def test_fuzz_gif_lzw_native_equality(raw, mcs):
 
 
 @_gifshim
-def test_gif_corrupt_still_raises_with_flag_on(monkeypatch):
+def test_gif_corrupt_still_raises_with_flag_on():
     from go_triton_spark.codec.gif import build_gif, parse_gif
 
     rng = np.random.default_rng(2)
     pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
     idx = rng.integers(0, 16, (20, 20)).astype(np.uint8)
     g = build_gif(idx, pal)
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "1")
-    with pytest.raises(ValueError):
-        parse_gif(g[:-8])              # truncated LZW/trailer
-
-
-# ------------------------------------------------ review-find pins
-
-@_png
-def test_png_color_management_falls_back_to_pure():
-    """A gAMA chunk makes libpng's simplified API CONVERT samples
-    toward sRGB; the pure parser returns raw samples — the native
-    path must decline such files so flag on/off stays identical
-    (review find)."""
-    import struct as _s
-    import zlib
-
-    base = build_png(_img("grad", 12, 9))
-    gama = _s.pack(">I", 45455)
-    chunk = _s.pack(">I", 4) + b"gAMA" + gama \
-        + _s.pack(">I", zlib.crc32(b"gAMA" + gama) & 0xFFFFFFFF)
-    # insert right after IHDR (8-byte sig + 25-byte IHDR chunk)
-    data = base[:33] + chunk + base[33:]
-    assert native._png_has_color_management(data)
-    assert native.decode_png_native(data) is None
-    a = parse_png(data)
-    b = parse_png(data, prefer_native=True)
-    assert np.array_equal(a["pixels"], b["pixels"])
+    err = _outcome(parse_gif, g[:-8])              # truncated LZW/trailer
+    assert isinstance(err, str) and err == _pure(_outcome, parse_gif, g[:-8])
 
 
 # ------------------------------------- accept-set parity guards (r11)
 #
-# The flag must never WIDEN the accept set: libtiff/libjpeg decode
-# configurations the pure decoders loudly reject (orientation, tiles,
-# planar, JPEG-in-TIFF, SOF1, arithmetic coding), so flag-on row/skip
-# counts could diverge on wild inputs without these gates — the same
-# divergence class the PNG color-management guard closes.
+# The native legs must never WIDEN the accept set: libtiff/libjpeg
+# decode configurations the pure decoders loudly reject (orientation,
+# tiles, planar, JPEG-in-TIFF, SOF1, arithmetic coding), so native
+# row/skip counts could diverge on wild inputs without these gates.
 
 def _mini_tiff(extra_tags=()):
-    """Header + one IFD with the baseline tag set (no pixel data —
+    """Header + one IFD with the baseline LZW tag set (no pixel data —
     the gate reads only the IFD)."""
     import struct as s
     base = [(256, 3, 1, 4), (257, 3, 1, 4), (258, 3, 1, 8),
-            (259, 3, 1, 1), (262, 3, 1, 1), (273, 4, 1, 8),
+            (259, 3, 1, 5), (262, 3, 1, 1), (273, 4, 1, 8),
             (277, 3, 1, 1), (279, 4, 1, 16)]
     tags = {t[0]: t for t in base}
     for t in extra_tags:
@@ -463,8 +440,10 @@ def _mini_tiff(extra_tags=()):
 
 def test_tiff_gate_accepts_pure_set_only():
     gate = native._tiff_pure_compatible
-    assert gate(_mini_tiff())
-    assert gate(_mini_tiff([(259, 3, 1, 5)]))          # LZW
+    assert gate(_mini_tiff())                          # LZW
+    assert gate(_mini_tiff([(259, 3, 1, 8)]))          # Deflate
+    assert gate(_mini_tiff([(259, 3, 1, 32773)]))      # PackBits
+    assert not gate(_mini_tiff([(259, 3, 1, 1)]))      # none: pure wins
     assert not gate(_mini_tiff([(259, 3, 1, 7)]))      # JPEG-in-TIFF
     assert not gate(_mini_tiff([(274, 3, 1, 6)]))      # Orientation
     assert not gate(_mini_tiff([(284, 3, 1, 2)]))      # planar
@@ -477,7 +456,6 @@ def test_tiff_gate_accepts_pure_set_only():
     assert gate(_mini_tiff([(262, 3, 1, 2), (277, 3, 1, 3),
                             (279, 4, 1, 48)]))   # 4x4 RGB strip size
     # strip-geometry twins of parse_tiff's loud checks (review find)
-    assert not gate(_mini_tiff([(279, 4, 1, 20)])), "padded strip"
     assert not gate(_mini_tiff([(273, 4, 1, 1 << 20)])), "strip OOB"
     assert not gate(_mini_tiff([(257, 3, 1, 1),
                                 (273, 3, 2, 8 | (16 << 16)),
@@ -534,9 +512,18 @@ def test_jpeg_gate_accepts_pure_set_only():
     assert gate(build_jpeg(_img("grad", 16, 16), progressive=True))
 
 
+def test_tiff_gate_declines_uncompressed_accepts_lzw():
+    """Uncompressed strips are the pure decoder's (a numpy reshape,
+    7-14x faster than libtiff); LZW strips are libtiff's (100-1000x
+    faster than the pure LZW loop)."""
+    img = _img("noise", 12, 10, seed=2)
+    assert not native._tiff_pure_compatible(build_tiff(img))
+    assert native._tiff_pure_compatible(build_tiff(img, compression="lzw"))
+
+
 @_tiff
 def test_tiff_gate_no_regression_on_builder_output():
-    for comp in ("none", "lzw", "deflate", "packbits"):
+    for comp in ("lzw", "deflate", "packbits"):
         data = build_tiff(_img("grad", 9, 7), compression=comp)
         assert native._tiff_pure_compatible(data)
         assert native.decode_tiff_native(data) is not None
@@ -548,41 +535,10 @@ def test_jpeg_native_declines_what_pure_rejects():
     # loud rejection) even though libjpeg could decode some of these
     assert native.decode_jpeg_native(_sof_stream(0xC1)) is None
     with pytest.raises(ValueError):
-        parse_jpeg(_sof_stream(0xC1), prefer_native=True)
+        parse_jpeg(_sof_stream(0xC1))
 
 
 # ------------------------------------------------------- flac (r11)
-
-import contextlib
-import os as _os
-
-
-@contextlib.contextmanager
-def _flag_on():
-    prev = _os.environ.get("TRITON_NATIVE_DECODE")
-    _os.environ["TRITON_NATIVE_DECODE"] = "1"
-    try:
-        yield
-    finally:
-        if prev is None:
-            _os.environ.pop("TRITON_NATIVE_DECODE", None)
-        else:
-            _os.environ["TRITON_NATIVE_DECODE"] = prev
-
-
-@contextlib.contextmanager
-def _flag_off():
-    # explicit "0", not delenv: since r12 an UNSET env defaults ON
-    prev = _os.environ.get("TRITON_NATIVE_DECODE")
-    _os.environ["TRITON_NATIVE_DECODE"] = "0"
-    try:
-        yield
-    finally:
-        if prev is None:
-            _os.environ.pop("TRITON_NATIVE_DECODE", None)
-        else:
-            _os.environ["TRITON_NATIVE_DECODE"] = prev
-
 
 _flacsh = pytest.mark.skipif(not _ST.get("crc32c_shim"),
                              reason="compiled shim unavailable (no gcc?)")
@@ -597,9 +553,8 @@ def test_flac_bit_identical(sub):
     s = (np.full((4099, 2), 7, np.int32) if sub == "constant" else
          rng.integers(-2000, 2000, (4099, 2)).astype(np.int32))
     data = build_flac(s, subframe=sub)
-    pure = parse_flac(data)
-    with _flag_on():
-        nat = parse_flac(data)
+    pure = _pure(parse_flac, data)
+    nat = parse_flac(data)
     assert np.array_equal(pure["samples"], nat["samples"])
     for k in ("sample_rate", "n_channels", "bits_per_sample",
               "n_samples"):
@@ -614,15 +569,9 @@ def test_flac_corrupt_parity_and_crc16_twin():
         rng.integers(-500, 500, (1024, 1)).astype(np.int32),
         subframe="lpc2")
     for cut in (40, len(data) // 2, len(data) - 2):
-        errs = []
-        for on in (False, True):
-            ctx = _flag_on() if on else _flag_off()
-            with ctx:
-                try:
-                    fl.parse_flac(data[:cut])
-                    errs.append("ok")
-                except ValueError as e:
-                    errs.append(str(e))
+        errs = [_outcome(fl.parse_flac, data[:cut]),
+                _pure(_outcome, fl.parse_flac, data[:cut])]
+        assert all(isinstance(e, str) for e in errs), cut
         assert errs[0] == errs[1], (cut, errs)
     # crc16 shim twin over random buffers
     for n in (0, 1, 7, 4096, 70000):
@@ -635,8 +584,8 @@ def test_flac_corrupt_parity_and_crc16_twin():
 
 @_flacsh
 def test_flac_bitflip_fuzz_parity():
-    """Random single-byte corruptions: flag-on and flag-off must agree
-    on accept/reject AND on the decoded samples when both accept."""
+    """Random single-byte corruptions: native and pure must agree on
+    accept/reject AND on the decoded samples when both accept."""
     from go_triton_spark.codec.flac import build_flac, parse_flac
     rng = np.random.default_rng(3)
     base = build_flac(rng.integers(-800, 800, (2048, 2)).astype(np.int32),
@@ -645,18 +594,13 @@ def test_flac_bitflip_fuzz_parity():
         b = bytearray(base)
         i = int(rng.integers(42, len(b)))   # past fLaC+STREAMINFO magic
         b[i] ^= int(rng.integers(1, 256))
-        outcomes = []
-        for on in (False, True):
-            ctx = _flag_on() if on else _flag_off()
-            with ctx:
-                try:
-                    outcomes.append(parse_flac(bytes(b))["samples"])
-                except ValueError:
-                    outcomes.append(None)
-        if outcomes[0] is None or outcomes[1] is None:
-            assert outcomes[0] is None and outcomes[1] is None, i
+        outcomes = [_outcome(parse_flac, bytes(b)),
+                    _pure(_outcome, parse_flac, bytes(b))]
+        if isinstance(outcomes[0], str) or isinstance(outcomes[1], str):
+            assert outcomes[0] == outcomes[1], i
         else:
-            assert np.array_equal(outcomes[0], outcomes[1]), i
+            assert np.array_equal(outcomes[0]["samples"],
+                                  outcomes[1]["samples"]), i
 
 
 # ------------------------------------------------------ adpcm (r11)
@@ -670,14 +614,12 @@ def test_ima_adpcm_bit_identical_and_fuzz():
         nib = rng.integers(0, 16, n, dtype=np.uint8)
         pred = int(rng.integers(-32768, 32768))
         idx = int(rng.integers(0, 89))
-        pure = decode_ima(nib, pred, idx)
+        pure = _pure(decode_ima, nib, pred, idx)
         got = native.ima_decode_native(nib, pred, idx)
         assert got is not None and np.array_equal(pure, got), trial
-        with _flag_on():
-            flagged = decode_ima(nib, pred, idx)
-        assert np.array_equal(pure, flagged), trial
-    # out-of-range index: native declines, pure (and flag-on via the
-    # block parser) still raises its typed error
+        assert np.array_equal(pure, decode_ima(nib, pred, idx)), trial
+    # out-of-range index: native declines, the block parser's pure
+    # check still raises its typed error
     assert native.ima_decode_native(np.zeros(4, np.uint8), 0, 89) is None
 
 
@@ -691,27 +633,17 @@ def test_qoi_bit_identical_and_corrupt_parity():
                        ("flat", 8, 64), ("noise", 1, 1)):
         img = _img(kind, h, w, seed=h)
         data = build_qoi(img)
-        pure = parse_qoi(data)
-        with _flag_on():
-            nat = parse_qoi(data)
-        _same_dict(pure, nat)
+        _same_dict(_pure(parse_qoi, data), parse_qoi(data))
     # palette-ish content exercises INDEX/RUN ops heavily
     pal = rng.integers(0, 256, (4, 3), dtype=np.uint8)
     img = pal[rng.integers(0, 4, (33, 29))]
     data = build_qoi(img)
-    with _flag_on():
-        _same_dict(parse_qoi(data), parse_qoi(data))
+    _same_dict(_pure(parse_qoi, data), parse_qoi(data))
     # corruption: truncation + byte flips must raise identically
     for cut in (20, len(data) // 2, len(data) - 9):
-        errs = []
-        for on in (False, True):
-            ctx = _flag_on() if on else _flag_off()
-            with ctx:
-                try:
-                    parse_qoi(data[:cut] + data[-8:])  # keep end marker
-                    errs.append("ok")
-                except ValueError as e:
-                    errs.append(str(e))
+        bad = data[:cut] + data[-8:]                   # keep end marker
+        errs = [_outcome(parse_qoi, bad), _pure(_outcome, parse_qoi, bad)]
+        assert all(isinstance(e, str) for e in errs), cut
         assert errs[0] == errs[1], (cut, errs)
 
 
@@ -724,38 +656,10 @@ def test_qoi_bitflip_fuzz_parity():
         buf = bytearray(base)
         i = int(rng.integers(14, len(buf) - 8))
         buf[i] ^= int(rng.integers(1, 256))
-        outcomes = []
-        for on in (False, True):
-            ctx = _flag_on() if on else _flag_off()
-            with ctx:
-                try:
-                    outcomes.append(parse_qoi(bytes(buf))["pixels"])
-                except ValueError:
-                    outcomes.append(None)
-        if outcomes[0] is None or outcomes[1] is None:
-            assert outcomes[0] is None and outcomes[1] is None, i
+        outcomes = [_outcome(parse_qoi, bytes(buf)),
+                    _pure(_outcome, parse_qoi, bytes(buf))]
+        if isinstance(outcomes[0], str) or isinstance(outcomes[1], str):
+            assert outcomes[0] == outcomes[1], i
         else:
-            assert np.array_equal(outcomes[0], outcomes[1]), i
-
-
-@_flacsh
-def test_qoi_prefer_native_kwarg_wins_over_env(monkeypatch):
-    """Explicit kwarg beats the env flag for QOI like every other
-    image decoder (r11 review find: it was hardcoded env-only)."""
-    from go_triton_spark.codec.image import parse_image
-    from go_triton_spark.codec.qoi import build_qoi
-
-    calls = []
-    orig = native.qoi_decode_native
-    monkeypatch.setattr(native, "qoi_decode_native",
-                        lambda *a: (calls.append(1), orig(*a))[1])
-    data = build_qoi(np.zeros((4, 4, 3), np.uint8))
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "1")
-    parse_image(data, prefer_native=False)
-    assert not calls, "explicit opt-out must bypass the native path"
-    parse_image(data, prefer_native=True)
-    assert calls
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "0")
-    calls.clear()
-    parse_image(data)
-    assert not calls, "env 0, no kwarg -> pure path"
+            assert np.array_equal(outcomes[0]["pixels"],
+                                  outcomes[1]["pixels"]), i

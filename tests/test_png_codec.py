@@ -133,6 +133,16 @@ def test_garbage_rejected(mutant):
         parse_png(mutant)
 
 
+@pytest.mark.parametrize("cut", [1, 9, 11, 12, 13])
+def test_truncated_iend_rejected(cut):
+    """A file whose trailing IEND chunk is cut short is rejected, not
+    decoded (libpng's simplified API decodes it); the cross-format
+    dedup gates' corrupt rows are cut this way."""
+    data = build_png(np.zeros((12, 7, 3), dtype=np.uint8))
+    with pytest.raises(ValueError):
+        parse_png(data[:-cut])
+
+
 def test_exotic_depth_and_bad_interlace_rejected():
     ihdr16 = _chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 16, 2, 0, 0, 0))
     with pytest.raises(ValueError, match="bit depth"):

@@ -8,6 +8,9 @@ from hypothesis import strategies as st
 from go_triton_spark.codec.image import parse_image, sniff_image_format
 from go_triton_spark.codec.qoi import build_qoi, parse_qoi
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 
 def test_header_golden():
     img = np.zeros((2, 3, 3), dtype=np.uint8)

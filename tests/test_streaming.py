@@ -427,14 +427,19 @@ events:
     for b in range(4):
         _write_events_json(src, _recs(15, start=b * 15))
 
+    # the checkout under test, not whatever tree the cwd or an
+    # installed package would resolve
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ,
                TRITON_CONFIG=str(cfgfile),
                TRITON_ROOT=str(tmp_path),
-               TRITON_CLIENT="archive")
+               TRITON_CLIENT="archive",
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (root, os.environ.get("PYTHONPATH")) if p))
     proc = subprocess.Popen(
         [_sys.executable, "-m", "go_triton_spark.cli", "store",
          "--stream", "events"],
-        env=env, cwd="/root/repo",
+        env=env, cwd=root,
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
     archive_dir = tmp_path / "archive" / "stream=events"
 

@@ -23,6 +23,9 @@ from go_triton_spark.codec.gif import build_gif
 from go_triton_spark.codec.png import build_png, parse_png
 from go_triton_spark.codec.vp8l import build_webp, parse_webp
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 
 def _try_cdll(*names):
     for name in names:
@@ -138,6 +141,26 @@ def test_libwebp_streams_decode_here(kind):
         data = _libwebp_encode_lossless(rgba)
         r = parse_webp(data)
         assert np.array_equal(r["pixels"], rgb), (kind, h, w)
+
+
+@_webp_only
+def test_libwebp_stream_with_far_plane_codes():
+    """A libwebp stream whose color-transform tile image copies with a
+    plane code above 96 (the window's far corners). Those codes once
+    mapped to the wrong neighbor, turning one 8x8 block's red channel
+    off by one; the random-seeded test above hit it only on some
+    hash seeds."""
+    rng = np.random.default_rng(56865)
+    for _ in range(4):
+        h, w = int(rng.integers(1, 200)), int(rng.integers(1, 200))
+        rgb = (np.cumsum(rng.integers(-3, 4, (h, w, 3)), axis=1)
+               % 256).astype(np.uint8)
+        if (h, w) == (164, 76):           # the stream that needs them
+            break
+    assert (h, w) == (164, 76)
+    data = _libwebp_encode_lossless(
+        np.dstack([rgb, np.full((h, w), 255, np.uint8)]))
+    assert np.array_equal(parse_webp(data)["pixels"], rgb)
 
 
 # --------------------------------------------------------------- libpng

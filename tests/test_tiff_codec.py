@@ -20,6 +20,9 @@ from go_triton_spark.codec.tiff import (build_tiff, packbits_decode,
                                         packbits_encode, parse_tiff,
                                         tiff_lzw_decode, tiff_lzw_encode)
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 
 def _pack_msb(codes, widths):
     """MSB-first bit packing — the TIFF figure, by hand."""
@@ -187,8 +190,6 @@ def test_gate_corpus_corrupt_always_rejected_and_decodes_exact():
     in the 113-period (cycling compressions, predictor, endianness)
     must REJECT its truncated payload; clean payloads decode to the
     closed form."""
-    import sys
-    sys.path.insert(0, "/root/repo")
     from go_triton_spark.operators.multimodal import _tiff_gate_pixels
 
     comps = ("none", "lzw", "deflate", "packbits")

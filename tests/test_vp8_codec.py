@@ -23,6 +23,9 @@ from go_triton_spark.codec.vp8 import (VP8Error, _Bool, _BoolEnc,
                                        decode_vp8, parse_vp8)
 from go_triton_spark.codec.vp8l import parse_webp
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 
 # --- libwebp via ctypes ---------------------------------------------------
 

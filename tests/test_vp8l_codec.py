@@ -18,6 +18,9 @@ from hypothesis import strategies as st
 from go_triton_spark.codec.vp8l import (_DIST_MAP, build_vp8l, build_webp,
                                         parse_vp8l, parse_webp)
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 
 class _W:
     """LSB-first bit writer, independent of the codec's _BitWriter."""
@@ -117,11 +120,12 @@ def test_hand_packed_code_length_coded_lz77_golden():
 
 def test_distance_map_matches_spec_listing():
     """Pin the generated plane-code table against the specification's
-    listing: the first 96 codes are transcribed here VERBATIM from the
-    published table (rows 1-12), and global invariants hold — 120
-    unique half-plane entries sorted by squared distance with a clean
-    d^2 <= 74 cutoff."""
-    spec_first_96 = (
+    listing, transcribed here VERBATIM (all 120 codes), and its global
+    invariants: every half-plane cell of the dy 0..7, dx -7..8 window,
+    sorted by squared distance. Codes 97-120 were once generated as
+    the 120 nearest neighbors instead ((0, 8) first), which decoded
+    libwebp streams that use those codes to wrong pixels."""
+    spec = (
         (0, 1), (1, 0), (1, 1), (-1, 1), (0, 2), (2, 0), (1, 2), (-1, 2),
         (2, 1), (-2, 1), (2, 2), (-2, 2), (0, 3), (3, 0), (1, 3), (-1, 3),
         (3, 1), (-3, 1), (2, 3), (-2, 3), (3, 2), (-3, 2), (0, 4), (4, 0),
@@ -134,13 +138,14 @@ def test_distance_map_matches_spec_listing():
         (0, 7), (7, 0), (1, 7), (-1, 7), (5, 5), (-5, 5), (7, 1), (-7, 1),
         (4, 6), (-4, 6), (6, 4), (-6, 4), (2, 7), (-2, 7), (7, 2), (-7, 2),
         (3, 7), (-3, 7), (7, 3), (-7, 3), (5, 6), (-5, 6), (6, 5), (-6, 5),
+        (8, 0), (4, 7), (-4, 7), (7, 4), (-7, 4), (8, 1), (8, 2), (6, 6),
+        (-6, 6), (8, 3), (5, 7), (-5, 7), (7, 5), (-7, 5), (8, 4), (6, 7),
+        (-6, 7), (7, 6), (-7, 6), (8, 5), (7, 7), (-7, 7), (8, 6), (8, 7),
     )
-    assert _DIST_MAP[:96] == spec_first_96
-    assert len(_DIST_MAP) == 120
+    assert _DIST_MAP == spec
     assert len(set(_DIST_MAP)) == 120
     for x, y in _DIST_MAP:
-        assert 0 <= y <= 8 and -8 <= x <= 8
-        assert x * x + y * y <= 74
+        assert 0 <= y <= 7 and -7 <= x <= 8
         if y == 0:
             assert x > 0
     d2 = [x * x + y * y for x, y in _DIST_MAP]
@@ -287,8 +292,6 @@ def test_gate_corpus_corrupt_always_rejected_and_decodes_exact():
     in the 109-period (cycling all five transforms, predictor modes,
     and cache on/off) must REJECT its truncated payload, and every
     clean payload must decode to the closed-form pixels."""
-    import sys
-    sys.path.insert(0, "/root/repo")
     from go_triton_spark.operators.multimodal import _webp_gate_pixels
 
     variants = ("none", "sub_green", "predictor", "color", "palette")

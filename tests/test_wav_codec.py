@@ -13,6 +13,9 @@ import pytest
 
 from go_triton_spark.codec.wav import build_wav, parse_wav
 
+# the pure decoders, as on a host without the native libraries
+pytestmark = pytest.mark.usefixtures("pure_decoders")
+
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "tone441.wav")
 
 
