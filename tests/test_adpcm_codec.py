@@ -5,6 +5,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from go_triton_spark.codec import native as _native
 from go_triton_spark.codec.adpcm import (STEP_TABLE, build_ima_wav,
                                          decode_ima, decode_ima_blocks,
                                          encode_ima)
@@ -85,3 +86,24 @@ def test_encode_decode_tracks_input(seed, idx0):
     # worst tracked error stays under the biggest step the encoder
     # visited plus slack for the attack transient
     assert np.abs(dec - sig).max() < 4000
+
+
+# the real shim loader, captured before the pure_decoders fixture
+# replaces it for each test
+_SHIM_LOADER = _native._crc_shim_lib
+
+
+def test_decode_ima_use_native_arg_parity(monkeypatch):
+    """decode_ima has no use_native argument any more: it takes the
+    compiled shim when it loads and the pure loop otherwise. Both legs
+    must give the same samples bit-for-bit."""
+    rng = np.random.default_rng(7)
+    nibbles = rng.integers(0, 16, size=257, dtype=np.uint8)
+    pure = decode_ima(nibbles, 100, 30)
+    assert _native.ima_decode_native(nibbles, 100, 30) is None
+    monkeypatch.setattr(_native, "_crc_shim_lib", _SHIM_LOADER)
+    shim = _native.ima_decode_native(nibbles, 100, 30)
+    # the shim may be absent on this host; then only the pure leg runs
+    if shim is not None:
+        assert np.array_equal(pure, shim)
+    assert np.array_equal(pure, decode_ima(nibbles, 100, 30))
