@@ -329,7 +329,7 @@ def parse_tiff(data: bytes) -> dict:
     # libtiff ignores Predictor=2 on none/packbits files and this
     # decoder matches that reference behavior.
     if predictor == 2 and comp in (_COMP_LZW, _COMP_DEFLATE):
-        px = np.cumsum(px.astype(np.int64), axis=1).astype(np.uint8)
+        px = np.cumsum(px, axis=1, dtype=np.uint8)  # wraps mod 256
 
     if photo in (0, 1):                         # grayscale
         if spp != 1:

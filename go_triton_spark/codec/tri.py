@@ -21,9 +21,11 @@ from __future__ import annotations
 
 import datetime as _dt
 import re
+from collections.abc import Iterator
 from dataclasses import dataclass
 
-from go_triton_spark.codec.msgpack_codec import MsgpackError, packb, unpackb
+from go_triton_spark.codec.msgpack_codec import (MsgpackError, packb,
+                                               unpack_stream)
 from go_triton_spark.codec.snappy_codec import SnappyError, frame_compress, frame_decompress
 
 _KEY_RE = re.compile(r"(?P<day>\d{8})/(?P<stream>.+)-(?P<ts>\d+)\.tri$")
@@ -97,6 +99,26 @@ def write_tri_bytes(records: list[dict], flush_bytes: int = 1024 * 1024) -> byte
     return bytes(out)
 
 
+def unpack_maps(body: bytes, on_corrupt: str = "skip") -> Iterator[dict]:
+    """Yield the msgpack maps concatenated in ``body``.
+
+    The record loop shared by every concatenated-maps reader (.tri
+    bodies, ``kinesis_sim`` ``.msgpack`` shard files). ``on_corrupt``:
+    "skip" drops non-map objects and stops at the first undecodable
+    byte (S5: no resync inside a concatenated stream); "raise" raises
+    ``MsgpackError`` on either.
+    """
+    try:
+        for obj in unpack_stream(body):
+            if isinstance(obj, dict):
+                yield obj
+            elif on_corrupt != "skip":
+                raise MsgpackError(f"non-map record: {type(obj)}")
+    except MsgpackError:
+        if on_corrupt != "skip":
+            raise
+
+
 def read_tri_bytes(data: bytes, on_corrupt: str = "skip") -> list[dict]:
     """Decode a .tri file body into record maps.
 
@@ -109,18 +131,4 @@ def read_tri_bytes(data: bytes, on_corrupt: str = "skip") -> list[dict]:
         if on_corrupt == "skip":
             return []
         raise
-    records: list[dict] = []
-    pos = 0
-    n = len(body)
-    while pos < n:
-        try:
-            obj, pos = unpackb(body, pos)
-        except MsgpackError:
-            if on_corrupt == "skip":
-                break  # cannot resync inside a concatenated stream
-            raise
-        if isinstance(obj, dict):
-            records.append(obj)
-        elif on_corrupt != "skip":
-            raise MsgpackError(f"non-map record: {type(obj)}")
-    return records
+    return list(unpack_maps(body, on_corrupt))

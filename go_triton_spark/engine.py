@@ -26,8 +26,7 @@ from go_triton_spark.streaming.store import StorePipeline
 class TritonEngine:
     def __init__(self, spark: SparkSession, root: str,
                  config: str | dict[str, StreamConfig] | None = None,
-                 client: str = "archive",
-                 archive_format: str = "parquet"):
+                 client: str = "archive"):
         if "-" in client:
             # the archive key delimiter (triton.go:224-227, archive.go:60-63)
             raise ValueError("client name cannot contain '-' (key delimiter)")
@@ -40,10 +39,7 @@ class TritonEngine:
             self.configs = load_config(config)
         else:
             self.configs = {}
-        # archive_format: ArchiveStore's manifest-table seam ("delta"/
-        # "iceberg" on a cluster with the connector; default parquet)
-        self.archive = ArchiveStore(spark, os.path.join(root, "archive"),
-                                    table_format=archive_format)
+        self.archive = ArchiveStore(spark, os.path.join(root, "archive"))
         self.checkpoint_root = os.path.join(root, "checkpoints")
         self._pipelines: dict[str, StorePipeline] = {}
         self._monitor = None

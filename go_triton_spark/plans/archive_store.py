@@ -210,36 +210,15 @@ def _drop_tombstone(path: str) -> None:
 
 
 class ArchiveStore:
-    """Batch-side archive table: ingest + replay ("cat").
+    """Batch-side archive table: ingest + replay ("cat") over the
+    path-based parquet layout above — listing-level pruning,
+    rename-based compaction, rmtree expiry."""
 
-    ``table_format`` (round-6 seam): ``"parquet"`` (default) keeps the
-    path-based layout above — listing-level pruning, rename-based
-    compaction, rmtree expiry. Any other value (``"delta"``,
-    ``"iceberg"``) routes writes and reads through
-    ``format(table_format)`` on the SAME root so a cluster deployment
-    with the connector on its classpath gets a manifest table —
-    snapshot-isolated reads, no rename-swap residue on object stores
-    (SCALE.md round-5 compaction note) — without touching any
-    operator. Maintenance (compact/expire) is engine-specific there
-    (OPTIMIZE / rewrite_data_files / VACUUM) and raises with a
-    pointer rather than pretending rename semantics apply.
-    """
-
-    def __init__(self, spark: SparkSession, root: str,
-                 table_format: str = "parquet"):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.table_format = table_format
         # stream -> (parquet_schema_key, data schema); see cat
         self._schema_cache: dict[str, tuple[tuple, StructType]] = {}
-
-    def _require_parquet(self, op: str) -> None:
-        if self.table_format != "parquet":
-            raise NotImplementedError(
-                f"{op} is filesystem-rename based and only applies to the "
-                f"parquet layout; for {self.table_format!r} use the table "
-                f"format's own maintenance (Delta OPTIMIZE/VACUUM, Iceberg "
-                f"rewrite_data_files/expire_snapshots)")
 
     # ------------------------------------------------------------- write
 
@@ -266,14 +245,12 @@ class ArchiveStore:
             # narrow->wide convert per file)
             .withColumn("_archive_sort", F.lit(ts).cast("long"))
         )
-        if mode != "append" or self.table_format != "parquet" \
-                or "://" in self.root:
-            # overwrite / manifest formats / object stores: the
-            # engine-native writer owns the commit protocol
+        if mode != "append" or "://" in self.root:
+            # overwrite / object stores: the engine-native writer owns
+            # the commit protocol
             (out.write.mode(mode)
                 .partitionBy(*_PARTITION_COLS)
-                .format(self.table_format)
-                .save(self.root))
+                .parquet(self.root))
             return
         # CONCURRENT-APPEND SAFETY on local parquet roots (r10
         # expire-compact matrix find): two batch appends to the SAME
@@ -392,9 +369,8 @@ class ArchiveStore:
           pruning walk below already names the ``client=`` dir of
           every part file the scan reads; when that is at most one
           client, no row can name a second, so the guard costs no
-          Spark job. Only a listing with >1 client, a URI root or a
-          manifest ``table_format`` runs the row-level
-          ``distinct().limit(2)`` check.
+          Spark job. Only a listing with >1 client or a URI root runs
+          the row-level ``distinct().limit(2)`` check.
         - manifest order (S15/S16): orderBy(date, _archive_sort) when
           ``ordered``; skip it for analytical consumers that don't need
           replay fidelity (saves a global sort)
@@ -436,15 +412,6 @@ class ArchiveStore:
         end_date = coerce_date(end_date) if end_date else start_date
         wanted = {d.strftime("%Y%m%d")
                   for d in list_dates_from_range(start_date, end_date)}
-        if self.table_format != "parquet":
-            # manifest table (round-6 seam): the format's own log
-            # handles file listing, partition pruning, and snapshot
-            # isolation — the manual listing/pruning/retry machinery
-            # below exists precisely because plain parquet paths lack
-            # those. Filters still prune via the manifest's stats.
-            src = self.spark.read.format(self.table_format).load(self.root)
-            return self._filter_cat(src, stream, start_date, end_date,
-                                    client, ordered)
         if not os.path.isdir(self.root) and "://" not in self.root:
             raise FileNotFoundError(
                 f"archive root {self.root!r} does not exist — nothing has "
@@ -726,9 +693,7 @@ class ArchiveStore:
         subtree (all clients), date dirs whose mtime is within
         ``max_age_days`` — residue only exists in partitions the
         crashed writer was touching, so the walk is bounded by recent
-        activity, not archive lifetime. Local roots only; object-store
-        deployments route to the manifest table_format seam, whose log
-        never lists uncommitted files. Quarantine name =
+        activity, not archive lifetime. Local roots only. Quarantine name =
         '.<name>.crash': the dot prefix hides it from Spark listings
         AND the changed suffix keeps it out of compact's *.parquet
         enumeration. Renames, never deletes — an operator can inspect
@@ -812,8 +777,8 @@ class ArchiveStore:
                     start_date: _dt.date, end_date: _dt.date,
                     client: str | None, ordered: bool,
                     listed: "set[str] | None" = None) -> DataFrame:
-        """Shared cat tail: range/stream/client filters, the S14 guard,
-        replay ordering — identical for path and manifest layouts.
+        """Cat tail: range/stream/client filters, the S14 guard,
+        replay ordering.
         ``listed``: the ``client=`` dirs of every file ``src`` scans,
         when known; at most one of them answers the guard without a
         job."""
@@ -879,16 +844,13 @@ class ArchiveStore:
         ``compact`` safe to run as a cron next to a live ``store``
         with no coordination.
         """
-        self._require_parquet("compact")
         if "://" in self.root:
             # rename-based swaps cannot be atomic on object stores
-            # (S3 rename = copy+delete, a visible window) — the honest
-            # answer is the manifest seam, not a racy emulation
+            # (S3 rename = copy+delete, a visible window): refuse
+            # rather than emulate them racily
             raise NotImplementedError(
-                "compact is rename-based and needs a real filesystem; "
-                "on an object store use table_format='delta'/'iceberg' "
-                "(ArchiveStore seam) and the format's OPTIMIZE / "
-                "rewrite_data_files")
+                "compact is rename-based and needs a real filesystem, "
+                f"not the URI root {self.root!r}")
         date = coerce_date(date)
         slice_dir = os.path.join(
             self.root, f"stream={stream}", f"client={client}",
@@ -1208,25 +1170,6 @@ class ArchiveStore:
         old_dir = os.path.join(parent, f".{base}._compact_old.{token}")
         self._sweep_stale_staging(parent, base)
 
-        def _audit(msg):
-            # TRITON_COMPACT_AUDIT=1 traces the swap sequence with
-            # monotonic timestamps + inodes — the instrument that
-            # localized the r10 torn-enumeration race when correlated
-            # against tools/stress_race_matrix.py's watcher timeline.
-            # Off (the default) it is a single env check per call.
-            if not os.environ.get("TRITON_COMPACT_AUDIT"):
-                return
-            import time as _t
-
-            def _ino(p):
-                try:
-                    return os.stat(p).st_ino
-                except OSError:
-                    return -1
-            print(f"AUDIT t={_t.monotonic():.6f} {msg} "
-                  f"hour_ino={_ino(hour_dir)} tmp_ino={_ino(tmp_dir)}",
-                  flush=True)
-
         def _drop_staging_if_expired():
             # `expire` dropped the date mid-rewrite, and the write's
             # mkdirs may have re-created ``date=...`` around this
@@ -1235,7 +1178,6 @@ class ArchiveStore:
             if not os.path.isdir(hour_dir):
                 shutil.rmtree(tmp_dir, ignore_errors=True)
 
-        _audit("pre-write")
         # read PINNED to the entry listing (r12 ingest-compact soak):
         # reading the DIRECTORY let the scan pick up part files a
         # concurrent backfill ingest landed after `files` was taken,
@@ -1250,7 +1192,6 @@ class ArchiveStore:
         except Exception:
             _drop_staging_if_expired()
             raise
-        _audit("post-write")
 
         def _rescue_stragglers(doomed: str) -> int:
             # A concurrent backfill ingest (ingest_dataframe with an
@@ -1346,9 +1287,7 @@ class ArchiveStore:
             # atomic exchange: the partition is NEVER absent; the
             # old files (now under the hidden tmp name) vanish only
             # from readers' pre-swap path lists — one retry heals
-            _audit("post-exchange pre-rmtree")
             _discard_doomed(tmp_dir)
-            _audit("post-rmtree")
         else:
             # fallback pair of renames: a listing in the gap can
             # see the hour briefly absent
@@ -1385,7 +1324,6 @@ class ArchiveStore:
         reference has no retention at all (archives accumulate in S3
         forever); this is north-star data-lifecycle surface.
         """
-        self._require_parquet("expire")
         slice_dir = os.path.join(
             self.root, f"stream={stream}", f"client={client}")
         cutoff = coerce_date(keep_after).strftime("%Y%m%d")

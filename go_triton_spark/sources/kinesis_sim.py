@@ -25,10 +25,11 @@ reference (SURVEY §2.1):
   ``latestOffset`` and starts from 0, like a child shard read from
   TRIM_HORIZON.
 
-Corrupt lines are skipped (S5 semantics, stream_reader.go:174-194).
-For production Kinesis use a connector (see ``stream_source.py``); this
-source exists so every pipeline above it can be exercised end-to-end
-with real shard-parallel, offset-checkpointed reads.
+Corrupt lines are skipped (S5 semantics, stream_reader.go:174-194);
+each record is read into the declared schema by ``codec.decode.coerce``.
+For production Kinesis use ``source: kinesis`` (``kinesis_boto3.py``);
+this source exists so every pipeline above it can be exercised
+end-to-end with real shard-parallel, offset-checkpointed reads.
 """
 
 from __future__ import annotations
@@ -55,19 +56,6 @@ def _list_shards(root: str) -> list[str]:
 def _shard_files(root: str, shard: str, ext: str = ".jsonl") -> list[str]:
     d = os.path.join(root, shard)
     return sorted(f for f in os.listdir(d) if f.endswith(ext))
-
-
-def _coerce(v, dt: T.DataType):
-    import datetime as _dt
-    if v is None:
-        return None
-    if isinstance(dt, T.TimestampType) and isinstance(v, str):
-        return _dt.datetime.fromisoformat(v.replace("Z", "+00:00"))
-    if isinstance(dt, (T.LongType, T.IntegerType)):
-        return int(v)
-    if isinstance(dt, (T.DoubleType, T.FloatType)):
-        return float(v)
-    return v
 
 
 class _ShardSlice(InputPartition):
@@ -113,17 +101,18 @@ class KinesisSimStreamReader(DataSourceStreamReader):
         return out or [_ShardSlice(self.root, "", 0, 0)]
 
     def read(self, part: _ShardSlice) -> Iterator[tuple]:
+        from go_triton_spark.codec.decode import coerce
+
         if not part.shard:
             return
         fields = self.schema_.fields
+        ctx = [{"shard": part.shard, "field": f.name} for f in fields]
         names = _shard_files(part.root, part.shard, self.ext)
         for fname in names[part.begin:part.end]:
             fpath = os.path.join(part.root, part.shard, fname)
             for rec in self._records(fpath):
-                if not isinstance(rec, dict):
-                    continue
-                yield tuple(
-                    _coerce(rec.get(f.name), f.dataType) for f in fields)
+                yield tuple(coerce(rec.get(f.name), f.dataType, context=c)
+                            for f, c in zip(fields, ctx))
 
     def _records(self, fpath: str):
         if self.fmt == "jsonl":
@@ -133,24 +122,18 @@ class KinesisSimStreamReader(DataSourceStreamReader):
                     if not line:
                         continue
                     try:
-                        yield json.loads(line)
+                        rec = json.loads(line)
                     except ValueError:
                         continue  # corrupt-skip (S5)
+                    if isinstance(rec, dict):
+                        yield rec
         else:
             # concatenated msgpack maps: the reference wire format
             # (decode per stream_reader.go:173; skip semantics :174-194)
-            from go_triton_spark.codec.msgpack_codec import (
-                MsgpackError, unpackb)
+            from go_triton_spark.codec.tri import unpack_maps
 
             with open(fpath, "rb") as fh:
-                data = fh.read()
-            pos = 0
-            while pos < len(data):
-                try:
-                    rec, pos = unpackb(data, pos)
-                except MsgpackError:
-                    break  # trailing undecodable bytes: skip rest (S5)
-                yield rec
+                yield from unpack_maps(fh.read())
 
     def commit(self, end: dict) -> None:
         pass

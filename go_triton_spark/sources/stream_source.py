@@ -22,11 +22,8 @@ Streaming's equivalents, selected by ``StreamConfig.options['source']``:
                LATEST / TRIM_HORIZON / AFTER_SEQUENCE_NUMBER offsets in
                the query checkpoint. boto3 is imported lazily; tests
                inject a scripted fake service via ``client_factory``.
-- ``kinesis_connector``: adapter point for a third-party JVM connector
-               (e.g. spark-sql-kinesis) when one is on the classpath;
-               maps the reference's start positions onto the
-               connector's ``startingposition`` and raises with
-               guidance if absent.
+               Its msgpack payloads are read into the declared schema
+               by ``codec.decode`` (StorePipeline).
 
 Start-position semantics (S2/S7): for file sources, "TRIM_HORIZON" ==
 process existing files; "LATEST" == a REAL backlog skip — the files
@@ -185,23 +182,4 @@ def open_stream(spark: SparkSession, cfg: StreamConfig,
             if cfg.options.get(opt):
                 reader = reader.option(opt, str(cfg.options[opt]))
         return reader.load()
-    if source == "kinesis_connector":
-        fmt = cfg.options.get("connector_format", "aws-kinesis")
-        start = {
-            "LATEST": "latest",
-            "TRIM_HORIZON": "trim_horizon",
-        }.get(cfg.options.get("start_position", "TRIM_HORIZON"), "trim_horizon")
-        try:
-            return (spark.readStream.format(fmt)
-                    .option("streamName", cfg.stream_name)
-                    .option("region", cfg.region or "us-west-1")
-                    .option("startingposition", start)
-                    .load())
-        except Exception as e:  # connector jar absent in this environment
-            raise NotImplementedError(
-                "No Kinesis connector on the classpath. Deploy with a "
-                "Structured Streaming Kinesis connector (e.g. "
-                "spark-streaming-sql-kinesis / Kinesis Data Analytics), or "
-                "bridge Kinesis->files (Firehose) and use source=file. "
-                f"Underlying error: {e}") from e
     raise ValueError(f"unknown stream source type: {source!r}")

@@ -1,22 +1,28 @@
-"""``spark.read.format("tri")`` — a registered Python DataSource for
-.tri archives (PySpark 4 DataSource API).
+"""``spark.read.format("tri")`` / ``df.write.format("tri")`` — the
+package's .tri archive reader and writer, a registered Python
+DataSource (PySpark 4 DataSource API).
 
-Where ``tri_source.read_tri`` composes binaryFile + mapInPandas, this
-packages the same codec as a first-class format: schema declared with
-``.schema(...)``, one input partition per archive file (the reference's
-unit of parallelism — one S3 object, triton/archive.go:27-43), and a
-streaming mode that tails a directory in archive-key order, the
-file-backed stand-in for a Kinesis shard iterator (SURVEY S1/S2: each
-new file plays the role of a GetRecords batch; the stream offset is the
-count of files consumed, persisted in the query checkpoint exactly
-where the reference kept (shard -> seq_num) rows in SQL,
-triton/checkpoint.go:27-76).
+The schema is declared with ``.schema(...)`` (.tri records are
+schemaless msgpack maps; ``codec.decode.coerce`` reads each one into
+it). A batch read makes one input partition per archive file (the
+reference's unit of parallelism — one S3 object,
+triton/archive.go:27-43). The streaming mode tails a directory in
+archive-key order, the file-backed stand-in for a Kinesis shard
+iterator (SURVEY S1/S2: each new file plays the role of a GetRecords
+batch; the stream offset is the count of files consumed, persisted in
+the query checkpoint exactly where the reference kept
+(shard -> seq_num) rows in SQL, triton/checkpoint.go:27-76).
+
+A declared schema may name the key columns ``_archive_path``,
+``_archive_date`` (``YYYYMMDD``) and ``_archive_sort`` (the key's
+unix-ts suffix); they are filled from each file's key for replay-order
+fidelity (SURVEY S15). Paths are local filesystem paths.
 
 Registration is per-session: ``register_tri_datasource(spark)``. The
 decode runs in the Python data-source worker (Arrow-batched back to the
-JVM); at 100 TB this is scan -> narrow decode with no shuffle, same as
-the mapInPandas path. Canonical storage remains Parquet — this format
-exists for legacy .tri data at the edges.
+JVM); at 100 TB this is scan -> narrow decode with no shuffle.
+Canonical storage remains Parquet — this format exists for legacy .tri
+data at the edges; re-write it with ``archive_store.ingest_dataframe``.
 """
 
 from __future__ import annotations
@@ -40,28 +46,49 @@ from pyspark.sql import types as T
 def _list_tri_files(path: str) -> list[str]:
     """All .tri files under ``path``, in (date, sort-value) archive
     order (triton/store_reader.go:36-52 semantics: lexicographic key
-    order equals chronological order for the reference's key grammar)."""
+    order equals chronological order for the reference's key grammar).
+    Hidden names (``.``/``_`` prefix: staged writes, job residue) are
+    skipped, as Hadoop file listings do."""
     out = []
-    for root, _dirs, files in os.walk(path):
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
         for f in files:
-            if f.endswith(".tri"):
+            if f.endswith(".tri") and not f.startswith((".", "_")):
                 out.append(os.path.join(root, f))
     return sorted(out)
+
+
+def _key_columns(fpath: str) -> dict:
+    """The ``_archive_*`` columns of one file, parsed from its key
+    (``.../YYYYMMDD/<stream>-<client>-<unixts>.tri``); a file whose
+    name does not parse keeps its path and nulls."""
+    from go_triton_spark.codec.tri import parse_key_name
+
+    try:
+        ak = parse_key_name("/".join(fpath.split(os.sep)[-2:]))
+        date, sort = ak.t.strftime("%Y%m%d"), ak.sort_value
+    except ValueError:
+        date = sort = None
+    return {"_archive_path": fpath, "_archive_date": date,
+            "_archive_sort": sort}
 
 
 def _decode_file(fpath: str, schema: T.StructType) -> Iterator[tuple]:
     """Decode one archive into schema-ordered tuples (corrupt-skip)."""
     # local imports: this body runs inside the Python data-source
     # worker, which pickles the reader object by value
+    from go_triton_spark.codec.decode import coerce
     from go_triton_spark.codec.tri import read_tri_bytes
-    from go_triton_spark.sources.tri_source import _to_pandas_cell
 
+    key_cols = {k: v for k, v in _key_columns(fpath).items()
+                if k in schema.names}
+    ctx = [{"file": fpath, "field": f.name} for f in schema.fields]
     with open(fpath, "rb") as fh:
         data = fh.read()
     for rec in read_tri_bytes(data, on_corrupt="skip"):
-        yield tuple(
-            _to_pandas_cell(rec.get(f.name), f.dataType) for f in schema.fields
-        )
+        rec.update(key_cols)
+        yield tuple(coerce(rec.get(f.name), f.dataType, context=c)
+                    for f, c in zip(schema.fields, ctx))
 
 
 class _TriFilePartition(InputPartition):

@@ -5,10 +5,11 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from go_triton_spark.codec.tri import write_tri_bytes
 from go_triton_spark.plans.archive_store import ArchiveStore, list_dates_from_range
-from go_triton_spark.sources.tri_source import read_tri
+from go_triton_spark.sources.tri_datasource import register_tri_datasource
 from go_triton_spark.types import EVENTS_SCHEMA
 
 UTC = dt.timezone.utc
@@ -55,52 +56,6 @@ def test_cat_date_pruning(spark, store, sf_dir):
     assert "PartitionFilters" in plan
 
 
-def test_table_format_seam_parquet_roundtrip_and_guards(spark, tmp_path, sf_dir):
-    """Round-6 manifest-format seam: table_format='parquet' (explicit)
-    must behave byte-for-byte like the default path layout — same
-    partition dirs, same cat results, pruning intact — proving the
-    format hook disturbs nothing; non-parquet formats route
-    maintenance to the table format's own tooling (guarded), and cat
-    reads through format(...).load() (exercised via the parquet
-    format name itself on the manifest branch)."""
-    ev = _events(spark, sf_dir).limit(20)
-    when = dt.datetime(2015, 6, 30, 7, tzinfo=UTC)
-
-    plain = ArchiveStore(spark, str(tmp_path / "a"))
-    seamed = ArchiveStore(spark, str(tmp_path / "b"), table_format="parquet")
-    for st in (plain, seamed):
-        st.ingest_dataframe(ev, "events", "archive", when=when)
-    # identical partition layout on disk
-    rel = "stream=events/client=archive/date=20150630/hour=07"
-    assert os.path.isdir(os.path.join(str(tmp_path / "a"), rel))
-    assert os.path.isdir(os.path.join(str(tmp_path / "b"), rel))
-    got_a = sorted(r[0] for r in plain.cat("events", when.date())
-                   .select("event_id").collect())
-    got_b = sorted(r[0] for r in seamed.cat("events", when.date())
-                   .select("event_id").collect())
-    assert got_a == got_b and len(got_b) == 20
-    # the default path keeps its listing-level pruning
-    plan = (seamed.cat("events", when.date())._jdf.queryExecution()
-            .executedPlan().toString())
-    assert "PartitionFilters" in plan
-
-    # the manifest read branch runs format(...).load(root) + the shared
-    # filter tail; drive it with parquet standing in for delta/iceberg
-    # (no connector jars in this sandbox — the branch IS the seam)
-    m = ArchiveStore(spark, str(tmp_path / "b"), table_format="parquet")
-    src = spark.read.format("parquet").load(str(tmp_path / "b"))
-    out = m._filter_cat(src, "events", when.date(), when.date(),
-                        "archive", ordered=True)
-    assert sorted(r[0] for r in out.select("event_id").collect()) == got_b
-
-    # maintenance on a manifest format routes to that format's tooling
-    d = ArchiveStore(spark, str(tmp_path / "b"), table_format="delta")
-    with pytest.raises(NotImplementedError, match="OPTIMIZE"):
-        d.compact("events", when.date(), "archive")
-    with pytest.raises(NotImplementedError, match="rewrite_data_files"):
-        d.expire("events", "archive", when.date())
-
-
 def test_cat_uri_root_prunes_at_listing_level(spark, tmp_path, sf_dir):
     """Round-6: the listing-level date pruning must also work on URI
     roots (object stores) via the Hadoop FS listing — a one-day replay
@@ -120,9 +75,9 @@ def test_cat_uri_root_prunes_at_listing_level(spark, tmp_path, sf_dir):
 
 def test_compact_refuses_uri_root_with_pointer(spark, tmp_path):
     """Rename swaps cannot be atomic on object stores; compact on a
-    URI root must refuse loudly and point at the manifest seam."""
+    URI root must refuse loudly, naming the root it refused."""
     st = ArchiveStore(spark, "file://" + str(tmp_path / "uri_c"))
-    with pytest.raises(NotImplementedError, match="OPTIMIZE"):
+    with pytest.raises(NotImplementedError, match="real filesystem.*uri_c"):
         st.compact("events", dt.date(2015, 6, 30), "archive")
 
 
@@ -233,25 +188,19 @@ def test_cat_client_guard_from_listing(spark, store, sf_dir, monkeypatch):
 
 def test_cat_client_guard_row_level_on_uri_and_manifest_roots(
         spark, tmp_path, sf_dir, monkeypatch):
-    """Where no file listing exists (a URI root's date-dir read, a
-    manifest table_format's own log), the guard keeps the row-level
-    check: listed is None and two clients still raise."""
+    """Where no file listing exists (a URI root's date-dir read), the
+    guard keeps the row-level check: listed is None and two clients
+    still raise."""
     ev = _events(spark, sf_dir).limit(3)
     when = dt.datetime(2015, 6, 30, 4, tzinfo=UTC)
-    # a format name other than "parquet" that still reads parquet
-    # stands in for delta/iceberg (no connector jars here)
-    manifest = "org.apache.spark.sql.execution.datasources.parquet." \
-        "ParquetFileFormat"
-    for st in (ArchiveStore(spark, "file://" + str(tmp_path / "uri")),
-               ArchiveStore(spark, str(tmp_path / "m"),
-                            table_format=manifest)):
-        seen = _spy_listed(monkeypatch, st)
-        st.ingest_dataframe(ev, "events", "client_a", when=when)
-        assert st.cat("events", when.date()).count() == 3
-        st.ingest_dataframe(ev, "events", "client_b", when=when)
-        with pytest.raises(ValueError, match="Multiple clients"):
-            st.cat("events", when.date())
-        assert seen == [None, None]
+    st = ArchiveStore(spark, "file://" + str(tmp_path / "uri"))
+    seen = _spy_listed(monkeypatch, st)
+    st.ingest_dataframe(ev, "events", "client_a", when=when)
+    assert st.cat("events", when.date()).count() == 3
+    st.ingest_dataframe(ev, "events", "client_b", when=when)
+    with pytest.raises(ValueError, match="Multiple clients"):
+        st.cat("events", when.date())
+    assert seen == [None, None]
 
 
 def _fresh_schema(spark, root, stream="events"):
@@ -319,7 +268,19 @@ def test_cat_json(spark, store, sf_dir):
     assert "event_id" in parsed
 
 
+_KEY_FIELDS = [T.StructField("_archive_path", T.StringType()),
+               T.StructField("_archive_date", T.StringType()),
+               T.StructField("_archive_sort", T.LongType())]
+
+
+def _tri_frame(spark, path, schema):
+    register_tri_datasource(spark)
+    return spark.read.format("tri").schema(schema).load(path)
+
+
 def test_read_tri_spark(spark, tmp_path):
+    """format("tri") fills the key columns a declared schema names
+    from each file's key (replay order, S15)."""
     recs = [
         {"event_id": i, "ts": dt.datetime(2020, 1, 1, 12, 0, i, tzinfo=UTC),
          "user_id": 100 + i, "event_type": "click", "value": i * 1.5,
@@ -329,13 +290,16 @@ def test_read_tri_spark(spark, tmp_path):
     day_dir = tmp_path / "tri" / "20200101"
     day_dir.mkdir(parents=True)
     (day_dir / "events-archive-1577880000.tri").write_bytes(write_tri_bytes(recs))
-    df = read_tri(spark, str(tmp_path / "tri"), EVENTS_SCHEMA)
+    df = _tri_frame(spark, str(tmp_path / "tri"),
+                   T.StructType(EVENTS_SCHEMA.fields + _KEY_FIELDS))
     rows = df.orderBy("event_id").collect()
     assert len(rows) == 50
     assert rows[0]["event_type"] == "click"
     assert rows[1]["value"] == 1.5
     assert rows[0]["_archive_date"] == "20200101"
     assert rows[0]["_archive_sort"] == 1577880000
+    assert rows[0]["_archive_path"] == str(
+        day_dir / "events-archive-1577880000.tri")
     assert rows[3]["ts"] == dt.datetime(2020, 1, 1, 12, 0, 3)
 
 
@@ -349,7 +313,10 @@ def test_read_tri_corrupt_file_skips(spark, tmp_path):
     # corrupt: good record then garbage
     body = frame_compress(packb({"event_id": 2, "event_type": "ok2"}) + b"\xc1junk")
     (day_dir / "events-archive-200.tri").write_bytes(body)
-    df = read_tri(spark, str(tmp_path / "tri"), EVENTS_SCHEMA)
+    # hidden names (a staged write, job residue) are never read
+    (day_dir / ".events-archive-300.tri").write_bytes(write_tri_bytes(good))
+    (day_dir / "_events-archive-400.tri").write_bytes(write_tri_bytes(good))
+    df = _tri_frame(spark, str(tmp_path / "tri"), EVENTS_SCHEMA)
     rows = df.orderBy("event_id").collect()
     assert [r["event_id"] for r in rows] == [1, 2]
 

@@ -116,33 +116,18 @@ events:
     assert df.schema == KINESIS_SCHEMA
 
 
-def test_kinesis_connector_raises_with_guidance(spark):
-    """The JVM-connector adapter point: without a connector jar it must
-    fail actionably (bridge guidance), not with a bare ClassNotFound."""
-    from go_triton_spark.config import load_config
-    from go_triton_spark.sources.stream_source import open_stream
-    cfg = load_config("""
-events:
-  name: events-prod
-  region: us-west-1
-  partition_key: user_id
-  source: kinesis_connector
-""")["events"]
-    with pytest.raises(NotImplementedError, match="Kinesis connector"):
-        open_stream(spark, cfg)
-
-
 def test_unknown_source_type_rejected(spark):
     from go_triton_spark.config import load_config
     from go_triton_spark.sources.stream_source import open_stream
-    cfg = load_config("""
+    for source in ("carrier_pigeon", "kinesis_connector"):
+        cfg = load_config(f"""
 events:
   name: events
   partition_key: user_id
-  source: carrier_pigeon
+  source: {source}
 """)["events"]
-    with pytest.raises(ValueError, match="unknown stream source"):
-        open_stream(spark, cfg)
+        with pytest.raises(ValueError, match="unknown stream source"):
+            open_stream(spark, cfg)
 
 
 def test_xml_round_trip(spark, sf_dir, tmp_path):

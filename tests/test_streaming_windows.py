@@ -95,8 +95,9 @@ def test_streaming_dropduplicates_with_watermark(spark, tmp_path):
 def test_foreachbatch_tri_export(spark, tmp_path):
     """Streaming -> .tri compat writer via foreachBatch (SURVEY S8's
     .tri-compat output mode)."""
-    from go_triton_spark.sources.tri_source import read_tri, write_tri
+    from go_triton_spark.sources.tri_datasource import register_tri_datasource
 
+    register_tri_datasource(spark)
     src = str(tmp_path / "src")
     out_dir = str(tmp_path / "tri_out")
     _write_events(src, [
@@ -107,14 +108,20 @@ def test_foreachbatch_tri_export(spark, tmp_path):
     when = dt.datetime(2024, 1, 1, 3, 0, tzinfo=UTC)
 
     def sink(batch_df, batch_id):
-        write_tri(batch_df.coalesce(1), out_dir, "events", "stream", when=when)
+        (batch_df.coalesce(1).write.format("tri")
+         .option("stream", "events").option("client", "stream")
+         .option("unix_ts", str(int(when.timestamp())))
+         .mode("append").save(out_dir))
 
     q = (spark.readStream.format("json").schema(EVENTS_SCHEMA).load(src)
          .writeStream.foreachBatch(sink)
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
-    back = read_tri(spark, out_dir, EVENTS_SCHEMA)
+    back = spark.read.format("tri").schema(
+        T.StructType(EVENTS_SCHEMA.fields
+                     + [T.StructField("_archive_date", T.StringType())])
+    ).load(out_dir)
     assert back.count() == 10
     assert back.select("_archive_date").first()[0] == "20240101"
 

@@ -1,7 +1,7 @@
-"""spark.read.format('tri'): the PySpark 4 Python DataSource packaging
-of the .tri codec — batch parity with read_tri, per-file partitions,
-corrupt-skip, and the directory-tailing stream reader (checkpointed
-offsets, incremental batches)."""
+"""spark.read/write.format('tri'): the PySpark 4 Python DataSource
+packaging of the .tri codec — round trip of a DataFrame, per-file
+partitions, corrupt-skip, and the directory-tailing stream reader
+(checkpointed offsets, incremental batches)."""
 
 import datetime as dt
 import os
@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from go_triton_spark.sources.tri_datasource import register_tri_datasource
-from go_triton_spark.sources.tri_source import read_tri, write_tri
 from go_triton_spark.types import EVENTS_SCHEMA
 
 UTC = dt.timezone.utc
@@ -31,22 +30,30 @@ def registered(spark):
     return spark
 
 
-def test_tri_format_matches_read_tri(registered, events_df, tmp_path):
+def _write(df, out, client, when=None):
+    """One archive file of ``df`` under ``out``, keyed at ``when``."""
+    w = (df.coalesce(1).write.format("tri")
+         .option("stream", "events").option("client", client))
+    if when is not None:
+        w = w.option("unix_ts", str(int(when.timestamp())))
+    w.mode("append").save(out)
+
+
+def test_tri_format_round_trips_source_rows(registered, events_df, tmp_path):
     spark = registered
     out = str(tmp_path / "arch")
-    write_tri(events_df, out, "events", "alpha")
-    via_format = spark.read.format("tri").schema(EVENTS_SCHEMA).load(out)
-    via_shim = read_tri(spark, out, EVENTS_SCHEMA).select(*EVENTS_SCHEMA.names)
-    a = sorted(map(tuple, via_format.collect()))
-    b = sorted(map(tuple, via_shim.collect()))
-    assert a == b and len(a) == 120
+    _write(events_df, out, "alpha")
+    back = spark.read.format("tri").schema(EVENTS_SCHEMA).load(out)
+    got = sorted(map(tuple, back.collect()))
+    want = sorted(map(tuple, events_df.select(*EVENTS_SCHEMA.names).collect()))
+    assert got == want and len(got) == 120
 
 
 def test_tri_format_partition_per_file(registered, events_df, tmp_path):
     spark = registered
     out = str(tmp_path / "arch")
-    write_tri(events_df.where("event_id % 2 = 0"), out, "events", "alpha")
-    write_tri(events_df.where("event_id % 2 = 1"), out, "events", "beta")
+    _write(events_df.where("event_id % 2 = 0"), out, "alpha")
+    _write(events_df.where("event_id % 2 = 1"), out, "beta")
     df = spark.read.format("tri").schema(EVENTS_SCHEMA).load(out)
     assert df.rdd.getNumPartitions() == 2
     assert df.count() == 120
@@ -64,7 +71,7 @@ def test_tri_format_corrupt_file_skipped(registered, tmp_path):
 def test_tri_format_requires_schema(registered, events_df, tmp_path):
     spark = registered
     out = str(tmp_path / "arch")
-    write_tri(events_df, out, "events", "alpha")
+    _write(events_df, out, "alpha")
     with pytest.raises(Exception, match="schema"):
         spark.read.format("tri").load(out).collect()
 
@@ -77,8 +84,7 @@ def test_tri_stream_incremental_files(registered, events_df, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     first = events_df.where("event_id < 60")
     second = events_df.where("event_id >= 60")
-    write_tri(first, out, "events", "alpha",
-              when=dt.datetime(2026, 8, 13, 10, 0, tzinfo=UTC))
+    _write(first, out, "alpha", when=dt.datetime(2026, 8, 13, 10, 0, tzinfo=UTC))
 
     def drain():
         captured = []
@@ -92,8 +98,7 @@ def test_tri_stream_incremental_files(registered, events_df, tmp_path):
 
     got1 = drain()
     assert len(got1) == first.count()
-    write_tri(second, out, "events", "alpha",
-              when=dt.datetime(2026, 8, 13, 11, 0, tzinfo=UTC))
+    _write(second, out, "alpha", when=dt.datetime(2026, 8, 13, 11, 0, tzinfo=UTC))
     got2 = drain()
     assert len(got2) == second.count()  # only the new file's rows
     assert {r.event_id for r in got1} | {r.event_id for r in got2} == \
