@@ -316,7 +316,12 @@ def main(argv: list[str] | None = None) -> int:
     p_shards.add_argument("--region", help="AWS region (uses boto3 if set)")
     p_shards.set_defaults(fn=cmd_shards)
 
-    p_compact = sub.add_parser("compact", help="merge small archive files")
+    p_compact = sub.add_parser(
+        "compact", help="merge small archive files",
+        description="Rewrite each hour partition of one date into few "
+                    "files. Replaced files stay on disk for readers that "
+                    "already listed them; the next compact of the date "
+                    "after a one-hour grace deletes them.")
     p_compact.add_argument("--stream", required=True)
     p_compact.add_argument("--date", required=True, metavar="YYYYMMDD")
     p_compact.add_argument("--client")

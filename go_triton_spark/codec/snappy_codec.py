@@ -1,4 +1,4 @@
-"""Pure-Python snappy: block format + framing format.
+"""Snappy framing format over pyarrow's libsnappy.
 
 The reference's archives are the snappy *framing* format
 (golang/snappy NewWriter, triton/store.go:134): a stream-identifier
@@ -9,19 +9,23 @@ a .tri file is a concatenation of framing streams; the decoder below
 accepts repeated stream-identifier chunks transparently, exactly like
 the golang/snappy reader.
 
-- ``frame_decompress`` fully decodes both compressed (block-format) and
-  uncompressed chunks, with CRC verification.
-- ``frame_compress`` emits valid framing output. Payloads are stored as
-  snappy *literal-only* blocks (legal per the spec: any block may consist
-  solely of literals) — correctness-compatible with every snappy reader;
-  compression ratio is delegated to Parquet on the canonical path.
-- ``snappy_block_decompress`` implements the full block format
-  (varint preamble, literal + copy1/2/4 tags with back-references).
+- ``frame_decompress`` decodes compressed and uncompressed chunks,
+  with CRC verification; a compressed chunk's block goes through
+  ``pa.Codec("snappy")``, sized by the block's varint preamble.
+- ``frame_compress`` compresses each <=64 KiB chunk with libsnappy
+  and stores it uncompressed when that does not shrink it, as
+  golang/snappy's writer does.
+
+The framing, the masked CRC32C (compiled shim, pure ``crc32c``
+fallback) and the mapping of libsnappy's decode errors to
+``SnappyError`` live here.
 """
 
 from __future__ import annotations
 
 import struct
+
+import pyarrow as pa
 
 _STREAM_IDENT_BODY = b"sNaPpY"
 _CHUNK_COMPRESSED = 0x00
@@ -76,6 +80,9 @@ def masked_crc32c(data: bytes) -> int:
 
 # ------------------------------------------------------------ block format
 
+_SNAPPY = pa.Codec("snappy")
+
+
 def _uvarint(buf: bytes, pos: int) -> tuple[int, int]:
     result = 0
     shift = 0
@@ -92,90 +99,18 @@ def _uvarint(buf: bytes, pos: int) -> tuple[int, int]:
             raise SnappyError("varint too long")
 
 
-def snappy_block_decompress(buf: bytes) -> bytes:
-    """Decode one snappy block-format buffer (full tag support)."""
-    total, pos = _uvarint(buf, 0)
-    out = bytearray()
-    n = len(buf)
-    while pos < n:
-        tag = buf[pos]
-        pos += 1
-        kind = tag & 0x03
-        if kind == 0:  # literal
-            length = tag >> 2
-            if length >= 60:
-                extra = length - 59  # 1..4 length bytes, little-endian
-                if pos + extra > n:
-                    raise SnappyError("truncated literal length")
-                length = int.from_bytes(buf[pos:pos + extra], "little")
-                pos += extra
-            length += 1
-            if pos + length > n:
-                raise SnappyError("truncated literal body")
-            out += buf[pos:pos + length]
-            pos += length
-            continue
-        if kind == 1:  # copy, 1-byte offset
-            length = ((tag >> 2) & 0x07) + 4
-            if pos >= n:
-                raise SnappyError("truncated copy1")
-            offset = ((tag >> 5) << 8) | buf[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte offset
-            length = (tag >> 2) + 1
-            if pos + 2 > n:
-                raise SnappyError("truncated copy2")
-            offset = struct.unpack_from("<H", buf, pos)[0]
-            pos += 2
-        else:  # copy, 4-byte offset
-            length = (tag >> 2) + 1
-            if pos + 4 > n:
-                raise SnappyError("truncated copy4")
-            offset = struct.unpack_from("<I", buf, pos)[0]
-            pos += 4
-        if offset == 0 or offset > len(out):
-            raise SnappyError(f"bad copy offset {offset} at output size {len(out)}")
-        # Overlapping copies are legal (RLE): copy byte-by-byte when needed.
-        start = len(out) - offset
-        if offset >= length:
-            out += out[start:start + length]
-        else:
-            for i in range(length):
-                out.append(out[start + i])
-    if len(out) != total:
-        raise SnappyError(f"decompressed size {len(out)} != preamble {total}")
-    return bytes(out)
-
-
-def snappy_block_compress(data: bytes) -> bytes:
-    """Encode a valid snappy block as literal runs (no back-references)."""
-    out = bytearray()
-    # preamble: uvarint of uncompressed length
-    n = len(data)
-    v = n
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            break
-    pos = 0
-    while pos < n:
-        chunk = data[pos:pos + 0x10000]  # literal length fits in 2 bytes
-        length = len(chunk)
-        if length <= 60:
-            out.append((length - 1) << 2)
-        elif length <= 0x100:
-            out.append(60 << 2)
-            out.append(length - 1)
-        else:
-            out.append(61 << 2)
-            out += struct.pack("<H", length - 1)
-        out += chunk
-        pos += length
-    return bytes(out)
+def _block_decompress(block: bytes) -> bytes:
+    """Decode one snappy block with libsnappy. The block's varint
+    preamble gives the decompressed size, which the framing format
+    caps at 64 KiB per chunk."""
+    size, _ = _uvarint(block, 0)
+    if size > _MAX_CHUNK_UNCOMPRESSED:
+        raise SnappyError(f"block preamble {size} exceeds the 64 KiB chunk")
+    try:
+        return _SNAPPY.decompress(block, decompressed_size=size,
+                                  asbytes=True)
+    except (OSError, ValueError) as exc:   # pa.ArrowInvalid: ValueError
+        raise SnappyError(f"corrupt snappy block: {exc}") from exc
 
 
 # ---------------------------------------------------------- framing format
@@ -192,7 +127,7 @@ def frame_compress(data: bytes, with_ident: bool = True) -> bytes:
     while pos < n:
         chunk = data[pos:pos + _MAX_CHUNK_UNCOMPRESSED]
         pos += len(chunk)
-        body = snappy_block_compress(chunk)
+        body = _SNAPPY.compress(chunk, asbytes=True)
         crc = masked_crc32c(chunk)
         if len(body) < len(chunk):
             ctype, payload = _CHUNK_COMPRESSED, body
@@ -236,7 +171,7 @@ def frame_decompress(buf: bytes, verify_crc: bool = True) -> bytes:
             if length < 4:
                 raise SnappyError("compressed chunk too short")
             crc = struct.unpack_from("<I", body)[0]
-            data = snappy_block_decompress(body[4:])
+            data = _block_decompress(body[4:])
         elif ctype == _CHUNK_UNCOMPRESSED:
             if length < 4:
                 raise SnappyError("uncompressed chunk too short")

@@ -22,6 +22,7 @@ plain ``spark.read`` is unordered by contract.
 from __future__ import annotations
 
 import datetime as _dt
+import json
 import os
 import time
 import uuid
@@ -57,7 +58,7 @@ def parquet_schema_key(spark: SparkSession, files: list[str]) -> tuple | None:
     try:
         st = os.stat(first)
     except OSError:
-        return None     # raced a compact swap: infer, the plan retries
+        return None     # raced an expire: infer, the plan retries
     return (first, st.st_size, st.st_mtime_ns,
             tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
 
@@ -93,32 +94,72 @@ def list_dates_from_range(start: _dt.date, end: _dt.date) -> list[_dt.date]:
     return out
 
 
-def _exchange_dirs(a: str, b: str) -> bool:
-    """Atomically exchange two directories (Linux renameat2
-    RENAME_EXCHANGE). Returns False when the syscall is unavailable or
-    fails (non-Linux, old glibc, cross-device) so callers fall back to
-    a rename pair. With exchange, a partition under compaction is
-    never absent from a concurrent listing — there is no instant where
-    neither the old nor the new file set is at the path."""
-    try:
-        import ctypes
+#: Grace of compaction's bookkeeping, in seconds: a per-hour lock older
+#: than this belongs to a crashed holder, a file retired longer ago than
+#: this has no reader left, and staging dirs or tombstones older than
+#: this are crash residue. It must exceed the worst single-hour rewrite
+#: and the longest read of a listed file.
+_GRACE_S = 3600.0
 
-        libc = ctypes.CDLL(None, use_errno=True)
-        renameat2 = libc.renameat2
-    except (OSError, AttributeError):
-        return False
-    AT_FDCWD = -100
-    RENAME_EXCHANGE = 2
-    rc = renameat2(AT_FDCWD, os.fsencode(a), AT_FDCWD, os.fsencode(b),
-                   RENAME_EXCHANGE)
-    return rc == 0
+#: per-hour commit marker; the ``_`` prefix keeps it out of every data
+#: listing (Spark's, ``cat``'s and the crash sweep's)
+_MARKER = "_compacted.json"
+#: name prefix of every compaction output: one that no marker names (in
+#: flight, or left by a crash) is never read
+_OUTPUT_PREFIX = "compacted-"
+
+
+def _read_marker(hour_dir: str) -> "dict | None":
+    """The hour's commit marker as ``{"outputs": {name, ...},
+    "retired": {name: retired_at}}``; None when the hour was never
+    compacted. A marker that does not parse raises ValueError: any
+    guess at the live set could drop or double rows."""
+    path = os.path.join(hour_dir, _MARKER)
+    try:
+        with open(path) as fh:
+            text = fh.read()
+    except FileNotFoundError:
+        return None
+    try:
+        m = json.loads(text)
+        return {"outputs": set(m["outputs"]),
+                "retired": {n: float(at) for n, at in m["retired"].items()}}
+    except (ValueError, KeyError, TypeError, AttributeError) as exc:
+        raise ValueError(f"corrupt compaction marker {path}: {exc}") from exc
+
+
+def _write_marker(hour_dir: str, marker: dict) -> None:
+    """Commit ``marker`` for the hour: write a temp file, then
+    ``os.replace`` it over the old one, so a reader opens either the
+    old marker or the new one, never a torn one."""
+    tmp = os.path.join(hour_dir, f".{_MARKER}.{uuid.uuid4().hex[:8]}")
+    with open(tmp, "w") as fh:
+        json.dump({"outputs": sorted(marker["outputs"]),
+                   "retired": marker["retired"]}, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, os.path.join(hour_dir, _MARKER))
+
+
+def _live_files(names: list[str], marker: "dict | None") -> list[str]:
+    """The visibility rule, and its only home. Of an hour's entry
+    ``names``, a visible parquet file is live when the marker names it
+    as an output, or when it is neither a compaction output nor
+    retired. So a rewrite is invisible until its marker commits, and
+    a part file that lands at any time (a sink batch, a backfill
+    ingest) is live until a compaction retires it."""
+    outputs, retired = ((marker["outputs"], marker["retired"])
+                        if marker else ((), {}))
+    return [n for n in names
+            if n.endswith(".parquet") and not n.startswith((".", "_"))
+            and (n in outputs
+                 or not (n.startswith(_OUTPUT_PREFIX) or n in retired))]
 
 
 def _holds_committed_parts(root: str) -> bool:
     """Does ``root`` contain any VISIBLE parquet part file (hidden
     dirs/files pruned, the same rules Spark listings apply)? The
-    one-place home of the walk idiom the staging sweeps use to decide
-    quarantine-vs-delete."""
+    ingest staging sweep uses it to decide quarantine-vs-delete."""
     for _base, dirs, files in os.walk(root):
         dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
         for fn in files:
@@ -150,31 +191,27 @@ class _VanishedMidWalk(FileNotFoundError):
     not return the half-built mid-state — callers re-list fresh, which
     converges to the consistent post-expire view (dates expire took
     simply stop being listed). Fail-loud-or-heal, never
-    silently-fewer-rows: the same contract the compact-swap fix gave
-    the file-level races."""
+    silently-fewer-rows."""
 
 
 def _stable_listdir(path: str) -> list[str]:
     """``os.listdir`` with a TORN-ENUMERATION guard.
 
     A directory enumeration is not atomic against a concurrent
-    RENAME_EXCHANGE + rmtree: the walker can opendir the PRE-swap
-    inode, compact swaps the name and rmtrees the old contents, and
-    the in-flight getdents returns an EMPTY (or partial) view — with
-    no error. Empty is the silent-loss case: the hour contributes
-    zero files and the cat simply misses its rows (r10 matrix soak,
-    sink-compact pair: reproduced ~1 per 20 commits; partial views
-    are already loud because the vanished files 404 at read time).
-    Guard: snapshot (st_ino, st_mtime_ns) before and after the
-    listdir — any change means the name was swapped or an entry
-    landed/left mid-enumeration, so the walk must re-list fresh."""
+    rename + rmtree (``expire`` tombstoning a date): the in-flight
+    getdents can return an EMPTY (or partial) view of a name that was
+    replaced under it — with no error, and an empty hour silently
+    drops its rows (r10 matrix soak). Guard: snapshot (st_ino,
+    st_mtime_ns) before and after the listdir — any change means the
+    name was replaced or an entry landed/left mid-enumeration, so the
+    walk must re-list fresh."""
     before = os.stat(path)
     names = sorted(os.listdir(path))
     after = os.stat(path)
     if (before.st_ino, before.st_mtime_ns) \
             != (after.st_ino, after.st_mtime_ns):
         raise _VanishedMidWalk(
-            f"{path} changed during enumeration (swap/ingest raced the "
+            f"{path} changed during enumeration (a writer raced the "
             f"walk); re-listing")
     return names
 
@@ -212,7 +249,7 @@ def _drop_tombstone(path: str) -> None:
 class ArchiveStore:
     """Batch-side archive table: ingest + replay ("cat") over the
     path-based parquet layout above — listing-level pruning,
-    rename-based compaction, rmtree expiry."""
+    marker-committed compaction, rmtree expiry."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -266,8 +303,6 @@ class ArchiveStore:
         # residue reaped by the inline age-gated sweep below (NOT
         # _sweep_stale_staging — that one owns compact's residue).
         import shutil
-        import time as _time
-        import uuid
         import warnings
 
         # sweep CRASH residue of prior ingests (age-gated like the
@@ -275,16 +310,16 @@ class ArchiveStore:
         # Residue that still holds COMMITTED part files may be the
         # only staged copy of rows a mid-rename failure never moved
         # (r11 advice) — quarantine it out of the sweep prefix with a
-        # warning, mirroring _compact_old; only part-free wreckage
-        # (_temporary scratch from a crashed write) is deleted.
+        # warning; only part-free wreckage (_temporary scratch from a
+        # crashed write) is deleted.
         try:
-            now = _time.time()
+            now = time.time()
             for name in os.listdir(self.root):
                 if not name.startswith(".ingest_tmp."):
                     continue
                 p = os.path.join(self.root, name)
                 try:
-                    if now - os.path.getmtime(p) <= 3600.0:
+                    if now - os.path.getmtime(p) <= _GRACE_S:
                         continue
                 except OSError:
                     continue    # vanished: a concurrent sweep got it
@@ -388,11 +423,16 @@ class ArchiveStore:
         A file not yet committed to the sink manifest may be replayed
         (at-least-once on crash — the reference's own guarantee,
         store.go:51-67), and a cat racing a micro-batch file
-        mid-write can fail transiently (footer not yet on disk) —
-        retry, exactly like the documented compact-swap race. The
-        read deliberately does NOT set ``ignoreCorruptFiles``: it
-        converts ANY per-file read error — including schema
-        mismatches — into silent row loss (measured: a stray INT32
+        mid-write can fail transiently (footer not yet on disk): the
+        sink writes part files at their final names. A ``compact``
+        never fails a cat: the pruning walk reads each hour's commit
+        marker before it lists the hour and keeps only the live files
+        (``_live_files``), so a fresh cat reads the compaction's
+        outputs and a cat planned earlier keeps reading the retired
+        files, which stay on disk for the grace. The read deliberately
+        does NOT set ``ignoreCorruptFiles``: it converts ANY per-file
+        read error — including schema mismatches — into silent row
+        loss (measured: a stray INT32
         ``_archive_sort`` made an ordered cat silently drop every
         INT64 file, 280 -> 180 rows, while count() said 280). Replay
         integrity fails loudly instead.
@@ -463,27 +503,18 @@ class ArchiveStore:
                             pruned.append(os.path.join(cpath, dname))
             if pruned and not is_uri:
                 # LOCAL PATHS: hand Spark explicit FILE paths, not the
-                # date dirs. The local filesystem's listStatus is
-                # list-then-stat (readdir, then a getFileStatus per
-                # name) — NOT atomic against compact's
-                # RENAME_EXCHANGE swap — and Spark's listLeafFiles
-                # SWALLOWS the mid-listing FileNotFoundException,
-                # returning an empty hour: a concurrent cat silently
-                # LOST the whole partition's rows (caught by the r9
-                # four-way soak at full-suite load, reproduced 1-in-
-                # ~300 swaps by tools/stress — see test). Explicit
-                # files close that hole only PARTIALLY: r10's matrix
-                # soak found the same swallow one level deeper
-                # (InMemoryFileIndex drops a vanished explicit path at
-                # planning — see the post-plan verification below) and
-                # a torn readdir that enumerates a swapped-out hour as
-                # EMPTY (see _stable_listdir). With all three guards,
-                # a racing swap either heals via a fresh re-list or
-                # fails LOUDLY (FILE_NOT_EXIST / FAILED_READ_FILE at
-                # execution, the documented one-retry class); nothing
-                # is ever silently dropped. One os.scandir per hour
-                # dir, driver-side — the same cost Spark's own
-                # listing pays.
+                # date dirs. Only this walk knows which files of an
+                # hour are live (a compacted hour also holds retired
+                # files and maybe unnamed outputs), and Spark's own
+                # listing SWALLOWS a mid-listing FileNotFoundException
+                # (an expire removing the dir), returning an empty
+                # hour: silent row loss (r9 four-way soak). The
+                # torn-readdir guard (_stable_listdir) and the
+                # post-plan verification below cover what is left of
+                # that race: a racing expire either heals via a fresh
+                # re-list or fails LOUDLY; nothing is ever silently
+                # dropped. One marker open and one listdir per hour
+                # dir, driver-side — the cost Spark's own listing pays.
                 files: list[str] = []
                 for ddir in pruned:
                     try:
@@ -505,18 +536,22 @@ class ArchiveStore:
                             continue
                         hdir = os.path.join(ddir, hname)
                         try:
+                            # marker FIRST: a listing taken before a
+                            # compaction's outputs landed, paired with
+                            # the marker that names them, would drop
+                            # the hour. Marker-then-list yields the old
+                            # live set or the new one; both are on disk
+                            marker = _read_marker(hdir)
                             names = _stable_listdir(hdir)
                         except (FileNotFoundError, NotADirectoryError) \
                                 as exc:
                             # same contract as the date dir above:
-                            # compact swaps FILES (never hour dirs), so
-                            # a vanished hour dir is an expire/external
+                            # compact never removes an hour dir, so a
+                            # vanished one is an expire/external
                             # removal — re-list fresh, don't skip
                             raise _VanishedMidWalk(str(exc)) from exc
-                        files.extend(
-                            os.path.join(hdir, n) for n in names
-                            if n.endswith(".parquet")
-                            and not n.startswith((".", "_")))
+                        files.extend(os.path.join(hdir, n)
+                                     for n in _live_files(names, marker))
                 if files:
                     return files, exists
             return pruned, exists
@@ -524,9 +559,9 @@ class ArchiveStore:
         pruned, stream_exists = _prune_retrying(_prune)
         if pruned or stream_exists or is_uri:
             # planning (listing + schema inference from a footer) can
-            # race a compact swap: the listed file is gone by the time
-            # its footer is opened. Driver-side and cheap — re-list
-            # fresh and retry instead of surfacing the transient.
+            # race an expire: the listed file is gone by the time its
+            # footer is opened. Driver-side and cheap — re-list fresh
+            # and retry instead of surfacing the transient.
             last: Exception | None = None
             for _attempt in range(3):
                 # the shared FileStatusCache serves STALE listings for
@@ -563,12 +598,12 @@ class ArchiveStore:
                         # sink-compact pair): handing Spark explicit
                         # file paths is NOT enough — InMemoryFileIndex
                         # stats each path at planning and SILENTLY
-                        # DROPS ones a compact swap deleted in the
+                        # DROPS ones an expire deleted in the
                         # listdir-to-plan window (it swallows the
                         # FileNotFoundException with a log warning, the
                         # same swallow class the r9 fix closed one
                         # level up). Reproduced: a cat lost an entire
-                        # hour with zero errors ~1 per 30 swaps. The
+                        # hour with zero errors ~1 per 30 compactions. The
                         # planned set must equal the handed set; any
                         # shortfall re-lists fresh. After planning,
                         # execution-time vanishes stay LOUD
@@ -579,8 +614,8 @@ class ArchiveStore:
                         if got != want:
                             last = FileNotFoundError(
                                 "FileNotFound: planning dropped "
-                                f"{sorted(want - got)[:3]} (compact/"
-                                "expire raced the plan); re-listing")
+                                f"{sorted(want - got)[:3]} (expire "
+                                "raced the plan); re-listing")
                             continue
                     if key is not None and not hit:
                         self._schema_cache[stream] = (key, StructType(
@@ -592,7 +627,7 @@ class ArchiveStore:
                     msg = str(exc)
                     # UNABLE_TO_INFER_SCHEMA joins the retryable set:
                     # on a live archive it means the plan's listing
-                    # raced a compact swap / ingest commit into seeing
+                    # raced an expire / ingest commit into seeing
                     # zero readable footers — the same transient class
                     # as a vanished path, healed by a fresh re-list.
                     # A genuinely empty stream still errors after the
@@ -734,10 +769,9 @@ class ArchiveStore:
                 # concurrent compact's dot-prefixed staging and its
                 # _temporary task dirs, whose in-flight part files are
                 # trailer-less + unmanifested BY DESIGN — the sweep
-                # renamed them to .crash, compact's commit then staged
-                # an empty-looking dir, the exchange put it live, and
-                # the post-swap rmtree DESTROYED the hour's rows
-                # (permanent loss, reproduced ~1 in 20 commits). Files
+                # renamed them to .crash, and compact then committed a
+                # rewrite missing those rows (permanent loss,
+                # reproduced ~1 in 20 commits). Files
                 # under hidden dirs are invisible to cat anyway, so
                 # they can never poison a replay — out of scope here.
                 _dirs[:] = [sub for sub in _dirs
@@ -821,31 +855,37 @@ class ArchiveStore:
         files, range-partitioned on ``_archive_sort`` so replay order
         stays file-local (SURVEY S15).
 
-        Safety: each hour is written to a HIDDEN sibling tmp dir
-        (dot-prefixed basename — Spark listings prune hidden names, so
-        staging data is never counted by a concurrent cat) and swapped
-        in with one atomic renameat2(RENAME_EXCHANGE) — the partition
-        is never half-written and never absent (two plain renames as
-        the non-Linux fallback). A reader that LISTED the old files
-        just before the swap may still fail its open with
-        FILE_NOT_EXIST — path-based filesystems cannot keep replaced
-        paths alive — and needs one retry; cat re-lists fresh. On a
-        real object store use a table format (Delta/Iceberg
-        rewrite-files) instead of rename; this implementation targets
-        filesystem-backed archives.
+        Safety: the rewrite never deletes what a reader may have
+        listed. Each hour is rewritten into a HIDDEN sibling staging
+        dir (Spark listings prune dot-prefixed names), the outputs are
+        renamed into the hour under the ``compacted-`` prefix, and one
+        ``os.replace`` of the hour's ``_compacted.json`` marker commits
+        them: it names the live outputs and the retired input files,
+        with the time each was retired (``_live_files`` is the rule).
+        ``cat`` reads the marker before it lists the hour, so a fresh
+        cat reads the outputs plus any part file that landed since,
+        and a cat planned before the commit still reads the old files.
+        No caller needs a retry. Nothing is deleted at commit: the
+        next ``compact`` of the date first deletes the files retired
+        more than ``_GRACE_S`` (one hour) ago and the outputs a crash
+        left unnamed that are as old, so disk is reclaimed by the next
+        compact after the grace. On a real object store use a table
+        format (Delta/Iceberg rewrite-files) instead of rename; this
+        implementation targets filesystem-backed archives.
 
         Live-ingest safety (round-5): hour partitions younger than
         ``min_age_hours`` are SKIPPED (counted in ``hours_skipped``).
-        The streaming sink appends to the wall-clock hour — and a
-        micro-batch that STARTED just before rollover still lands in
-        the previous hour shortly after — so compacting a hot hour
-        could read-rewrite-swap while a new file lands in between,
-        deleting it with the swapped-out dir. One hour of grace keeps
-        ``compact`` safe to run as a cron next to a live ``store``
-        with no coordination.
+        The streaming sink writes its part files at their final names
+        in the wall-clock hour — and a micro-batch that STARTED just
+        before rollover still lands in the previous hour shortly after
+        — so a hot hour can hold a file still being written, which the
+        rewrite must not read. One hour of grace keeps ``compact`` safe
+        to run as a cron next to a live ``store`` with no coordination.
+        A file that lands mid-compaction stays live: it is neither an
+        output nor retired.
         """
         if "://" in self.root:
-            # rename-based swaps cannot be atomic on object stores
+            # rename-based commits cannot be atomic on object stores
             # (S3 rename = copy+delete, a visible window): refuse
             # rather than emulate them racily
             raise NotImplementedError(
@@ -861,7 +901,6 @@ class ArchiveStore:
                       - _dt.timedelta(hours=min_age_hours))
         stats = {"hours": 0, "hours_skipped": 0, "hours_vanished": 0,
                  "hours_contended": 0, "hours_locked": 0,
-                 "hours_quarantined": 0, "files_rescued": 0,
                  "files_before": 0, "files_after": 0, "bytes": 0}
         for hour_name in sorted(os.listdir(slice_dir)):
             hour_dir = os.path.join(slice_dir, hour_name)
@@ -890,18 +929,11 @@ class ArchiveStore:
                                 or "PATH_NOT_FOUND" in msg
                                 or "FileNotFound" in msg)
                 if vanished_exc and not os.path.isdir(hour_dir):
-                    # drop any staging leftovers: the tmp write may
-                    # have RESURRECTED the date path after the rmtree,
-                    # and retention's delete must stick. AGE-GATED
-                    # (r11 advice): "hour absent" is also the transient
-                    # window of a PEER compact's fallback double-rename
-                    # — an unconditional rmtree here deleted the peer's
-                    # _compact_old (sole copy) and _compact_tmp (new
-                    # copy), destroying the hour with zero errors. The
-                    # age rule leaves fresh (= live peer) staging alone;
-                    # retention is already effective for readers (hidden
-                    # names never list) and the residue is reaped by the
-                    # next sweep once stale.
+                    # retention's delete must stick, but this attempt's
+                    # staging is already gone (_compact_hour_locked);
+                    # the sweep is AGE-GATED because a fresh staging
+                    # dir belongs to a live peer compact. Hidden names
+                    # never list, so residue is invisible until reaped
                     parent, base = os.path.split(hour_dir)
                     self._sweep_stale_staging(parent, base)
                     try:
@@ -916,128 +948,60 @@ class ArchiveStore:
                                 or "FileNotFound" in msg)
                 if missing_file and os.path.isdir(hour_dir):
                     # the hour is still THERE but a listed file is
-                    # gone: a concurrent compact won the swap while
-                    # this one was reading (crons racing the same
-                    # slice). The winner rewrote the same logical
-                    # rows, so skipping is lossless — count it so
-                    # operators see the contention (r10 matrix soak).
-                    # STRICTLY missing-file class: a broader OSError
-                    # (EACCES/ENOSPC) here is a real failure and must
-                    # propagate, not be re-badged as contention
+                    # gone: something outside the hour lock removed it
+                    # while this rewrite read (an operator, or the
+                    # store's crash sweep moving never-committed
+                    # residue aside). Nothing was committed, so
+                    # skipping is lossless — count it so operators see
+                    # it. STRICTLY missing-file class: a broader
+                    # OSError (EACCES/ENOSPC) here is a real failure
+                    # and must propagate, not be re-badged
                     stats["hours_contended"] += 1
                     continue
                 raise
         return stats
 
     @staticmethod
-    def _sweep_stale_staging(parent: str, base: str,
-                             max_age_s: float = 3600.0) -> None:
+    def _sweep_stale_staging(parent: str, base: str) -> None:
         """Remove CRASH leftovers of compact staging (unique-suffixed
-        hidden dirs) older than ``max_age_s``. Fresh staging belongs
-        to a live concurrent compact and must not be touched — the
-        old unconditional rmtree of the fixed staging name was
-        exactly the cross-process corruption (see _compact_hour).
-
-        Only ``._compact_tmp.*`` dirs are ever DELETED. A stale
-        ``._compact_old.*`` dir is an INTEGRITY SIGNAL, not garbage: a
-        fallback swap that crashed between rename(hour->old) and
-        rename(tmp->hour) leaves old as the SOLE copy of the hour
-        (r11 advice — the age sweep used to reap it, a permanent
-        silent loss). Recovery: if the hour name is free, rename old
-        back into place (lossless — old holds exactly the pre-compact
-        rows); if the hour was recreated meanwhile, leave the residue
-        and warn loudly so an operator reconciles instead of the
-        sweep destroying data."""
+        hidden ``._compact_tmp.*`` dirs) older than ``_GRACE_S``. Fresh
+        staging belongs to a live concurrent compact and must not be
+        touched — an unconditional rmtree of a fixed staging name was
+        exactly the cross-process corruption (see
+        _compact_hour_locked)."""
         import shutil
-        import time as _time
-        import warnings
 
-        tmp_prefix = f".{base}._compact_tmp."
-        old_prefix = f".{base}._compact_old."
+        prefix = f".{base}._compact_tmp."
         try:
             names = os.listdir(parent)
         except FileNotFoundError:
             return
-        now = _time.time()
+        now = time.time()
         for name in names:
+            if not name.startswith(prefix):
+                continue
             path = os.path.join(parent, name)
             try:
-                stale = now - os.path.getmtime(path) > max_age_s
+                if now - os.path.getmtime(path) <= _GRACE_S:
+                    continue    # fresh: a live concurrent compact owns it
             except OSError:
-                continue    # vanished / being swapped: not ours to clean
-            if not stale:
-                continue    # fresh: a live concurrent compact owns it
-            if name.startswith(tmp_prefix):
-                shutil.rmtree(path, ignore_errors=True)
-            elif name.startswith(old_prefix):
-                try:
-                    # explicit existence check first (r11 advice):
-                    # POSIX rename atomically REPLACES an empty
-                    # existing dir, so a concurrent ingest's fresh
-                    # makedirs(hour) would be silently renamed over
-                    # (benign merge, but weaker than the quarantine
-                    # contract claims). The OSError fallback still
-                    # covers the lexists->rename race window.
-                    if os.path.lexists(os.path.join(parent, base)):
-                        raise OSError(f"{base} exists; quarantine")
-                    # fails (ENOTEMPTY/EEXIST) when the hour exists —
-                    # exactly the case where restoring would collide
-                    os.rename(path, os.path.join(parent, base))
-                except OSError:
-                    # The residue may be a benign post-swap duplicate
-                    # (crash after rename(tmp->hour), before
-                    # rmtree(old)) or rows a later ingest diverged
-                    # from — indistinguishable without reading, so
-                    # QUARANTINE: move it out of the sweep prefix
-                    # (warn fires once per incident, not per sweep)
-                    # and preserve the bytes for the operator.
-                    qname = name.replace("._compact_old.",
-                                         "._quarantined_old.")
-                    try:
-                        os.rename(path, os.path.join(parent, qname))
-                    except OSError:
-                        qname = name    # rename failed: warn in place
-                    warnings.warn(
-                        f"stale compact residue {parent}/{qname} could "
-                        f"not be restored over an existing {base}; it "
-                        "may hold rows from an interrupted swap — "
-                        "reconcile manually (never auto-deleted)",
-                        RuntimeWarning, stacklevel=2)
+                continue    # vanished: not ours to clean
+            shutil.rmtree(path, ignore_errors=True)
 
     def _compact_hour(self, hour_dir: str, target_file_mb: int,
                       stats: dict) -> None:
         """Rewrite one hour partition in place (see ``compact``).
 
-        Serialized per hour by an advisory lock file (r12): two
-        uncoordinated compact crons hitting the same hour used to be
-        benign (the swap loser's rmtree discarded the winner's
-        same-logical-content output), but the straggler rescue below
-        made that interleaving a SILENT DUPLICATION — the loser's
-        doomed dir holds the winner's job-unique output parts, which
-        are not in the loser's pinned listing and would be "rescued"
-        back next to the loser's rewrite of the same rows. A rescue
-        keyed on the pinned listing cannot distinguish a peer
-        compactor's output from an ingest straggler (both are
-        job-unique ``part-*.parquet``), so the overlap itself is
-        removed: second compactor skips the hour
-        (``stats["hours_locked"]``), next cron pass retakes it. The
+        Serialized per hour by an advisory lock file (r12): it
+        serialises the read-modify-write of the hour's commit marker.
+        Two compacts of one hour would each rewrite the same live set,
+        and the later marker would drop the names the earlier one
+        wrote — its outputs and the retire times its garbage
+        collection goes by. The second compactor skips the hour
+        (``stats["hours_locked"]``); the next cron pass retakes it. The
         lock is dot-prefixed (invisible to listings) and stolen after
-        ``TRITON_COMPACT_LOCK_TTL`` seconds (default 3600 — must
-        exceed the worst-case single-hour rewrite) so a crashed
-        holder never wedges compaction.
-
-        Irreducible windows, documented not hidden (both a few
-        syscalls wide, both bounded by the reader contract "one
-        retry/fresh listing heals"): (a) a straggler that rides the
-        swap is INVISIBLE between the exchange and its rescue rename
-        — a listing in that instant under-counts by the straggler
-        until the very next statement restores it; (b) a crash in
-        that same instant leaves the straggler inside the stale
-        staging dir where the age sweep will reap it with the doomed
-        rewrite input — a manifest-less rename design cannot tell a
-        straggler from already-rewritten input after the fact (a
-        table format's atomic commit is the 100 TB answer, see
-        ``compact``)."""
+        ``_GRACE_S`` seconds (must exceed the worst-case single-hour
+        rewrite) so a crashed holder never wedges compaction."""
         parent, base = os.path.split(hour_dir)
         lock = self._acquire_hour_lock(parent, base)
         if lock is None:
@@ -1048,7 +1012,7 @@ class ArchiveStore:
             self._compact_hour_locked(hour_dir, target_file_mb, stats)
         finally:
             # ownership-checked release (r12 review): if this rewrite
-            # overran the TTL, a stealer cleared our lock and a NEW
+            # overran the grace, a stealer cleared our lock and a NEW
             # holder may have created its own at the same path — a
             # blind unlink would delete the live peer's lock and let
             # a third compactor in. Only unlink the inode we created.
@@ -1056,7 +1020,7 @@ class ArchiveStore:
                 if os.stat(lock_path).st_ino == lock_ino:
                     os.unlink(lock_path)
             except OSError:
-                pass    # stolen after TTL overrun: stealer cleared it
+                pass    # stolen after a grace overrun: stealer cleared it
 
     @staticmethod
     def _acquire_hour_lock(parent: str,
@@ -1080,10 +1044,6 @@ class ArchiveStore:
         live lock grabbed by mistake is restored with os.link —
         which, unlike rename, cannot clobber a third compactor's
         newly created lock."""
-        import time as _time
-        import uuid as _uuid
-
-        ttl = float(os.environ.get("TRITON_COMPACT_LOCK_TTL", "3600"))
         path = os.path.join(parent, f".{base}._compact_lock")
         for _attempt in (0, 1):
             try:
@@ -1098,9 +1058,9 @@ class ArchiveStore:
                     st = os.stat(path)
                 except OSError:
                     continue    # holder just released: one more try
-                if _time.time() - st.st_mtime <= ttl:
+                if time.time() - st.st_mtime <= _GRACE_S:
                     return None
-                grab = f"{path}.stale.{_uuid.uuid4().hex[:8]}"
+                grab = f"{path}.stale.{uuid.uuid4().hex[:8]}"
                 try:
                     os.rename(path, grab)
                     grabbed = os.stat(grab)
@@ -1112,7 +1072,7 @@ class ArchiveStore:
                 # (observed on ext4/tmpfs — an inode compare passed
                 # for a different, live file), but it cannot fake an
                 # old mtime
-                if _time.time() - grabbed.st_mtime <= ttl:
+                if time.time() - grabbed.st_mtime <= _GRACE_S:
                     # we grabbed a LIVE lock: put it back without
                     # clobbering anyone (link fails on an existing
                     # path, unlike rename), then yield the hour
@@ -1136,185 +1096,78 @@ class ArchiveStore:
                              stats: dict) -> None:
         import math
         import shutil
-        import warnings
 
-        files = [f for f in os.listdir(hour_dir) if f.endswith(".parquet")]
+        marker = self._collect_garbage(hour_dir)
+        files = _live_files(sorted(os.listdir(hour_dir)), marker)
         nbytes = sum(os.path.getsize(os.path.join(hour_dir, f))
                      for f in files)
         n_out = max(1, math.ceil(nbytes / (target_file_mb * 1024 * 1024)))
-        if len(files) <= n_out:
-            stats["hours"] += 1
-            stats["files_before"] += len(files)
-            stats["files_after"] += len(files)
-            stats["bytes"] += nbytes
-            return
-        # DOT-PREFIXED basenames: Spark's listing prunes hidden
-        # (., _) names, so neither staging dir is ever visible to
-        # a concurrent cat. The old `hour=N._compact_tmp` siblings
-        # parsed as BOGUS PARTITION VALUES — a reader overlapping
-        # the post-commit-pre-swap (or pre-rmtree) window counted
-        # the hour twice (measured: 20 rows from a 10-row hour).
-        # UNIQUE-PER-ATTEMPT suffix (r10): two compact crons racing
-        # the same hour used to share ONE fixed staging name — B's
-        # entry rmtree deleted A's staged output mid-write, and A's
-        # exchange could put B's HALF-WRITTEN tmp live: silent row
-        # loss (reproduced by tools/stress_race_matrix.py before the
-        # fix). With unique names each attempt stages privately; the
-        # loser of the swap race just rewrites rows the winner
-        # already compacted (same logical content) and any mid-swap
-        # read fails LOUDLY and retries, never silently thinner.
-        import uuid
-        parent, base = os.path.split(hour_dir)
-        token = f"{os.getpid():x}_{uuid.uuid4().hex[:8]}"
-        tmp_dir = os.path.join(parent, f".{base}._compact_tmp.{token}")
-        old_dir = os.path.join(parent, f".{base}._compact_old.{token}")
-        self._sweep_stale_staging(parent, base)
-
-        def _drop_staging_if_expired():
-            # `expire` dropped the date mid-rewrite, and the write's
-            # mkdirs may have re-created ``date=...`` around this
-            # attempt's staging: remove it (it is ours alone) so the
-            # vanished-hour branch of ``compact`` can rmdir the date
-            if not os.path.isdir(hour_dir):
+        if len(files) > n_out:
+            # UNIQUE-PER-ATTEMPT hidden staging (r10): a fixed name let
+            # a second attempt's entry rmtree delete the first one's
+            # staged output mid-write. The read is PINNED to the live
+            # listing: a part file that lands after it is not in
+            # `files`, so it is neither rewritten nor retired, and
+            # stays live beside the outputs
+            parent, base = os.path.split(hour_dir)
+            token = f"{os.getpid():x}_{uuid.uuid4().hex[:8]}"
+            tmp_dir = os.path.join(parent, f".{base}._compact_tmp.{token}")
+            self._sweep_stale_staging(parent, base)
+            try:
+                (self.spark.read.parquet(
+                    *[os.path.join(hour_dir, f) for f in files])
+                     .repartitionByRange(n_out, "_archive_sort")
+                     .write.parquet(tmp_dir))
+                outputs = set()
+                for fn in os.listdir(tmp_dir):
+                    if fn.endswith(".parquet") and not fn.startswith(
+                            (".", "_")):
+                        os.rename(os.path.join(tmp_dir, fn), os.path.join(
+                            hour_dir, _OUTPUT_PREFIX + fn))
+                        outputs.add(_OUTPUT_PREFIX + fn)
+                marker = {"outputs": outputs, "retired": {
+                    **marker["retired"], **dict.fromkeys(files, time.time())}}
+                _write_marker(hour_dir, marker)
+            finally:
+                # `expire` may have dropped the date mid-rewrite, and
+                # the write's mkdirs re-created ``date=...`` around the
+                # staging: removing it lets the vanished-hour branch of
+                # ``compact`` rmdir the date. A failure with the hour
+                # present leaves unnamed outputs, reaped after the grace
                 shutil.rmtree(tmp_dir, ignore_errors=True)
-
-        # read PINNED to the entry listing (r12 ingest-compact soak):
-        # reading the DIRECTORY let the scan pick up part files a
-        # concurrent backfill ingest landed after `files` was taken,
-        # making "what got rewritten" torn — with an explicit file
-        # list, anything not in `files` is by construction a
-        # straggler the rescue below must carry across the swap
-        try:
-            (self.spark.read.parquet(
-                *[os.path.join(hour_dir, f) for f in files])
-                 .repartitionByRange(n_out, "_archive_sort")
-                 .write.parquet(tmp_dir))
-        except Exception:
-            _drop_staging_if_expired()
-            raise
-
-        def _rescue_stragglers(doomed: str) -> int:
-            # A concurrent backfill ingest (ingest_dataframe with an
-            # old `when`) renames its part files directly into
-            # hour_dir; one landing between the pinned listing and
-            # the swap rides the swap into the doomed old dir, and
-            # the rmtree below silently destroyed it (found by the
-            # r12 ingest-compact race soak — the sink never hits this
-            # because compact skips hot hours). Move anything not in
-            # the rewrite's pinned listing back into the live hour:
-            # names are job-unique, so no collisions, and the rows
-            # were never in the rewrite, so no duplication. (The
-            # peer-compactor's-output case that would alias as a
-            # straggler here is excluded by the hour lock above.)
-            # Returns the number of stragglers that could NOT be
-            # moved yet still exist (destination-side failure: hour
-            # dir removed by a concurrent expire, EACCES, ENOSPC) —
-            # the caller must then quarantine the doomed dir instead
-            # of rmtree'ing the only copy of those rows.
-            try:
-                names = os.listdir(doomed)
-            except OSError:
-                return 0    # already gone: nothing rescuable
-            stuck = 0
-            for fn in names:
-                if (fn.endswith(".parquet") and fn not in known
-                        and not fn.startswith((".", "_"))):
-                    try:
-                        os.rename(os.path.join(doomed, fn),
-                                  os.path.join(hour_dir, fn))
-                        stats["files_rescued"] += 1
-                    except OSError:
-                        if os.path.lexists(os.path.join(doomed, fn)):
-                            stuck += 1
-                        # else: straggler vanished — its writer owns it
-            return stuck
-
-        def _discard_doomed(doomed: str) -> None:
-            # rmtree only when every straggler got out; otherwise
-            # quarantine the whole dir (same convention, and same
-            # never-auto-deleted prefix, as the stale-residue sweep)
-            if _rescue_stragglers(doomed):
-                qname = os.path.basename(doomed).replace(
-                    "._compact_tmp.", "._quarantined_old.").replace(
-                    "._compact_old.", "._quarantined_old.")
-                qpath = os.path.join(parent, qname)
-                try:
-                    os.rename(doomed, qpath)
-                except OSError:
-                    # second chance under a fresh name (collision is
-                    # one failure mode), because a `._compact_tmp.`
-                    # name left in place is SWEEP-ELIGIBLE — the age
-                    # sweep would rmtree it once stale, silently
-                    # destroying the straggler the quarantine exists
-                    # to preserve (r12 review)
-                    import uuid as _uuid
-                    qpath = os.path.join(
-                        parent, f"{qname}.{_uuid.uuid4().hex[:8]}")
-                    try:
-                        os.rename(doomed, qpath)
-                    except OSError:
-                        qpath = None
-                if qpath is None:
-                    # cannot leave the sweep prefix: buy a fresh TTL
-                    # window and say HONESTLY that preservation is
-                    # now time-bounded, not permanent
-                    try:
-                        os.utime(doomed)
-                    except OSError:
-                        pass
-                    warnings.warn(
-                        f"compact could not rescue straggler part "
-                        f"files from {doomed} back into {hour_dir}, "
-                        "and the quarantine rename also failed — the "
-                        "residue still carries a staging name the "
-                        "age sweep deletes once stale; reconcile "
-                        "WITHIN the sweep TTL (3600s, mtime just "
-                        "refreshed)", RuntimeWarning, stacklevel=3)
-                else:
-                    warnings.warn(
-                        f"compact could not rescue straggler part "
-                        f"files from {doomed} back into {hour_dir}; "
-                        f"preserved at {qpath} — they may be the "
-                        "only copy of a concurrently ingested batch; "
-                        "reconcile manually (never auto-deleted)",
-                        RuntimeWarning, stacklevel=3)
-                stats["hours_quarantined"] += 1
-            else:
-                shutil.rmtree(doomed)
-
-        known = set(files)
-        if _exchange_dirs(tmp_dir, hour_dir):
-            # atomic exchange: the partition is NEVER absent; the
-            # old files (now under the hidden tmp name) vanish only
-            # from readers' pre-swap path lists — one retry heals
-            _discard_doomed(tmp_dir)
-        else:
-            # fallback pair of renames: a listing in the gap can
-            # see the hour briefly absent
-            try:
-                os.rename(hour_dir, old_dir)
-            except FileNotFoundError:
-                _drop_staging_if_expired()
-                raise
-            try:
-                os.rename(tmp_dir, hour_dir)
-            except OSError:
-                # old_dir is now the SOLE copy of the hour — put it
-                # back before propagating so no crash window leaves
-                # the rows only under a hidden name (r11 advice; the
-                # stale-old sweep recovery is the backstop if this
-                # rename also fails, e.g. the parent vanished)
-                try:
-                    os.rename(old_dir, hour_dir)
-                except OSError:
-                    pass
-                raise
-            _discard_doomed(old_dir)
         stats["hours"] += 1
         stats["files_before"] += len(files)
         stats["files_after"] += len(
-            [f for f in os.listdir(hour_dir) if f.endswith(".parquet")])
+            _live_files(os.listdir(hour_dir), marker))
         stats["bytes"] += nbytes
+
+    @staticmethod
+    def _collect_garbage(hour_dir: str) -> dict:
+        """Delete what no reader can still hold: files retired more
+        than ``_GRACE_S`` ago, and compaction outputs that the marker
+        does not name and that are as old (left by a crash before the
+        commit). Then rewrite the marker without the deleted names —
+        delete first, so a crash in between leaves a name for a
+        missing file, which does no harm. Returns the hour's marker as
+        it now stands (empty for a never-compacted hour)."""
+        marker = _read_marker(hour_dir) or {"outputs": set(), "retired": {}}
+        outputs, retired = marker["outputs"], marker["retired"]
+        now = time.time()
+        expired = {n for n, at in retired.items() if now - at > _GRACE_S}
+        orphans = [n for n in os.listdir(hour_dir)
+                   if n.startswith(_OUTPUT_PREFIX) and n not in outputs
+                   and n not in retired and now - os.path.getmtime(
+                       os.path.join(hour_dir, n)) > _GRACE_S]
+        for n in [*expired, *orphans]:
+            try:
+                os.unlink(os.path.join(hour_dir, n))
+            except FileNotFoundError:
+                pass    # deleted before a crash kept its name
+        if expired:
+            marker["retired"] = {n: at for n, at in retired.items()
+                                 if n not in expired}
+            _write_marker(hour_dir, marker)
+        return marker
 
     def expire(self, stream: str, client: str, keep_after: _dt.date) -> dict:
         """Retention: drop whole date partitions strictly older than
@@ -1353,7 +1206,7 @@ class ArchiveStore:
                 # an interrupted expire's tombstone; an hour's grace
                 # keeps this off one a live peer is still deleting
                 born = name.rsplit("._expired.", 1)[1].split(".")[0]
-                if born.isdigit() and time.time() - int(born) > 3600:
+                if born.isdigit() and time.time() - int(born) > _GRACE_S:
                     _drop_tombstone(os.path.join(slice_dir, name))
                 continue
             if not name.startswith("date="):

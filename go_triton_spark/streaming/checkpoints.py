@@ -152,11 +152,6 @@ def mirror_to_db(checkpoint_root: str, db_url: str, _con=None,
     return len(rows)
 
 
-def mirror_to_sqlite(checkpoint_root: str, db_path: str) -> int:
-    """Back-compat alias: sqlite-path form of :func:`mirror_to_db`."""
-    return mirror_to_db(checkpoint_root, db_path)
-
-
 def stats_from_db(db_url: str, client: str | None = None,
                   _con=None, _placeholder: str = "?") -> dict[str, int]:
     """External-monitor ``stats`` (S18) straight from the SQL mirror —
@@ -179,11 +174,6 @@ def stats_from_db(db_url: str, client: str | None = None,
                 for c, s, sh, up in rows}
     finally:
         con.close()
-
-
-def stats_from_sqlite(db_path: str, client: str | None = None) -> dict[str, int]:
-    """Back-compat alias: sqlite-path form of :func:`stats_from_db`."""
-    return stats_from_db(db_path, client)
 
 
 def checkpoint_stats(spark: SparkSession, checkpoint_root: str,

@@ -372,22 +372,6 @@ def test_expire_concurrent_with_cat_of_live_range(spark, store, sf_dir):
                      client="alpha", ordered=False).count() == 0
 
 
-def test_exchange_dirs_atomic_swap(tmp_path):
-    """renameat2(RENAME_EXCHANGE) path: both directories exist at all
-    times, contents swapped. (On kernels/filesystems without the
-    syscall the helper returns False and compact uses the rename-pair
-    fallback — skip rather than fail there.)"""
-    from go_triton_spark.plans.archive_store import _exchange_dirs
-
-    a, b = tmp_path / "a", tmp_path / "b"
-    a.mkdir(); b.mkdir()
-    (a / "fa").write_text("A")
-    (b / "fb").write_text("B")
-    if not _exchange_dirs(str(a), str(b)):
-        pytest.skip("renameat2 RENAME_EXCHANGE unavailable")
-    assert os.listdir(a) == ["fb"] and os.listdir(b) == ["fa"]
-
-
 def test_cat_accepts_string_dates(spark, store, sf_dir):
     """Library callers reasonably pass '2015-06-30' or '20150630'
     where the CLI would have parsed; both must mean the same day."""
@@ -638,64 +622,34 @@ def test_quarantine_never_descends_into_hidden_staging(
         hour_dir, ".part-00009-crash.c000.snappy.parquet.crash"))
 
 
-def test_sweep_never_deletes_compact_old_residue(tmp_path):
-    """A stale ``._compact_old.*`` dir can be the SOLE copy of an hour
-    (fallback swap crashed between its two renames) — the sweep must
-    RESTORE it when the hour name is free, warn-and-keep when the hour
-    was recreated, and still reap stale ``._compact_tmp.*`` (r11
-    advice items 1+2)."""
+def test_sweep_reaps_only_stale_compact_staging(tmp_path):
+    """The staging sweep deletes a stale ``._compact_tmp.*`` dir (crash
+    residue) and leaves a fresh one alone: a live concurrent compact
+    owns it."""
     import time
-    import warnings
 
     parent = tmp_path / "date=20260101"
     parent.mkdir()
     base = "hour=03"
-    old = parent / f".{base}._compact_old.abc_1"
     tmp = parent / f".{base}._compact_tmp.abc_1"
-    for d in (old, tmp):
+    fresh_tmp = parent / f".{base}._compact_tmp.abc_3"
+    for d in (tmp, fresh_tmp):
         d.mkdir()
         (d / "part-0.parquet").write_bytes(b"x")
     stale = time.time() - 7200
-    os.utime(old, (stale, stale))
     os.utime(tmp, (stale, stale))
 
     ArchiveStore._sweep_stale_staging(str(parent), base)
     assert not tmp.exists(), "stale tmp staging is crash garbage"
-    hour = parent / base
-    assert hour.is_dir() and (hour / "part-0.parquet").exists(), \
-        "sole-copy old residue is restored to the hour name"
-
-    # hour now EXISTS: a second stale old residue must be kept + warned
-    old2 = parent / f".{base}._compact_old.abc_2"
-    old2.mkdir()
-    (old2 / "part-1.parquet").write_bytes(b"y")
-    os.utime(old2, (stale, stale))
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        ArchiveStore._sweep_stale_staging(str(parent), base)
-    quarantined = parent / f".{base}._quarantined_old.abc_2"
-    assert quarantined.exists() and (quarantined / "part-1.parquet").exists(), \
-        "possible sole copy is quarantined, never auto-deleted"
-    assert any("reconcile" in str(w.message) for w in caught)
-    # quarantined residue is outside the sweep prefix: no re-warn
-    with warnings.catch_warnings(record=True) as again:
-        warnings.simplefilter("always")
-        ArchiveStore._sweep_stale_staging(str(parent), base)
-    assert not again, "quarantine stops per-sweep warning spam"
-
-    # FRESH staging (live concurrent compact) is untouched either way
-    fresh_tmp = parent / f".{base}._compact_tmp.abc_3"
-    fresh_tmp.mkdir()
-    ArchiveStore._sweep_stale_staging(str(parent), base)
-    assert fresh_tmp.exists()
+    assert fresh_tmp.exists(), "fresh staging belongs to a live compact"
 
 
 def test_vanished_hour_branch_spares_live_peer_staging(
         spark, store, sf_dir, monkeypatch):
     """compact's expire-vanished classification must not rmtree FRESH
-    peer staging: "hour absent" is also the transient window of a
-    peer's fallback double-rename, and deleting its _compact_old there
-    destroyed the hour silently (r11 advice item 1, medium)."""
+    peer staging: a live peer compact of the same hour owns it, and
+    only staging older than the grace is crash residue (r11 advice
+    item 1, medium)."""
     import shutil as _sh
 
     import go_triton_spark.plans.archive_store as A
@@ -712,16 +666,16 @@ def test_vanished_hour_branch_spares_live_peer_staging(
     base = f"hour={when.strftime('%H')}"
     hour_dir = os.path.join(ddir, base)
     # fresh staging of a hypothetical live peer compact
-    peer_old = os.path.join(ddir, f".{base}._compact_old.peer_1")
-    os.makedirs(peer_old)
-    with open(os.path.join(peer_old, "part-peer.parquet"), "wb") as fh:
+    peer_tmp = os.path.join(ddir, f".{base}._compact_tmp.peer_1")
+    os.makedirs(peer_tmp)
+    with open(os.path.join(peer_tmp, "part-peer.parquet"), "wb") as fh:
         fh.write(b"z")
 
     orig = A.ArchiveStore._compact_hour
 
     def exploding(self, hd, mb, stats):
-        # simulate: peer's fallback swap has the hour ABSENT while this
-        # compact's rewrite fails with a missing-path error
+        # simulate: expire removed the hour while this compact's
+        # rewrite ran, which then fails with a missing-path error
         _sh.rmtree(hd)
         raise FileNotFoundError(f"simulated vanish of {hd}")
 
@@ -730,7 +684,7 @@ def test_vanished_hour_branch_spares_live_peer_staging(
                           min_age_hours=1.0)
     monkeypatch.setattr(A.ArchiveStore, "_compact_hour", orig)
     assert stats["hours_vanished"] == 1
-    assert os.path.isdir(peer_old), \
+    assert os.path.isdir(peer_tmp), \
         "fresh peer staging survives the vanished-hour sweep"
     assert not os.path.isdir(hour_dir)
 
@@ -774,37 +728,6 @@ def test_ingest_failure_preserves_staging_for_recovery(
     _sh.rmtree(stage_root)
     got = store.cat("events", when.date(), client="archive").count()
     assert got == 5
-
-
-def test_compact_old_restore_never_replaces_empty_hour(tmp_path):
-    """POSIX rename atomically REPLACES an empty existing directory,
-    so a concurrent ingest's fresh makedirs(hour) could be silently
-    renamed over by the stale-residue restore (r11 advice): the sweep
-    must take the quarantine path whenever the hour name EXISTS, even
-    empty."""
-    import time
-    import warnings
-
-    parent = tmp_path / "date=20260101"
-    parent.mkdir()
-    base = "hour=07"
-    hour = parent / base
-    hour.mkdir()        # concurrent ingest just created it — EMPTY
-    old = parent / f".{base}._compact_old.race_1"
-    old.mkdir()
-    (old / "part-0.parquet").write_bytes(b"x")
-    stale = time.time() - 7200
-    os.utime(old, (stale, stale))
-
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        ArchiveStore._sweep_stale_staging(str(parent), base)
-    assert hour.is_dir(), "live hour dir survives"
-    assert not (hour / "part-0.parquet").exists(), \
-        "residue is not merged over the live hour"
-    quarantined = parent / f".{base}._quarantined_old.race_1"
-    assert quarantined.is_dir() and (quarantined / "part-0.parquet").exists()
-    assert any("reconcile" in str(w.message) for w in caught)
 
 
 def test_ingest_sweep_quarantines_committed_residue(
@@ -888,52 +811,52 @@ def test_ingest_failure_warns_naming_staging_dir(
         f"warning must name the staging dir; got {msgs}"
 
 
-@pytest.mark.parametrize("exchange_works", [True, False])
+@pytest.mark.parametrize("at_commit", [True, False])
 def test_compact_rescues_straggler_ingest_part(
-        spark, store, sf_dir, monkeypatch, exchange_works):
-    """A part file a concurrent backfill ingest lands in the hour
-    between compact's pinned listing and the swap rides the swap into
-    the doomed old dir — before the r12 fix the rmtree silently
-    destroyed it (found by the ingest-compact race soak). Both swap
-    branches must move it back into the live hour."""
+        spark, store, sf_dir, monkeypatch, at_commit):
+    """A part file a concurrent backfill ingest lands in the hour after
+    compact's live listing — before the rewrite reads, or just before
+    the commit — is neither rewritten nor retired: it stays live and
+    its rows read exactly once (r12 ingest-compact race soak)."""
     import shutil
 
     import go_triton_spark.plans.archive_store as A
 
     when = dt.datetime.now(tz=UTC) - dt.timedelta(hours=5)
-    ev = _events(spark, sf_dir).limit(10)
-    store.ingest_dataframe(ev, "events", "archive", when=when)
-    store.ingest_dataframe(ev.limit(5), "events", "archive",
-                           when=when + dt.timedelta(seconds=1))
-    hour_dir = os.path.join(
-        store.root, "stream=events", "client=archive",
-        f"date={when.strftime('%Y%m%d')}", f"hour={when.strftime('%H')}")
-    parts = [f for f in os.listdir(hour_dir) if f.endswith(".parquet")]
-    assert len(parts) >= 2, "need a fragmented hour so compact rewrites"
+    hour_dir, parts = _seed_fragmented_hour(spark, store, sf_dir, when)
     straggler_rows = (spark.read.parquet(os.path.join(hour_dir, parts[0]))
                       .count())
 
-    real_ex = A._exchange_dirs
+    def land_straggler():
+        shutil.copyfile(os.path.join(hour_dir, parts[0]),
+                        os.path.join(hour_dir, "part-straggler.parquet"))
 
-    def exchange_with_straggler(tmp, hour):
-        # simulate the concurrent ingest: a job-unique part file lands
-        # in the hour AFTER the rewrite's pinned listing, just before
-        # the swap
-        shutil.copyfile(os.path.join(hour, parts[0]),
-                        os.path.join(hour, "part-straggler.parquet"))
-        return real_ex(tmp, hour) if exchange_works else False
+    if at_commit:
+        real_commit = A._write_marker
 
-    monkeypatch.setattr(A, "_exchange_dirs", exchange_with_straggler)
+        def commit(hd, marker):
+            land_straggler()
+            real_commit(hd, marker)
+
+        monkeypatch.setattr(A, "_write_marker", commit)
+    else:
+        real_sweep = A.ArchiveStore._sweep_stale_staging
+
+        def sweep(parent, base):     # runs after the listing
+            land_straggler()
+            real_sweep(parent, base)
+
+        monkeypatch.setattr(A.ArchiveStore, "_sweep_stale_staging",
+                            staticmethod(sweep))
     stats = store.compact("events", when.date(), "archive",
                           min_age_hours=1.0)
-    monkeypatch.setattr(A, "_exchange_dirs", real_ex)
+    monkeypatch.undo()
     assert stats["hours"] == 1
-    assert stats["files_rescued"] == 1
-    live = os.listdir(hour_dir)
-    assert "part-straggler.parquet" in live, \
-        "straggler must survive the swap in the live hour"
-    got = store.cat("events", when.date(), client="archive").count()
-    assert got == 15 + straggler_rows
+    assert stats["files_before"] == 2 and stats["files_after"] == 2
+    df = store.cat("events", when.date(), client="archive")
+    assert "part-straggler.parquet" in {
+        os.path.basename(p) for p in df.inputFiles()}
+    assert df.count() == 15 + straggler_rows
 
 
 def test_ingest_failure_exception_carries_staging_dir(
@@ -974,11 +897,10 @@ def _seed_fragmented_hour(spark, store, sf_dir, when):
 
 
 def test_compact_skips_hour_held_by_live_lock(spark, store, sf_dir):
-    """Two uncoordinated compact crons on the same hour: the rescue
-    made that overlap a silent DUPLICATION (the loser 'rescues' the
-    winner's job-unique output back next to its own rewrite of the
-    same rows), so the overlap itself is now removed — a fresh
-    advisory lock makes the second compactor skip the hour."""
+    """Two uncoordinated compact crons on the same hour: the per-hour
+    lock serialises the read-modify-write of the hour's commit
+    marker, so a fresh advisory lock makes the second compactor skip
+    the hour."""
     when = dt.datetime.now(tz=UTC) - dt.timedelta(hours=5)
     hour_dir, parts = _seed_fragmented_hour(spark, store, sf_dir, when)
     parent, base = os.path.split(hour_dir)
@@ -1004,7 +926,7 @@ def test_compact_skips_hour_held_by_live_lock(spark, store, sf_dir):
 
 def test_compact_steals_stale_lock(spark, store, sf_dir):
     """A crashed holder must not wedge compaction forever: a lock
-    older than TRITON_COMPACT_LOCK_TTL is CLEARED (inode-verified
+    older than the one-hour grace is CLEARED (inode-verified
     steal) and the hour compacts on the next pass — the stealer does
     not retake in place, which was a two-stealer TOCTOU."""
     when = dt.datetime.now(tz=UTC) - dt.timedelta(hours=5)
@@ -1025,60 +947,6 @@ def test_compact_steals_stale_lock(spark, store, sf_dir):
                           min_age_hours=1.0)
     assert stats["hours"] == 1 and stats["hours_locked"] == 0
     assert not os.path.exists(lock)
-    assert store.cat("events", when.date(),
-                     client="archive").count() == 15
-
-
-@pytest.mark.parametrize("exchange_works", [True, False])
-def test_compact_quarantines_unrescuable_straggler(
-        spark, store, sf_dir, monkeypatch, exchange_works):
-    """When the rescue rename itself fails with the straggler still
-    present (hour dir removed by a concurrent expire, EACCES, ...),
-    the doomed dir must be QUARANTINED — never rmtree'd over the only
-    copy of a concurrently ingested batch (r12 review)."""
-    import shutil
-    import warnings
-
-    import go_triton_spark.plans.archive_store as A
-
-    when = dt.datetime.now(tz=UTC) - dt.timedelta(hours=5)
-    hour_dir, parts = _seed_fragmented_hour(spark, store, sf_dir, when)
-
-    real_ex = A._exchange_dirs
-
-    def exchange_with_straggler(tmp, hour):
-        shutil.copyfile(os.path.join(hour, parts[0]),
-                        os.path.join(hour, "part-straggler.parquet"))
-        return real_ex(tmp, hour) if exchange_works else False
-
-    real_rename = os.rename
-
-    def rename_blocking_rescue(src, dst):
-        if src.endswith("/part-straggler.parquet") and \
-                dst.startswith(hour_dir):
-            raise OSError("simulated destination-side failure")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(A, "_exchange_dirs", exchange_with_straggler)
-    monkeypatch.setattr(os, "rename", rename_blocking_rescue)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        stats = store.compact("events", when.date(), "archive",
-                              min_age_hours=1.0)
-    monkeypatch.setattr(os, "rename", real_rename)
-    monkeypatch.setattr(A, "_exchange_dirs", real_ex)
-    assert stats["hours"] == 1
-    assert stats["files_rescued"] == 0
-    assert stats.get("hours_quarantined") == 1
-    parent = os.path.dirname(hour_dir)
-    quarantined = [n for n in os.listdir(parent)
-                   if n.startswith(".") and "._quarantined_old." in n]
-    assert len(quarantined) == 1, os.listdir(parent)
-    assert "part-straggler.parquet" in os.listdir(
-        os.path.join(parent, quarantined[0])), \
-        "straggler bytes must survive in the quarantine dir"
-    assert any("preserved" in str(w.message) for w in caught)
-    # live hour still serves the compacted rows
     assert store.cat("events", when.date(),
                      client="archive").count() == 15
 
@@ -1131,9 +999,8 @@ def test_acquire_hour_lock_restores_fresh_lock_grabbed_mid_steal(
 def test_expire_idempotent_against_concurrent_maintenance(
         spark, store, sf_dir, monkeypatch):
     """Pinned from the four-way soak failure: expire's rmtree raced a
-    concurrent compact of the same old date — the straggler rescue /
-    hour-dir swap renames entries while expire's deletion walk unlinks
-    them, so the walk hits vanished paths (FileNotFoundError) or a
+    concurrent compact of the same old date — compaction renames
+    entries while expire's deletion walk unlinks them, so the walk hits vanished paths (FileNotFoundError) or a
     briefly-nonempty dir (ENOTEMPTY); a peer expire can also drop the
     whole date between listdir and rmtree. Contract: deletion is
     idempotent (already-gone = dropped), one retry re-walks a torn
@@ -1236,20 +1103,133 @@ def test_compact_racing_expire_leaves_no_date_behind(spark, store, sf_dir,
                                                      monkeypatch):
     """Expire drops the date while compact rewrites one of its hours,
     after Hadoop's mkdirs re-created the date around compact's staging
-    dir. The hour is counted vanished, and the staging (this attempt's
-    own) goes with the re-created date: expire's delete sticks."""
+    dir, so the commit finds no hour. The hour is counted vanished, and
+    the staging (this attempt's own) goes with the re-created date:
+    expire's delete sticks."""
     from go_triton_spark.plans import archive_store
 
     when = dt.datetime.now(tz=UTC) - dt.timedelta(days=3, hours=5)
     hour_dir, _ = _seed_fragmented_hour(spark, store, sf_dir, when)
     date_dir = os.path.dirname(hour_dir)
 
-    def expire_wins(tmp_dir, hour):
-        os.rename(date_dir, date_dir + ".gone")     # expire's tombstone
-        os.makedirs(tmp_dir)                        # the write's mkdirs
-        return False                                # -> rename fallback
+    real_commit = archive_store._write_marker
 
-    monkeypatch.setattr(archive_store, "_exchange_dirs", expire_wins)
+    def expire_wins(hd, marker):
+        tomb = date_dir + ".gone"
+        os.rename(date_dir, tomb)                   # expire's tombstone
+        for name in os.listdir(tomb):               # the write's mkdirs
+            if "._compact_tmp." in name:
+                os.makedirs(os.path.join(date_dir, name))
+        real_commit(hd, marker)
+
+    monkeypatch.setattr(archive_store, "_write_marker", expire_wins)
     stats = store.compact("events", when.date(), "archive")
     assert stats["hours_vanished"] == 1 and stats["hours"] == 0
     assert not os.path.lexists(date_dir), os.listdir(date_dir)
+
+
+# --- per-hour commit marker ------------------------------------------------
+
+def _marker_path(hour_dir):
+    return os.path.join(hour_dir, "_compacted.json")
+
+
+def _marker(hour_dir):
+    import json
+
+    with open(_marker_path(hour_dir)) as fh:
+        return json.load(fh)
+
+
+def test_cat_planned_before_compact_still_reads(spark, store, sf_dir):
+    """A cat planned before a compaction still reads the files it
+    listed: compact retires them and deletes nothing at commit. A
+    fresh cat reads exactly the outputs the marker names."""
+    when = dt.datetime.now(tz=UTC) - dt.timedelta(hours=5)
+    hour_dir, parts = _seed_fragmented_hour(spark, store, sf_dir, when)
+    planned = store.cat("events", when.date(), client="archive")
+    stats = store.compact("events", when.date(), "archive",
+                          min_age_hours=1.0)
+    assert stats["hours"] == 1 and stats["files_after"] == 1
+    assert planned.count() == 15
+    fresh = store.cat("events", when.date(), client="archive")
+    assert fresh.count() == 15
+    marker = _marker(hour_dir)
+    assert {os.path.basename(p) for p in fresh.inputFiles()} \
+        == set(marker["outputs"])
+    assert sorted(marker["retired"]) == parts
+
+
+def test_compact_crash_before_commit_keeps_the_old_set(
+        spark, store, sf_dir, monkeypatch):
+    """A crash after the outputs are renamed into the hour but before
+    the marker is replaced leaves outputs no marker names: cat never
+    reads them, and a compact past the grace deletes them."""
+    import go_triton_spark.plans.archive_store as A
+
+    when = dt.datetime.now(tz=UTC) - dt.timedelta(hours=5)
+    hour_dir, parts = _seed_fragmented_hour(spark, store, sf_dir, when)
+
+    def crash(hd, marker):
+        raise OSError("simulated crash at the commit")
+
+    monkeypatch.setattr(A, "_write_marker", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        store.compact("events", when.date(), "archive", min_age_hours=1.0)
+    monkeypatch.undo()
+    orphans = [n for n in os.listdir(hour_dir) if n.startswith("compacted-")]
+    assert orphans and not os.path.exists(_marker_path(hour_dir))
+    df = store.cat("events", when.date(), client="archive")
+    assert df.count() == 15
+    assert sorted(os.path.basename(p) for p in df.inputFiles()) == parts
+
+    stale = dt.datetime.now(tz=UTC).timestamp() - 7200.0
+    for n in orphans:
+        os.utime(os.path.join(hour_dir, n), (stale, stale))
+    store.compact("events", when.date(), "archive", min_age_hours=1.0)
+    assert not set(orphans) & set(os.listdir(hour_dir)), \
+        "orphans past the grace are deleted"
+    assert store.cat("events", when.date(), client="archive").count() == 15
+
+
+def test_compact_deletes_retired_files_after_the_grace(
+        spark, store, sf_dir):
+    """Retired files stay while a reader may hold them, and the next
+    compact after the grace deletes them — also of an hour that needs
+    no rewrite — and drops their names from the marker."""
+    import json
+
+    when = dt.datetime.now(tz=UTC) - dt.timedelta(hours=5)
+    hour_dir, parts = _seed_fragmented_hour(spark, store, sf_dir, when)
+    store.compact("events", when.date(), "archive", min_age_hours=1.0)
+    stats = store.compact("events", when.date(), "archive",
+                          min_age_hours=1.0)
+    assert stats["files_before"] == stats["files_after"] == 1
+    assert set(parts) <= set(os.listdir(hour_dir)), \
+        "retired files inside the grace stay on disk"
+
+    marker = _marker(hour_dir)
+    marker["retired"] = {n: at - 7200.0
+                         for n, at in marker["retired"].items()}
+    with open(_marker_path(hour_dir), "w") as fh:
+        json.dump(marker, fh)
+    stats = store.compact("events", when.date(), "archive",
+                          min_age_hours=1.0)
+    assert stats["hours"] == 1 and stats["files_after"] == 1
+    assert not set(parts) & set(os.listdir(hour_dir))
+    assert _marker(hour_dir)["retired"] == {}
+    assert _marker(hour_dir)["outputs"] == marker["outputs"]
+    assert store.cat("events", when.date(), client="archive").count() == 15
+
+
+def test_cat_fails_loudly_on_a_corrupt_marker(spark, store, sf_dir):
+    """A marker that does not parse fails cat and compact: any guess
+    at the hour's live set could drop or double rows."""
+    when = dt.datetime.now(tz=UTC) - dt.timedelta(hours=5)
+    hour_dir, _ = _seed_fragmented_hour(spark, store, sf_dir, when)
+    with open(_marker_path(hour_dir), "w") as fh:
+        fh.write('{"outputs": [')
+    with pytest.raises(ValueError, match="corrupt compaction marker"):
+        store.cat("events", when.date(), client="archive")
+    with pytest.raises(ValueError, match="corrupt compaction marker"):
+        store.compact("events", when.date(), "archive", min_age_hours=1.0)

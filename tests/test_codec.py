@@ -16,7 +16,6 @@ from go_triton_spark.codec.msgpack_codec import (
 )
 from go_triton_spark.codec.snappy_codec import (
     SnappyError, crc32c, frame_compress, frame_decompress,
-    snappy_block_compress, snappy_block_decompress,
 )
 from go_triton_spark.codec.tri import (
     generate_key_name, parse_key_name, read_tri_bytes, write_tri_bytes,
@@ -105,9 +104,15 @@ def test_crc32c_known_vectors():
     assert crc32c(b"\x00" * 32) == 0x8A9136AA
 
 
-def test_snappy_block_roundtrip():
-    for data in [b"", b"a", b"hello world" * 100, bytes(range(256)) * 300]:
-        assert snappy_block_decompress(snappy_block_compress(data)) == data
+def _compressed_chunk(block: bytes, data: bytes) -> bytes:
+    """A framing stream holding ``block`` as one compressed chunk."""
+    import struct
+
+    from go_triton_spark.codec.snappy_codec import masked_crc32c
+
+    body = struct.pack("<I", masked_crc32c(data)) + block
+    return (frame_compress(b"") + bytes([0x00])
+            + len(body).to_bytes(3, "little") + body)
 
 
 def test_snappy_block_decodes_copies():
@@ -115,7 +120,18 @@ def test_snappy_block_decodes_copies():
     # literal "abcd" + copy(offset=4, len=8) (overlapping copy / RLE).
     # copy1 tag: (offset_hi<<5) | ((len-4)<<2) | 0b01 = 17, offset_lo = 4
     block = bytes([12]) + bytes([(4 - 1) << 2]) + b"abcd" + bytes([17, 4])
-    assert snappy_block_decompress(block) == b"abcdabcdabcd"
+    data = b"abcdabcdabcd"
+    assert frame_decompress(_compressed_chunk(block, data)) == data
+    # a copy reaching before the start of the output is corrupt, and
+    # the libsnappy error surfaces as SnappyError
+    bad = bytes([12]) + bytes([(4 - 1) << 2]) + b"abcd" + bytes([17, 9])
+    with pytest.raises(SnappyError):
+        frame_decompress(_compressed_chunk(bad, data))
+    # a preamble over the 64 KiB chunk limit is refused before any
+    # buffer of that size is allocated
+    huge = bytes([0x80, 0x80, 0x80, 0x40]) + block[1:]
+    with pytest.raises(SnappyError, match="64 KiB"):
+        frame_decompress(_compressed_chunk(huge, data))
 
 
 def test_snappy_frame_roundtrip():
@@ -258,22 +274,21 @@ def test_tri_archive_body_byte_golden():
            "ts": dt.datetime(2015, 6, 30, 2, 45, 0, tzinfo=UTC),
            "data": {"couriers": ["a", "b"]}}
     body = write_tri_bytes([rec, rec])
+    # one COMPRESSED chunk (0x00, libsnappy: the second record is a
+    # back-reference to the first); 168 bytes of msgpack in 92
     golden = bytes.fromhex(
-        "ff060000734e6150705901a8000036a606eb"
-        "85ab6f626a6563745f74797065a864656c6976657279ad64656c69766572"
-        "795f75756964a76162632d313233a776657273696f6e03a27473d6ff5592"
-        "02aca46461746181a8636f75726965727392a161a162"
-        "85ab6f626a6563745f74797065a864656c6976657279ad64656c69766572"
-        "795f75756964a76162632d313233a776657273696f6e03a27473d6ff5592"
-        "02aca46461746181a8636f75726965727392a161a162")
+        "ff060000734e61507059005c000036a606eba401"
+        "5885ab6f626a6563745f74797065a864656c6976657279ad1109d05f7575"
+        "6964a76162632d313233a776657273696f6e03a27473d6ff559202aca464"
+        "61746181a8636f75726965727392a161a16285abfe52003e5200")
     assert body == golden
     assert read_tri_bytes(golden) == [rec, rec]
 
 
 def test_tri_reads_reference_compressed_chunks():
     """The reference (golang/snappy) writes COMPRESSED chunks (type
-    0x00) with back-reference copy ops whenever compression pays; our
-    writer emits literal-only blocks, but the READER must accept both.
+    0x00) with back-reference copy ops whenever compression pays, as
+    our writer now does too; the READER must accept them.
     Hand-assemble a compressed chunk exactly as golang/snappy encodes
     'abcdabcdabcd' (literal 'abcd' + copy1 offset=4 len=8) and assert
     transparent decode."""

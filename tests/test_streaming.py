@@ -109,7 +109,7 @@ def test_checkpoint_sqlite_mirror(engine, tmp_path):
     monitor with no Spark session."""
     import sqlite3
 
-    from go_triton_spark.streaming.checkpoints import stats_from_sqlite
+    from go_triton_spark.streaming.checkpoints import stats_from_db
 
     _write_events_json(f"{tmp_path}/incoming/events", _recs(3))
     pipe = engine.store("events", schema=EVENTS_SCHEMA, once=True)
@@ -128,7 +128,7 @@ def test_checkpoint_sqlite_mirror(engine, tmp_path):
     client, stream, shard, seq_num, updated = rows[0]
     assert stream == "events" and seq_num.isdigit() and updated > 0
     # age stats via SQL only (external monitor path)
-    ages = stats_from_sqlite(db)
+    ages = stats_from_db(db)
     assert ages and all(0 <= v < 3600 for v in ages.values())
     # second mirror is an UPSERT, not duplicate inserts
     assert engine.mirror_checkpoints(db) == n
@@ -258,11 +258,11 @@ def test_compact_under_load_no_loss_no_reader_failure(engine, tmp_path, spark):
     """`compact` running next to a LIVE store and concurrent `cat`
     readers (the production shape: a compaction cron against an archive
     that never stops ingesting). Invariants: cold hours get rewritten,
-    the live hour is skipped (hot-hour guard — compacting it could
-    delete a file landing mid-swap), readers never fail (at most ONE
-    documented retry when a pre-swap file list meets the post-swap
-    filesystem), counts only grow — staging dirs must never be
-    visible as bogus partitions — and nothing is lost. Also
+    the live hour is skipped (hot-hour guard — the sink writes part
+    files at their final names, so a hot hour can hold one still being
+    written), readers never fail and never retry (compact deletes no
+    file a reader listed), counts only grow — staging dirs must never
+    be visible as bogus partitions — and nothing is lost. Also
     regression-covers the round-5 read fix: cat must survive a real
     rewrite of a streaming-ingested archive (the sink manifest still
     names the old files)."""
@@ -297,19 +297,7 @@ def test_compact_under_load_no_loss_no_reader_failure(engine, tmp_path, spark):
             try:
                 counts.append(one_cat())
             except Exception as exc:  # noqa: BLE001 — record, don't die
-                # the documented compact contract: a reader that listed
-                # files just before the swap may fail its open ONCE
-                # (path-based FS can't keep replaced paths alive);
-                # the retry re-lists fresh and must succeed. Anything
-                # else — or a second failure — is a real error.
-                msg = str(exc)
-                if "FILE_NOT_EXIST" in msg or "FileNotFound" in msg:
-                    try:
-                        counts.append(one_cat())
-                    except Exception as exc2:  # noqa: BLE001
-                        read_errors.append("retry failed: " + repr(exc2))
-                else:
-                    read_errors.append(repr(exc))
+                read_errors.append(repr(exc))
             time.sleep(0.1)
 
     rt = threading.Thread(target=reader, daemon=True)

@@ -8,9 +8,10 @@ cross-process claims and deserve a cross-process test).
 Each worker loops: ingest a 1-row fragment (job-unique event_id) ->
 compact the hour (min_age_hours=0 so every pass is hot). The final
 invariant is EXACT-ONCE: total rows == distinct event_ids == total
-successful ingests across workers. A rescue that resurrects a peer
-compactor's output (the pre-lock silent-duplication bug) fails the
-distinct check; any swap/rescue loss fails the count check.
+successful ingests across workers. A fragment that lands between a
+compaction's listing and its commit must stay live exactly once: a
+marker that also named it as retired loses it (count check), one
+that left a peer's rewrite of it live doubles it (distinct check).
 
 Usage: python tools/stress_mp_compact.py [SECONDS] [WORKERS]
 Prints WORKER lines, a CHECK line, and MP-COMPACT-SOAK PASS/FAIL.
@@ -39,8 +40,8 @@ spark = (builder(f"mp-compact-{ident}")
 spark.sparkContext.setLogLevel("ERROR")
 store = ArchiveStore(spark, root)
 when = dt.datetime(2020, 1, 1, 3, tzinfo=UTC)
-ops = {"ingests": 0, "swaps": 0, "locked": 0, "contended": 0,
-       "rescues": 0, "quarantined": 0, "errors": 0}
+ops = {"ingests": 0, "compacts": 0, "locked": 0, "contended": 0,
+       "errors": 0}
 t0 = time.monotonic(); k = 0
 base = 100_000 * ident
 while time.monotonic() - t0 < seconds:
@@ -58,11 +59,9 @@ while time.monotonic() - t0 < seconds:
     try:
         st = store.compact("events", when.date(), "archive",
                            min_age_hours=0.0)
-        ops["swaps"] += st["hours"]
+        ops["compacts"] += st["hours"]
         ops["locked"] += st["hours_locked"]
         ops["contended"] += st["hours_contended"]
-        ops["rescues"] += st["files_rescued"]
-        ops["quarantined"] += st["hours_quarantined"]
     except Exception as e:
         msg = str(e)
         if ("FILE_NOT_EXIST" in msg or "FileNotFound" in msg

@@ -7,14 +7,13 @@ EVERY maintenance pair that can race on a live archive:
     cat-compact      readers vs fragmenting compact loop (r9 pair)
     cat-expire       readers vs an ingest/expire retention churn
     compact-compact  two compact crons racing the same slice
-                     (+ a fragmenter so real swaps keep happening)
+                     (+ a fragmenter so real rewrites keep happening)
     sink-compact     streaming store micro-batch commits vs compact
     sink-expire      streaming store micro-batch commits vs retention
     ingest-compact   backfill ingest_dataframe renaming into the SAME
-                     cold hour the compaction cron is swapping (r11
-                     verdict #5 — found the straggler-destroy bug the
-                     r12 rescue fix closes), incl. the preserved-
-                     staging recovery leg
+                     cold hour the compaction cron is rewriting (r11
+                     verdict #5): a straggler must stay live, incl.
+                     the preserved-staging recovery leg
     ingest-expire    backfill ingest vs the retention cron's date-dir
                      rmtree: destination-vanished failures must take
                      the preserved-staging path, never silent loss
@@ -27,13 +26,17 @@ Invariant, every pair: a reader must FAIL LOUDLY (documented retry
 classes only) or HEAL — never return fewer rows than the stable set,
 and grow-only counters never go backwards. Writer-side transients are
 tolerated only in their documented classes (compact hours_vanished /
-hours_contended, expire-vs-staging).
+hours_contended, expire-vs-staging). Each pair counts the reader
+errors in _RETRYABLE (``read_retries``). cat-compact,
+compact-compact and ingest-compact run no expire and no live sink,
+so only a compaction could cause one — and compact deletes no file
+a reader listed — so those pairs FAIL on any.
 
 Before the r10 compact fix this harness's compact-compact leg could
 corrupt: both crons shared one FIXED staging name, so B's entry
-rmtree deleted A's staged output mid-write and A's RENAME_EXCHANGE
-could put B's half-written tmp live. Unique-per-attempt staging names
-+ stale-only sweeping closed it (plans/archive_store.py).
+rmtree deleted A's staged output mid-write. Unique-per-attempt
+staging names + stale-only sweeping closed it
+(plans/archive_store.py).
 
     python tools/stress_race_matrix.py [pair|all] [seconds-per-pair]
 """
@@ -59,11 +62,14 @@ ROOT = "/tmp/stress_race_matrix"
 
 _RETRYABLE = ("FILE_NOT_EXIST", "FileNotFound", "PATH_NOT_FOUND",
               "UNABLE_TO_INFER_SCHEMA",
-              # execution-time vanish of a planned file (compact swap
-              # between plan and open) — the archive's DOCUMENTED loud
-              # one-retry class (plans/archive_store.py compact
-              # docstring); loud-then-heal satisfies the invariant
+              # execution-time vanish of a planned file (an expire
+              # between plan and open) or a sink file read mid-write:
+              # loud-then-heal satisfies the invariant
               "FAILED_READ_FILE")
+
+#: pairs with no expire and no live sink: a compaction is their only
+#: writer that could fail a read, and it must never
+_NO_READ_RETRY = ("cat-compact", "compact-compact", "ingest-compact")
 
 
 class Harness:
@@ -86,9 +92,10 @@ class Harness:
         self.stop = threading.Event()
         self._real_rename = os.rename   # pre-injector (see run_pair)
         self.problems: list[str] = []
-        self.ops = {"swaps": 0, "expires": 0, "commits": 0,
+        self.first_retry = ""    # text of the first reader retry
+        self.ops = {"compacts": 0, "expires": 0, "commits": 0,
                     "contended": 0, "locked": 0, "ingests": 0,
-                    "recoveries": 0, "rescues": 0, "quarantined": 0}
+                    "recoveries": 0, "read_retries": 0}
 
     def seed(self, when, start, n, files):
         rows = [(i, dt.datetime(2020, 1, 1, tzinfo=UTC), i % 7, "click",
@@ -110,11 +117,9 @@ class Harness:
                 st = self.eng.archive.compact(
                     "events", self.cold.date(), "archive",
                     min_age_hours=1.0)
-                self.ops["swaps"] += 1
+                self.ops["compacts"] += 1
                 self.ops["contended"] += st.get("hours_contended", 0)
                 self.ops["locked"] += st.get("hours_locked", 0)
-                self.ops["rescues"] += st.get("files_rescued", 0)
-                self.ops["quarantined"] += st.get("hours_quarantined", 0)
             except FileNotFoundError:
                 pass
             except Exception as exc:  # noqa: BLE001
@@ -192,7 +197,7 @@ class Harness:
     def ingester(self):
         """Backfill writer (r11 verdict #5): lands 4-row batches
         directly into the COLD hour via ingest_dataframe, so its
-        private-staging rename loop races compact's rewrite+swap and
+        private-staging rename loop races compact's rewrite+commit and
         expire's retention walk. Every third loop also churns the
         EXPIRED date (uncounted id range) to force the
         destination-vanished failure; failures are recovered through
@@ -276,6 +281,8 @@ class Harness:
             except Exception as exc:  # noqa: BLE001
                 msg = str(exc)
                 if any(t in msg for t in _RETRYABLE):
+                    self.first_retry = self.first_retry or msg[:300]
+                    self.ops["read_retries"] += 1
                     continue   # documented loud retry class
                 self.problems.append(
                     f"cat: {type(exc).__name__}: {msg[:2000]}")
@@ -321,15 +328,11 @@ class Harness:
                 cur = {i for i in live if lo_id <= i < hi_id}
                 missing = prev_ids[name] - cur
                 if missing:
-                    # The documented reader contract around a compact
-                    # swap is "one retry / fresh listing heals": a
-                    # straggler riding the swap is invisible for the
-                    # few syscalls between the exchange and its
-                    # rescue rename. Confirm the SPECIFIC missing ids
-                    # on a fresh cat — ids that reappear are the
-                    # contract working; ids still absent are loss
-                    # (and cannot be masked by writers refilling the
-                    # window with new ids).
+                    # Confirm the SPECIFIC missing ids on a fresh cat —
+                    # ids that reappear were a transient view (e.g. a
+                    # sink or expire race the cat's re-list healed);
+                    # ids still absent are loss (and cannot be masked
+                    # by writers refilling the window with new ids).
                     try:
                         fresh = {r[0] for r in self.eng.cat(
                             "events", lo, hi, client="archive",
@@ -368,19 +371,18 @@ class Harness:
             readers = [lambda: self.reader(False, True)]
         elif pair == "expire-compact":
             # the two maintenance crons racing on the same stream tree:
-            # expire churns an old date while compact swaps the cold
-            # hour — compact's vanished-hour branch and expire's
+            # expire churns an old date while compact rewrites the
+            # cold hour — compact's vanished-hour branch and expire's
             # staging sweep are the surfaces under test
             writers = [self.expirer, lambda: self.compactor(5000)]
             readers = [lambda: self.reader(False, False),
                        lambda: self.reader(True, False)]
         elif pair == "ingest-compact":
             # backfill ingest renaming into the SAME cold hour the
-            # compaction cron is swapping: the r12 straggler-rescue
-            # fix is the surface under test (a part landing between
-            # compact's pinned listing and the swap used to be
-            # rmtree'd silently), plus the preserved-staging recovery
-            # leg when an interleaving breaks the move
+            # compaction cron is rewriting: a part landing between
+            # compact's pinned listing and its commit must stay live,
+            # plus the preserved-staging recovery leg when an
+            # interleaving breaks the move
             writers = [self.ingester, lambda: self.compactor(5000)]
             readers = [lambda: self.reader(False, False, True)] * 2
         elif pair == "ingest-expire":
@@ -466,6 +468,10 @@ class Harness:
                 t.join(30)
         finally:
             os.rename = real_rename
+        if pair in _NO_READ_RETRY and self.ops["read_retries"]:
+            self.problems.append(
+                f"{self.ops['read_retries']} reader errors with no "
+                f"expire or sink running (first: {self.first_retry})")
         return {"pair": pair, **self.ops,
                 "problems": self.problems[:5]}
 
