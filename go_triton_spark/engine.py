@@ -42,7 +42,6 @@ class TritonEngine:
         self.archive = ArchiveStore(spark, os.path.join(root, "archive"))
         self.checkpoint_root = os.path.join(root, "checkpoints")
         self._pipelines: dict[str, StorePipeline] = {}
-        self._monitor = None
 
     # ------------------------------------------------------------ config
 
@@ -83,7 +82,6 @@ class TritonEngine:
     def stop_all(self) -> None:
         for pipe in self._pipelines.values():
             pipe.stop()
-        self._pipelines = {}
 
     # ------------------------------------------------------ cat (replay)
 
@@ -121,15 +119,33 @@ class TritonEngine:
         return mirror_to_db(self.checkpoint_root, db_url)
 
     def stream_stats(self) -> dict[str, dict]:
-        """Per-query micro-batch progress (rows/sec, batch durations) —
-        the Spark-native upgrade of checkpoint-age monitoring. The
-        listener installs on first call; queries started after that
-        report here keyed by query name."""
-        if self._monitor is None:
-            from go_triton_spark.streaming.monitor import ProgressMonitor
+        """Last micro-batch progress of each store pipeline this engine
+        started, stopped ones included, keyed by query name: rows/sec
+        and the batch-duration breakdown, the Spark-native upgrade of
+        checkpoint-age monitoring.
 
-            self._monitor = ProgressMonitor.install(self.spark)
-        return self._monitor.progress()
+        Read the breakdown before resizing: ``getBatch`` (plus
+        ``latestOffset``) is the source's listing and planning of the
+        batch's new files, ``addBatch`` is the write. Raise
+        ``maxFilesPerTrigger`` or add executors when ``addBatch``
+        dominates and batches fall behind. A batch whose ``getBatch``
+        rivals its ``addBatch`` is spending its time listing, which
+        neither lever shortens: check how the session lists files
+        (``session.py`` keeps listing on the driver under a local
+        master)."""
+        out = {}
+        for pipe in self._pipelines.values():
+            p = pipe.query.lastProgress
+            if p is not None:
+                out[str(p.name or p.id)] = {
+                    "batch_id": p.batchId,
+                    "num_input_rows": p.numInputRows,
+                    "input_rows_per_second": p.inputRowsPerSecond,
+                    "processed_rows_per_second": p.processedRowsPerSecond,
+                    "duration_ms": dict(p.durationMs or {}),
+                    "timestamp": p.timestamp,
+                }
+        return out
 
     # ----------------------------------------------------------- queries
 

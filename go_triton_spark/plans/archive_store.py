@@ -102,7 +102,7 @@ def list_dates_from_range(start: _dt.date, end: _dt.date) -> list[_dt.date]:
 _GRACE_S = 3600.0
 
 #: per-hour commit marker; the ``_`` prefix keeps it out of every data
-#: listing (Spark's, ``cat``'s and the crash sweep's)
+#: listing (Spark's and ``cat``'s)
 _MARKER = "_compacted.json"
 #: name prefix of every compaction output: one that no marker names (in
 #: flight, or left by a crash) is never read
@@ -166,6 +166,40 @@ def _holds_committed_parts(root: str) -> bool:
             if fn.endswith(".parquet") and not fn.startswith((".", "_")):
                 return True
     return False
+
+
+def _move_parts(staging: str, root: str) -> None:
+    """Rename every visible part file under ``staging`` to the same
+    relative path under ``root``: the commit step of every staged
+    write. Names are job-unique (part-<uuid>) and each rename is
+    same-filesystem atomic, so a reader sees a file whole or not at
+    all. A file already moved is gone from ``staging``, so a second
+    call after a failure finishes the move without repeating any."""
+    for base, dirs, files in os.walk(staging):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        rel = os.path.relpath(base, staging)
+        for fn in files:
+            if fn.startswith((".", "_")) or not fn.endswith(".parquet"):
+                continue
+            dest_dir = root if rel == "." else os.path.join(root, rel)
+            os.makedirs(dest_dir, exist_ok=True)
+            os.rename(os.path.join(base, fn), os.path.join(dest_dir, fn))
+
+
+def _write_partitioned(df: DataFrame, path: str, mode: str) -> None:
+    # ``commit_batch`` reads the ``_SUCCESS`` file as "the staged write
+    # completed", so it is written whatever the cluster's conf says
+    (df.write.mode(mode)
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
+        .partitionBy(*_PARTITION_COLS)
+        .parquet(path))
+
+
+def _sink_prefix(stream: str, client: str) -> str:
+    """Name prefix of the live store's per-batch staging dirs (the
+    batch id follows it). The backfill ingest's sweep (``.ingest_tmp.``)
+    and compact's (``._compact_tmp.``) never match it."""
+    return f".sink_tmp.{stream}-{client}."
 
 
 def _hadoop_subdirs(spark: SparkSession, path: str) -> list[str]:
@@ -260,8 +294,7 @@ class ArchiveStore:
     # ------------------------------------------------------------- write
 
     def ingest_dataframe(self, df: DataFrame, stream: str, client: str,
-                         when: _dt.datetime | None = None,
-                         mode: str = "append") -> None:
+                         when: _dt.datetime | None = None) -> None:
         """Append records to the archive under processing-time date/hour.
 
         Date is *processing* day, not event time, exactly like the
@@ -276,18 +309,16 @@ class ArchiveStore:
             .withColumn("date", F.lit(when.strftime("%Y%m%d")))
             .withColumn("hour", F.lit(when.strftime("%H")))
             # cast: F.lit(int) infers INT32 for epoch seconds, but the
-            # streaming sink stamps INT64 (unix_timestamp) — mixed
+            # live store stamps INT64 (unix_timestamp) — mixed
             # physical types across archive files break any read that
             # touches the column (vectorized reader refuses the
             # narrow->wide convert per file)
             .withColumn("_archive_sort", F.lit(ts).cast("long"))
         )
-        if mode != "append" or "://" in self.root:
-            # overwrite / object stores: the engine-native writer owns
-            # the commit protocol
-            (out.write.mode(mode)
-                .partitionBy(*_PARTITION_COLS)
-                .parquet(self.root))
+        if "://" in self.root:
+            # object stores: the engine-native writer owns the commit
+            # protocol
+            _write_partitioned(out, self.root, "append")
             return
         # CONCURRENT-APPEND SAFETY on local parquet roots (r10
         # expire-compact matrix find): two batch appends to the SAME
@@ -355,23 +386,9 @@ class ArchiveStore:
         # warning) residue that still holds committed part files —
         # hidden names never list, so readers are unaffected either
         # way, and the only staged copy is never silently destroyed.
-        (out.write.mode("overwrite")
-            .partitionBy(*_PARTITION_COLS)
-            .parquet(staging))
+        _write_partitioned(out, staging, "overwrite")
         try:
-            for base, dirs, files in os.walk(staging):
-                dirs[:] = [d for d in dirs
-                           if not d.startswith((".", "_"))]
-                rel = os.path.relpath(base, staging)
-                for fn in files:
-                    if fn.startswith((".", "_")) \
-                            or not fn.endswith(".parquet"):
-                        continue
-                    dest_dir = (self.root if rel == "." else
-                                os.path.join(self.root, rel))
-                    os.makedirs(dest_dir, exist_ok=True)
-                    os.rename(os.path.join(base, fn),
-                              os.path.join(dest_dir, fn))
+            _move_parts(staging, self.root)
         except Exception as exc:
             # name the preserved staging dir NOW (r11 advice): the
             # age sweep above quarantines rather than deletes it, but
@@ -388,6 +405,69 @@ class ArchiveStore:
             exc.triton_staging_dir = staging
             raise
         shutil.rmtree(staging, ignore_errors=True)
+
+    def commit_batch(self, df: DataFrame, stream: str, client: str,
+                     batch_id: int) -> None:
+        """Commit micro-batch ``batch_id`` of the live store, exactly once.
+
+        ``df`` already carries the partition columns, stamped from the
+        batch's processing time (``StorePipeline``). The batch is
+        written to the hidden staging dir
+        ``.sink_tmp.<stream>-<client>.<batch_id>`` under the root, its
+        part files are renamed into the partition tree (``_move_parts``,
+        the move ``ingest_dataframe`` makes), and then the write's
+        ``_SUCCESS`` file is renamed to ``_DONE``. The staging dir is
+        thus in one of three states, and Spark reruns a batch whose
+        commit it never logged under the same id:
+
+        - ``_DONE``: the batch is in the archive; the rerun does nothing;
+        - ``_SUCCESS``: the write completed, the move may not have; the
+          rerun finishes the move from the same staged files;
+        - neither: nothing of the batch is visible; the rerun writes it.
+
+        So no row lands twice, and a staged batch keeps the date/hour
+        it was first written under. Spark commits batch N-1 before it
+        plans batch N, so batch N first deletes this stream-client's
+        older staging dirs: only the last batch's dir stays.
+
+        URI roots (object stores) have no atomic rename: the batch
+        appends through Spark's writer, and a rerun after a crash can
+        append it again (at-least-once, the reference's own guarantee,
+        store.go:51-67).
+        """
+        if "://" in self.root:
+            _write_partitioned(df, self.root, "append")
+            return
+        self.drop_sink_staging(stream, client, below=batch_id)
+        staging = os.path.join(self.root,
+                               f"{_sink_prefix(stream, client)}{batch_id}")
+        done = os.path.join(staging, "_DONE")
+        written = os.path.join(staging, "_SUCCESS")
+        if os.path.exists(done):
+            return
+        if not os.path.exists(written):
+            # overwrite clears what a crash mid-write left
+            _write_partitioned(df, staging, "overwrite")
+        _move_parts(staging, self.root)
+        os.rename(written, done)
+
+    def drop_sink_staging(self, stream: str, client: str,
+                          below: int | None = None) -> None:
+        """Delete the live store's staging dirs of ``stream``/``client``
+        whose batch id is below ``below``; all of them when None, for a
+        checkpoint that has planned no batch yet, whose ids restart at
+        0 and would otherwise meet an abandoned checkpoint's dirs."""
+        import shutil
+
+        if "://" in self.root or not os.path.isdir(self.root):
+            return
+        prefix = _sink_prefix(stream, client)
+        for name in os.listdir(self.root):
+            n = name[len(prefix):]
+            if (name.startswith(prefix) and n.isdigit()
+                    and (below is None or int(n) < below)):
+                shutil.rmtree(os.path.join(self.root, name),
+                              ignore_errors=True)
 
     # -------------------------------------------------------------- read
 
@@ -410,21 +490,16 @@ class ArchiveStore:
           ``ordered``; skip it for analytical consumers that don't need
           replay fidelity (saves a global sort)
 
-        Read path (round-5): DIRECTORY LISTING, not the streaming
-        sink's ``_spark_metadata`` manifest. Reading the root lets
-        Spark's FileStreamSink detection take over and restricts the
-        scan to manifest-listed files — which (a) silently hides
-        batch-ingested rows and (b) breaks the instant ``compact``
-        rewrites an hour (the manifest still names the old files; a
-        post-compaction cat died with FileNotFoundException). Reading
-        the ``stream=`` subdir (``basePath`` preserves the partition
-        columns) lists the filesystem instead, so batch, streaming,
-        and compacted archives all replay uniformly.
-        A file not yet committed to the sink manifest may be replayed
-        (at-least-once on crash — the reference's own guarantee,
-        store.go:51-67), and a cat racing a micro-batch file
-        mid-write can fail transiently (footer not yet on disk): the
-        sink writes part files at their final names. A ``compact``
+        Read path: DIRECTORY LISTING. Every writer of a part file (the
+        live store's micro-batches, backfill ingest, ``compact``) stages
+        it in a hidden dir and renames it into the partition tree whole,
+        so a listed file is never one still being written. The walk
+        reads the ``stream=`` subdirs (``basePath`` keeps the partition
+        columns), never the root: an archive written by older code
+        still holds a streaming sink's ``_spark_metadata`` manifest,
+        and reading the root would let Spark restrict the scan to the
+        files it names, hiding batch-ingested rows and failing after a
+        ``compact`` (the manifest names the old files). A ``compact``
         never fails a cat: the pruning walk reads each hour's commit
         marker before it lists the hour and keeps only the live files
         (``_live_files``), so a fresh cat reads the compaction's
@@ -565,10 +640,8 @@ class ArchiveStore:
             last: Exception | None = None
             for _attempt in range(3):
                 # the shared FileStatusCache serves STALE listings for
-                # a path read before new sink files landed (the
-                # manifest read never hit it — the sink log is re-read
-                # per query); a replay of a live archive must list
-                # fresh every time
+                # a path read before new micro-batch files landed; a
+                # replay of a live archive must list fresh every time
                 self.spark.catalog.refreshByPath(stream_dir)
                 if _attempt:
                     # the failed path may be GONE (expire rmtree'd a
@@ -662,151 +735,6 @@ class ArchiveStore:
         return self._filter_cat(src, stream, start_date, end_date,
                                 client, ordered, listed)
 
-    def _manifest_committed_names(self) -> set:
-        """Basenames recorded in the streaming sink's _spark_metadata
-        manifest (empty set when no manifest exists — a pure batch
-        archive). FileStreamSink log v1: one 'v1' header line, then a
-        JSON object per committed file carrying a 'path'; periodic
-        '<n>.compact' files re-list everything so unioning every
-        parseable line is correct for MEMBERSHIP (the sink never
-        deletes). Driver-side, bounded by committed-batch count."""
-        import json
-
-        mdir = os.path.join(self.root, "_spark_metadata")
-        names: set = set()
-        if not os.path.isdir(mdir):
-            return names
-        for fn in sorted(os.listdir(mdir)):
-            p = os.path.join(mdir, fn)
-            if fn.startswith(".") or not os.path.isfile(p):
-                continue
-            try:
-                with open(p) as fh:
-                    for line in fh:
-                        line = line.strip()
-                        if not line.startswith("{"):
-                            continue
-                        try:
-                            rec = json.loads(line)
-                        except ValueError:
-                            continue
-                        if rec.get("path"):
-                            names.add(os.path.basename(rec["path"]))
-            except OSError:
-                continue
-        return names
-
-    def quarantine_crash_residue(self, stream: str | None = None,
-                                 max_age_days: int = 14) -> int:
-        """Rename never-committed trailer-less part files out of the
-        read path — the crash-recovery sweep.
-
-        A SIGKILLed store leaves the in-flight task's part file at its
-        FINAL name with no parquet trailer (0 bytes, or truncated
-        mid-row-group); because ``cat`` refuses ignoreCorruptFiles,
-        one such file makes every later replay of the range fail
-        loudly forever. The residue's DATA is not lost: its batch
-        never committed, so the source checkpoint replays it on resume
-        (at-least-once, store.go:51-67) — quarantining the bytes loses
-        nothing. Two safety rules make the sweep sound:
-
-        - Only files ABSENT from the sink's ``_spark_metadata``
-          manifest are touched: a manifest-COMMITTED file failing its
-          trailer check is real corruption and must keep failing the
-          read loudly, never vanish.
-        - Only run when NO live writer exists for the stream —
-          ``StorePipeline.start`` calls this before starting its query
-          (the reference's single-writer-per-stream model), because a
-          file a live sink task is STILL WRITING is trailer-less and
-          unmanifested too, and renaming it makes the task's commit
-          fail (measured: TASK_WRITE_FAILED under the concurrency
-          soak when the sweep ran at cat time). Never call it from a
-          reader against a live archive.
-
-        Valid parquet ends with the 4-byte 'PAR1' magic; a file
-        missing it was never closed by its writer. Scope: one stream's
-        subtree (all clients), date dirs whose mtime is within
-        ``max_age_days`` — residue only exists in partitions the
-        crashed writer was touching, so the walk is bounded by recent
-        activity, not archive lifetime. Local roots only. Quarantine name =
-        '.<name>.crash': the dot prefix hides it from Spark listings
-        AND the changed suffix keeps it out of compact's *.parquet
-        enumeration. Renames, never deletes — an operator can inspect
-        the bytes; ``expire`` reaps the dir."""
-        from go_triton_spark.reporting import get_error_reporter, safe_report
-
-        if "://" in self.root or not os.path.isdir(self.root):
-            return 0
-        streams = ([f"stream={stream}"] if stream is not None else
-                   [n for n in sorted(os.listdir(self.root))
-                    if n.startswith("stream=")])
-        cutoff = _dt.datetime.now().timestamp() - max_age_days * 86400
-        dirs: list = []
-        for sname in streams:
-            sdir = os.path.join(self.root, sname)
-            if not os.path.isdir(sdir):
-                continue
-            for cname in sorted(os.listdir(sdir)):
-                if not cname.startswith("client="):
-                    continue
-                cdir = os.path.join(sdir, cname)
-                for dname in sorted(os.listdir(cdir)):
-                    ddir = os.path.join(cdir, dname)
-                    try:
-                        recent = (dname.startswith("date=")
-                                  and os.path.getmtime(ddir) >= cutoff)
-                    except OSError:
-                        continue
-                    if recent:
-                        dirs.append(ddir)
-
-        committed = None
-        n = 0
-        for d in dirs:
-            for base, _dirs, files in os.walk(d):
-                # NEVER descend into hidden/underscore dirs (r10 matrix
-                # soak find, sink-compact pair): os.walk was entering a
-                # concurrent compact's dot-prefixed staging and its
-                # _temporary task dirs, whose in-flight part files are
-                # trailer-less + unmanifested BY DESIGN — the sweep
-                # renamed them to .crash, and compact then committed a
-                # rewrite missing those rows (permanent loss,
-                # reproduced ~1 in 20 commits). Files
-                # under hidden dirs are invisible to cat anyway, so
-                # they can never poison a replay — out of scope here.
-                _dirs[:] = [sub for sub in _dirs
-                            if not sub.startswith((".", "_"))]
-                for fn in files:
-                    if fn.startswith(".") or not fn.endswith(".parquet"):
-                        continue
-                    fp = os.path.join(base, fn)
-                    try:
-                        ok = os.path.getsize(fp) > 12
-                        if ok:
-                            with open(fp, "rb") as fh:
-                                fh.seek(-4, os.SEEK_END)
-                                ok = fh.read(4) == b"PAR1"
-                    except OSError:
-                        continue  # raced compact/expire; read retry copes
-                    if ok:
-                        continue
-                    if committed is None:
-                        committed = self._manifest_committed_names()
-                    if fn in committed:
-                        continue  # committed + bad trailer: fail loudly
-                    try:
-                        os.rename(fp, os.path.join(base, f".{fn}.crash"))
-                    except OSError:
-                        continue
-                    n += 1
-                    safe_report(
-                        get_error_reporter(), "crash_residue_quarantined",
-                        f"quarantined never-committed part file {fp} "
-                        f"(no parquet trailer; its batch replays from "
-                        f"the source checkpoint)",
-                        path=fp, root=self.root)
-        return n
-
     def _filter_cat(self, src: DataFrame, stream: str,
                     start_date: _dt.date, end_date: _dt.date,
                     client: str | None, ordered: bool,
@@ -875,12 +803,12 @@ class ArchiveStore:
 
         Live-ingest safety (round-5): hour partitions younger than
         ``min_age_hours`` are SKIPPED (counted in ``hours_skipped``).
-        The streaming sink writes its part files at their final names
-        in the wall-clock hour — and a micro-batch that STARTED just
-        before rollover still lands in the previous hour shortly after
-        — so a hot hour can hold a file still being written, which the
-        rewrite must not read. One hour of grace keeps ``compact`` safe
-        to run as a cron next to a live ``store`` with no coordination.
+        The live store keeps adding a small file per micro-batch to the
+        wall-clock hour — and a micro-batch that STARTED just before
+        rollover still lands in the previous hour shortly after — so a
+        rewrite of a hot hour is outdated at the next batch, and each
+        cron pass would rewrite the hour again. One hour of grace
+        leaves each hour to one rewrite, once its writes have stopped.
         A file that lands mid-compaction stays live: it is neither an
         output nor retired.
         """
@@ -949,9 +877,8 @@ class ArchiveStore:
                 if missing_file and os.path.isdir(hour_dir):
                     # the hour is still THERE but a listed file is
                     # gone: something outside the hour lock removed it
-                    # while this rewrite read (an operator, or the
-                    # store's crash sweep moving never-committed
-                    # residue aside). Nothing was committed, so
+                    # while this rewrite read (an operator). Nothing
+                    # was committed, so
                     # skipping is lossless — count it so operators see
                     # it. STRICTLY missing-file class: a broader
                     # OSError (EACCES/ENOSPC) here is a real failure

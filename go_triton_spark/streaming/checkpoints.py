@@ -1,8 +1,10 @@
 """Checkpoint compatibility: the ``triton_checkpoint`` view + stats.
 
 Structured Streaming already checkpoints offsets/commits at
-``checkpointLocation`` (exactly-once for the file sink) — the engine
-needs no SQL checkpoint table. This module exists for parity with the
+``checkpointLocation`` — the engine needs no SQL checkpoint table. A
+batch whose commit is not logged reruns under the same batch id, and
+the store's batch commit (``ArchiveStore.commit_batch``) lands each
+batch id once, so the archive is exactly-once. This module exists for parity with the
 reference's monitoring surface:
 
 - ``triton_checkpoint`` view (triton/checkpoint.go:95-103 DDL):

@@ -156,8 +156,8 @@ def _spy_listed(monkeypatch, st):
 def test_cat_client_guard_from_listing(spark, store, sf_dir, monkeypatch):
     """The guard reads the client set off the pruning walk's file
     listing. Two clients with part files in range still raise; a
-    second client whose in-range hour holds only hidden or quarantined
-    crash residue contributes no file, so cat answers from the listing
+    second client whose in-range hour holds only hidden files
+    contributes no file, so cat answers from the listing
     exactly what the row-level check answers: one client, no error."""
     ev = _events(spark, sf_dir).limit(3)
     when = dt.datetime(2015, 6, 30, 4, tzinfo=UTC)
@@ -384,125 +384,129 @@ def test_cat_accepts_string_dates(spark, store, sf_dir):
         store.cat("events", "2015-07-02", "2015-07-01")
 
 
-def test_cat_quarantines_crash_residue_but_fails_loud_on_committed(
-        spark, store, sf_dir):
-    """Round-6 co-load finding: a SIGKILLed store leaves the in-flight
-    task's part file at its FINAL name with no parquet trailer, and
-    because cat refuses ignoreCorruptFiles, every later replay of the
-    range died loudly forever. Contract now: trailer-less part files
-    ABSENT from the sink manifest are crash residue — the sweep
-    (invoked by StorePipeline.start before its sink writes, or as an
-    explicit maintenance op) renames them '.<name>.crash' and reports,
-    because their batch replays from the source checkpoint; a
-    manifest-COMMITTED file with a bad trailer is real corruption —
-    never touched, the read keeps failing loudly. The sweep runs ONLY
-    where no live writer exists (it renamed in-flight files when wired
-    into cat — the concurrency soak caught TASK_WRITE_FAILED)."""
-    from go_triton_spark.reporting import (CollectingReporter,
-                                           set_error_reporter)
-
+def test_cat_fails_loud_on_trailerless_part_file(spark, store, sf_dir):
+    """A visible part file with no parquet trailer is corruption: cat
+    refuses ignoreCorruptFiles, so the replay fails loudly instead of
+    silently dropping the file's rows. (Every writer stages and
+    renames whole files, so a live store never leaves such a file.)"""
     ev = _events(spark, sf_dir).limit(10)
     when = dt.datetime(2015, 6, 30, 2, tzinfo=UTC)
     store.ingest_dataframe(ev, "events", "archive", when=when)
     hour_dir = os.path.join(
         store.root, "stream=events", "client=archive",
         "date=20150630", "hour=02")
-    # crash residue: one 0-byte and one truncated mid-row-group file
-    open(os.path.join(hour_dir, "part-00009-dead.c000.snappy.parquet"),
-         "wb").close()
-    with open(os.path.join(hour_dir,
-                           "part-00010-dead.c000.snappy.parquet"),
-              "wb") as fh:
-        fh.write(b"PAR1" + b"\x00" * 64)  # header magic, no trailer
-    # the ingest dir is older than the sweep's recency cutoff — a
-    # sweep pruned to recent activity must still see it once the
-    # residue lands (the residue's write updates the dir mtime)
-    with pytest.raises(Exception):
-        store.cat("events", dt.date(2015, 6, 30)).count()  # poisoned
-    rep = CollectingReporter()
-    set_error_reporter(rep)
-    try:
-        assert store.quarantine_crash_residue(stream="events") == 2
-        out = store.cat("events", dt.date(2015, 6, 30))
-        assert out.count() == 10  # replay healthy, nothing lost
-    finally:
-        set_error_reporter(None)
-    names = sorted(os.listdir(hour_dir))
-    assert ".part-00009-dead.c000.snappy.parquet.crash" in names
-    assert ".part-00010-dead.c000.snappy.parquet.crash" in names
-    kinds = [k for (k, _m, _c) in rep.events]
-    assert kinds.count("crash_residue_quarantined") == 2
-
-    # a manifest-committed file with a bad trailer must NOT vanish:
-    # fake a sink manifest listing a corrupt file, then corrupt it
-    bad = os.path.join(hour_dir, "part-00011-committed.c000.snappy.parquet")
+    bad = os.path.join(hour_dir, "part-00011-corrupt.c000.snappy.parquet")
     with open(bad, "wb") as fh:
-        fh.write(b"PAR1" + b"\x00" * 32)
-    mdir = os.path.join(store.root, "_spark_metadata")
-    os.makedirs(mdir, exist_ok=True)
-    with open(os.path.join(mdir, "0"), "w") as fh:
-        fh.write('v1\n{"path":"file://%s","size":36,"isDir":false,'
-                 '"modificationTime":0,"blockReplication":1,'
-                 '"blockSize":1,"action":"add"}\n' % bad)
-    assert store.quarantine_crash_residue(stream="events") == 0
-    assert os.path.basename(bad) in os.listdir(hour_dir)  # not renamed
+        fh.write(b"PAR1" + b"\x00" * 32)   # header magic, no trailer
     with pytest.raises(Exception, match="PAR1|footer|Parquet|FAILED_READ"):
         store.cat("events", dt.date(2015, 6, 30)).count()
 
 
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
+def _sink_batch(spark, ids, when, parts=3):
+    """A micro-batch as the store pipeline hands it to commit_batch:
+    the partition columns already stamped, ``parts`` part files."""
+    return spark.createDataFrame(
+        [(i, "events", "live", when.strftime("%Y%m%d"),
+          when.strftime("%H"), int(when.timestamp())) for i in ids],
+        "event_id long, stream string, client string, date string, "
+        "hour string, _archive_sort long").repartition(parts)
 
 
-@settings(max_examples=30, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(files=st.lists(
-    st.tuples(
-        st.sampled_from([0, 5, 12, 13, 40, 4096]),   # size
-        st.booleans(),                               # valid PAR1 trailer
-        st.booleans()),                              # listed in manifest
-    min_size=0, max_size=8))
-def test_quarantine_selection_property(spark, tmp_path, files):
-    """The sweep touches EXACTLY the files that are (no trailer) AND
-    (absent from the manifest); everything else is left byte-for-byte
-    in place. Size 12 is the boundary: valid parquet is strictly
-    larger (PAR1 + footer + PAR1), so <=12 bytes is trailer-less by
-    size alone."""
+def _staging(store, batch_id):
+    return os.path.join(store.root, f".sink_tmp.events-live.{batch_id}")
+
+
+@pytest.mark.parametrize("crash", ["after_write", "mid_move", "after_done"])
+def test_commit_batch_rerun_lands_each_row_once(
+        spark, store, monkeypatch, crash):
+    """Spark reruns a micro-batch whose commit it never logged under
+    the same batch id. Whatever point the first attempt died at, the
+    rerun (here with DIFFERENT input, which must not be written) leaves
+    every original row in the archive exactly once."""
+    import go_triton_spark.plans.archive_store as A
+
+    when = dt.datetime(2015, 6, 30, 4, tzinfo=UTC)
+    first = list(range(30))
+    store.commit_batch(_sink_batch(spark, range(100, 130), when),
+                       "events", "live", 6)
+    if crash == "after_write":
+        def boom(staging, root):
+            raise OSError("crash after the staged write")
+        monkeypatch.setattr(A, "_move_parts", boom)
+    elif crash == "mid_move":
+        real_rename, calls = os.rename, {"n": 0}
+
+        def rename(src, dst):
+            if "/.sink_tmp." in src and src.endswith(".parquet"):
+                calls["n"] += 1
+                if calls["n"] == 2:     # one file moved, the rest staged
+                    raise OSError("crash mid-move")
+            return real_rename(src, dst)
+        monkeypatch.setattr(os, "rename", rename)
+    if crash == "after_done":
+        store.commit_batch(_sink_batch(spark, first, when),
+                           "events", "live", 7)
+    else:
+        with pytest.raises(OSError, match="crash"):
+            store.commit_batch(_sink_batch(spark, first, when),
+                               "events", "live", 7)
+        monkeypatch.undo()
+    if crash == "mid_move":
+        assert 0 < store.cat("events", when.date()).count() - 30 < 30
+
+    store.commit_batch(_sink_batch(spark, range(500, 530), when),
+                       "events", "live", 7)
+    ids = sorted(r[0] for r in store.cat("events", when.date())
+                 .select("event_id").collect())
+    assert ids == first + list(range(100, 130))
+    # batch 7 deleted batch 6's staging; its own stays, done
+    assert not os.path.exists(_staging(store, 6))
+    left = os.listdir(_staging(store, 7))
+    assert "_DONE" in left and "_SUCCESS" not in left
+
+
+def test_fresh_checkpoint_drops_abandoned_sink_staging(spark, tmp_path):
+    """A store start whose checkpoint has planned no batch first drops
+    the stream-client's staging dirs: the new checkpoint numbers its
+    batches from 0, and an abandoned checkpoint's done batch 0 would
+    otherwise swallow the new batch 0. Other streams' and clients'
+    staging is not touched, and the backfill ingest's age-gated sweep
+    of its own staging never touches the live store's."""
     import json
-    import uuid
+    import time
 
-    root = tmp_path / f"arch{uuid.uuid4().hex[:8]}"
-    hour = root / "stream=events" / "client=archive" / \
-        "date=20260101" / "hour=03"
-    hour.mkdir(parents=True)
-    manifest: list[str] = []
-    expect_quarantined, expect_kept = set(), set()
-    for i, (size, trailer, listed) in enumerate(files):
-        name = f"part-{i:05d}-x.c000.snappy.parquet"
-        body = bytearray(size)
-        if trailer and size >= 4:
-            body[-4:] = b"PAR1"
-        (hour / name).write_bytes(bytes(body))
-        if listed:
-            manifest.append(str(hour / name))
-        healthy = size > 12 and trailer and size >= 4
-        if healthy or listed:
-            expect_kept.add(name)
-        else:
-            expect_quarantined.add(name)
-    if manifest:
-        mdir = root / "_spark_metadata"
-        mdir.mkdir()
-        (mdir / "0").write_text(
-            "v1\n" + "\n".join(json.dumps({"path": f"file://{p}"})
-                               for p in manifest))
-    store = ArchiveStore(spark, str(root))
-    n = store.quarantine_crash_residue(stream="events")
-    assert n == len(expect_quarantined)
-    left = {f for f in os.listdir(hour) if not f.startswith(".")}
-    assert left == expect_kept
-    crashed = {f for f in os.listdir(hour) if f.startswith(".")}
-    assert crashed == {f".{name}.crash" for name in expect_quarantined}
+    from go_triton_spark.config import load_config
+    from go_triton_spark.engine import TritonEngine
+
+    src = tmp_path / "incoming" / "events"
+    src.mkdir(parents=True)
+    (src / "a.json").write_text("".join(
+        json.dumps({"event_id": i, "ts": "2020-01-01T00:00:00Z",
+                    "user_id": 1, "event_type": "x", "value": 1.0,
+                    "props": "{}"}) + "\n" for i in range(4)))
+    eng = TritonEngine(spark, str(tmp_path), client="live", config=load_config(
+        f"events:\n  name: events\n  source: file\n  format: json\n"
+        f"  path: {src}\n"))
+    root = eng.archive.root
+    abandoned = os.path.join(root, ".sink_tmp.events-live.0")
+    others = [os.path.join(root, n) for n in (
+        ".sink_tmp.events-other.0", ".sink_tmp.clicks-live.0")]
+    for d in [abandoned, *others]:
+        os.makedirs(d)
+        open(os.path.join(d, "_DONE"), "w").close()
+    stale = time.time() - 7200
+    os.utime(abandoned, (stale, stale))
+    eng.archive.ingest_dataframe(
+        spark.range(1).selectExpr("id AS event_id"), "other", "live",
+        when=dt.datetime(2015, 6, 30, 1, tzinfo=UTC))
+    assert os.path.isdir(abandoned)
+
+    pipe = eng.store("events", schema=EVENTS_SCHEMA, once=True)
+    pipe.await_once()
+    pipe.stop()
+    today = dt.datetime.now(tz=UTC).date()
+    assert eng.cat("events", today).count() == 4
+    assert all(os.path.isdir(d) for d in others)
 
 
 # --- r10 matrix-soak race fixes -------------------------------------------
@@ -581,45 +585,6 @@ def test_cat_survives_compact_between_listing_and_plan(
     out = store.cat("events", when.date()).count()
     assert state["raced"], "race hook never fired"
     assert out == expected, "cat silently lost rows to the plan race"
-
-
-def test_quarantine_never_descends_into_hidden_staging(
-        spark, store, sf_dir):
-    """The crash-residue sweep must skip hidden/underscore dirs: a
-    concurrent compact's staging holds trailer-less, unmanifested
-    in-flight files BY DESIGN, and quarantining them destroyed the
-    compacted hour (r10 matrix soak, sink-compact pair — permanent
-    row loss via an empty-staged swap). Files under hidden dirs are
-    invisible to cat, so they are out of the sweep's scope."""
-    ev = _events(spark, sf_dir).limit(5)
-    when = dt.datetime.now(tz=UTC) - dt.timedelta(hours=3)
-    store.ingest_dataframe(ev, "events", "archive", when=when)
-    ddir = os.path.join(
-        store.root, "stream=events", "client=archive",
-        f"date={when.strftime('%Y%m%d')}")
-    # a compact-staging twin mid-write: trailer-less part at its final
-    # name inside a hidden dir + a _temporary task dir
-    stage = os.path.join(ddir, f".hour={when.strftime('%H')}"
-                               "._compact_tmp.deadbeef")
-    task = os.path.join(stage, "_temporary", "0", "task_x")
-    os.makedirs(task)
-    inflight1 = os.path.join(stage, "part-00000-x.c000.snappy.parquet")
-    inflight2 = os.path.join(task, "part-00001-y.c000.snappy.parquet")
-    for p in (inflight1, inflight2):
-        with open(p, "wb") as fh:
-            fh.write(b"\x00" * 64)        # no PAR1 trailer
-    # and one REAL residue file in the visible hour dir
-    hour_dir = os.path.join(ddir, f"hour={when.strftime('%H')}")
-    residue = os.path.join(hour_dir, "part-00009-crash.c000.snappy.parquet")
-    with open(residue, "wb") as fh:
-        fh.write(b"\x00" * 64)
-    n = store.quarantine_crash_residue("events")
-    assert n == 1, "exactly the visible residue is swept"
-    assert os.path.exists(inflight1) and os.path.exists(inflight2), \
-        "staging files must never be touched"
-    assert not os.path.exists(residue)
-    assert os.path.exists(os.path.join(
-        hour_dir, ".part-00009-crash.c000.snappy.parquet.crash"))
 
 
 def test_sweep_reaps_only_stale_compact_staging(tmp_path):

@@ -1,18 +1,19 @@
 """Randomized archive-lifecycle soak (round-7 verdict ask).
 
 One seeded random interleaving per case of EVERY lifecycle verb the
-archive exposes — ingest / compact / expire / crash-residue injection +
-quarantine sweep / cat replay — against a MODEL of what must be live
-(per-date, per-batch row counts). The point-tests each cover one verb
-pair (compact-vs-cat, expire-vs-cat, quarantine boundary); the soak
-covers their COMPOSITIONS: compact after expire recreated a date,
-quarantine while half the dates are compacted, cat ranges spanning
-dropped-and-rewritten partitions — orderings nobody writes by hand.
+archive exposes — ingest / compact / expire / crash-residue injection /
+cat replay — against a MODEL of what must be live (per-date, per-batch
+row counts). The point-tests each cover one verb pair (compact-vs-cat,
+expire-vs-cat); the soak covers their COMPOSITIONS: compact after
+expire recreated a date, residue next to compacted dates, cat ranges
+spanning dropped-and-rewritten partitions — orderings nobody writes by
+hand.
 
 Invariant after any prefix of operations: ``cat`` over any date range
 returns exactly the model's surviving rows (grouped by batch marker),
-and never an error. Residue injection must never change results (its
-batch never committed — the quarantine contract).
+and never an error. Residue injection must never change results: a
+store killed mid-batch leaves its part files only in hidden staging,
+which the batch's rerun completes.
 """
 
 import datetime as dt
@@ -38,21 +39,18 @@ def _ingest(spark, store, date, batch, n):
     store.ingest_dataframe(df, "events", CLIENT, when=when)
 
 
-def _inject_residue(store, date):
-    """Drop a trailer-less fake part file into the date dir, like a
-    SIGKILLed writer would. Returns True if a target dir existed."""
-    ddir = os.path.join(store.root, "stream=events", f"client={CLIENT}",
-                        f"date={date.strftime('%Y%m%d')}")
-    if not os.path.isdir(ddir):
-        return False
-    hours = [d for d in os.listdir(ddir) if d.startswith("hour=")]
-    if not hours:
-        return False
-    target = os.path.join(ddir, random.choice(hours),
-                          f"part-crash-{random.randrange(10**6)}.parquet")
+def _inject_residue(store, date, batch_id):
+    """Leave what a SIGKILLed store leaves: a micro-batch's hidden
+    staging dir holding a trailer-less part file for ``date``."""
+    hdir = os.path.join(
+        store.root, f".sink_tmp.events-{CLIENT}.{batch_id}",
+        "stream=events", f"client={CLIENT}",
+        f"date={date.strftime('%Y%m%d')}", f"hour={random.randrange(24):02d}")
+    os.makedirs(hdir, exist_ok=True)
+    target = os.path.join(hdir, f"part-crash-{random.randrange(10**6)}"
+                                ".c000.snappy.parquet")
     with open(target, "wb") as fh:
         fh.write(b"\x00" * random.randrange(1, 64))  # no PAR1 trailer
-    return True
 
 
 def _check_model(store, model):
@@ -85,7 +83,6 @@ def test_archive_lifecycle_soak(spark, tmp_path, seed):
     store = ArchiveStore(spark, str(tmp_path / "archive"))
     model: dict = {}          # date -> {batch: rows}
     batch = 0
-    residue_dates: set = set()   # dates with an unswept crash residue
 
     # seed the archive so the first ops have something to chew on
     for d in random.sample(DATES, 2):
@@ -96,8 +93,8 @@ def test_archive_lifecycle_soak(spark, tmp_path, seed):
 
     for step in range(22):
         op = random.choices(
-            ["ingest", "compact", "expire", "residue", "quarantine"],
-            weights=[5, 2, 1, 2, 2])[0]
+            ["ingest", "compact", "expire", "residue"],
+            weights=[5, 2, 1, 2])[0]
         if op == "ingest":
             d = random.choice(DATES)
             batch += 1
@@ -105,11 +102,7 @@ def test_archive_lifecycle_soak(spark, tmp_path, seed):
             _ingest(spark, store, d, batch, n)
             model.setdefault(d, {})[batch] = n
         elif op == "compact":
-            # an operator runs the quarantine sweep before compact
-            # (StorePipeline.start does the same); compacting a dir
-            # with live crash residue would read the corrupt file
-            lived = [d for d, b in model.items()
-                     if b and d not in residue_dates]
+            lived = [d for d, b in model.items() if b]
             if lived:
                 d = random.choice(lived)
                 stats = store.compact("events", d, CLIENT,
@@ -121,21 +114,9 @@ def test_archive_lifecycle_soak(spark, tmp_path, seed):
             for d in list(model):
                 if d < keep:
                     model.pop(d)
-            residue_dates -= {d for d in residue_dates if d < keep}
-        elif op == "residue":
-            d = random.choice(DATES)
-            if _inject_residue(store, d):
-                residue_dates.add(d)
-        else:  # quarantine sweep (the store-resume entry point)
-            swept = store.quarantine_crash_residue("events")
-            if residue_dates:
-                assert swept >= len(residue_dates)
-            residue_dates.clear()
-        if step % 6 == 5 and not residue_dates:
+        else:  # residue
+            _inject_residue(store, random.choice(DATES), step)
+        if step % 6 == 5:
             _check_model(store, model)
 
-    # residue may still be live: the sweep is what a store resume
-    # runs; do it, then the final full check
-    swept = store.quarantine_crash_residue("events")
-    assert swept >= len(residue_dates)
     _check_model(store, model)

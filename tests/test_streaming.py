@@ -176,24 +176,96 @@ events:
 
 
 def test_stream_stats_progress_monitor(engine, tmp_path):
-    """StreamingQueryListener progress: after an ingest the engine
-    reports per-query rows/sec + batch durations keyed by query name."""
-    engine.stream_stats()  # install listener before the query starts
+    """After an ingest the engine reports per-query rows/sec + batch
+    durations keyed by query name, read from each pipeline's own last
+    progress: the first call may come after the query ran and stopped
+    (a listener installed by that call would have seen nothing)."""
     _write_events_json(f"{tmp_path}/incoming/events", _recs(12))
     pipe = engine.store("events", schema=EVENTS_SCHEMA, once=True)
     pipe.await_once()
     pipe.stop()
-    # listener bus is async; poll briefly
-    import time
-    for _ in range(40):
-        stats = engine.stream_stats()
-        key = "store-events-archive"
-        if key in stats and stats[key]["num_input_rows"] > 0:
-            break
-        time.sleep(0.25)
+    pipe.stop()     # idempotent, and keeps the stopped query
+    stats = engine.stream_stats()
+    key = "store-events-archive"
     assert key in stats, stats
     assert stats[key]["num_input_rows"] == 12
     assert "addBatch" in stats[key]["duration_ms"]
+
+
+def test_stream_stats_reports_a_live_query(engine, tmp_path):
+    """A running query answers too, and ``stop_all`` keeps the stopped
+    pipelines' last progress."""
+    import time
+
+    os.makedirs(f"{tmp_path}/incoming/events")
+    pipe = engine.store("events", schema=EVENTS_SCHEMA, once=False,
+                        trigger_seconds=0.2)
+    _write_events_json(f"{tmp_path}/incoming/events", _recs(7))
+    key = "store-events-archive"
+    deadline = time.time() + 120
+    while time.time() < deadline:
+        stats = engine.stream_stats()
+        if stats.get(key, {}).get("num_input_rows"):
+            break
+        time.sleep(0.2)
+    assert stats[key]["num_input_rows"] == 7, stats
+    engine.stop_all()
+    assert not pipe.query.isActive
+    assert key in engine.stream_stats()
+
+
+def test_store_failure_reported_once(engine, tmp_path):
+    """A failed store query reaches the reporter once, and still fails
+    loudly: ``await_once`` and the first ``stop`` raise, a second
+    ``stop`` does nothing."""
+    from pyspark.errors import StreamingQueryException
+
+    from go_triton_spark.reporting import CollectingReporter
+
+    _write_events_json(f"{tmp_path}/incoming/events", _recs(2))
+    open(tmp_path / "archive", "w").close()     # no archive dir can exist
+    rep = CollectingReporter()
+    pipe = engine.store("events", schema=EVENTS_SCHEMA, once=True,
+                        on_error=rep)
+    with pytest.raises(StreamingQueryException):
+        pipe.await_once()
+    with pytest.raises(StreamingQueryException):
+        pipe.stop()
+    pipe.stop()
+    assert [k for k, _m, _c in rep.events] == ["stream_error"]
+
+
+def test_store_run_leaves_no_partial_or_manifest_files(spark, tmp_path):
+    """What a store run leaves in the archive root: no sink manifest,
+    every visible part file complete (parquet trailer), and only the
+    last micro-batch's hidden staging dir."""
+    cfg = load_config(f"""
+events:
+  name: events
+  partition_key: user_id
+  source: file
+  format: json
+  path: {tmp_path}/incoming/events
+  max_files_per_trigger: 1
+""")
+    eng = TritonEngine(spark, str(tmp_path), config=cfg, client="archive")
+    for b in range(3):
+        _write_events_json(f"{tmp_path}/incoming/events", _recs(5, b * 5))
+    pipe = eng.store("events", schema=EVENTS_SCHEMA, once=True)
+    pipe.await_once()
+    pipe.stop()
+    root = eng.archive.root
+    assert eng.cat("events", dt.datetime.now(tz=UTC).date()).count() == 15
+    names = os.listdir(root)
+    assert "_spark_metadata" not in names
+    assert [n for n in names if n.startswith(".sink_tmp.")] == \
+        [f".sink_tmp.events-archive.{pipe.query.lastProgress.batchId}"]
+    parts = glob.glob(f"{root}/stream=*/**/*.parquet", recursive=True)
+    assert len(parts) >= 3
+    for p in parts:
+        with open(p, "rb") as fh:
+            fh.seek(-4, os.SEEK_END)
+            assert fh.read(4) == b"PAR1", p
 
 
 def test_skip_to_latest_file_source_skips_backlog(engine, tmp_path):
@@ -258,14 +330,12 @@ def test_compact_under_load_no_loss_no_reader_failure(engine, tmp_path, spark):
     """`compact` running next to a LIVE store and concurrent `cat`
     readers (the production shape: a compaction cron against an archive
     that never stops ingesting). Invariants: cold hours get rewritten,
-    the live hour is skipped (hot-hour guard — the sink writes part
-    files at their final names, so a hot hour can hold one still being
-    written), readers never fail and never retry (compact deletes no
-    file a reader listed), counts only grow — staging dirs must never
-    be visible as bogus partitions — and nothing is lost. Also
-    regression-covers the round-5 read fix: cat must survive a real
-    rewrite of a streaming-ingested archive (the sink manifest still
-    names the old files)."""
+    the live hour is skipped (hot-hour guard — the store keeps adding
+    files to it, so a rewrite would be outdated at the next batch),
+    readers never fail and never retry (compact deletes no file a
+    reader listed, and every writer renames whole files into place),
+    counts only grow — staging dirs must never be visible as bogus
+    partitions — and nothing is lost."""
     import threading
     import time
 
@@ -391,12 +461,12 @@ def _alive(pid):
 def test_kill_nine_mid_ingest_no_record_loss(spark, tmp_path):
     """Crash semantics, for real: SIGKILL the `store` CLI process
     mid-run (no drain), write more input while it is down, then
-    resume from the same checkpoint in-process. The
-    claim under test is the reference's own guarantee
-    (triton/store.go:51-67): AT-LEAST-ONCE — nothing is lost; only
-    the batch in flight at the kill may replay (cat lists the
-    filesystem, not the sink manifest, so an uncommitted batch's
-    files count as delivered)."""
+    resume from the same checkpoint in-process. The claim under test
+    is EXACTLY-ONCE, an upgrade on the reference's at-least-once
+    (triton/store.go:51-67): nothing is lost and nothing lands twice.
+    The batch in flight at the kill reruns under its batch id and
+    finishes or redoes its hidden staging; nothing of it was visible
+    before its move."""
     import signal
     import subprocess
     import sys as _sys
@@ -474,8 +544,7 @@ events:
     assert set(ids) == expect, (
         f"records lost across kill -9: missing {sorted(expect - set(ids))[:10]}")
     dups = len(ids) - len(set(ids))
-    # at-least-once: only the in-flight batch may replay
-    assert dups <= 60, f"replays beyond the crashed backlog: {dups}"
+    assert dups == 0, f"{dups} rows landed twice across kill -9"
 
 
 def test_store_compact_expire_cat_four_way_concurrency(engine, tmp_path, spark):
@@ -489,8 +558,8 @@ def test_store_compact_expire_cat_four_way_concurrency(engine, tmp_path, spark):
       the vanished slice) but nothing may corrupt the surviving dates
       and expire must win eventually.
     - readers replay only the KEPT range; invariants are the documented
-      ones: at most one retry per swap race, counts over the kept range
-      monotone non-decreasing, zero loss at drain.
+      ones: no reader error, counts over the kept range monotone
+      non-decreasing, zero loss at drain.
     """
     import threading
     import time
@@ -531,18 +600,7 @@ def test_store_compact_expire_cat_four_way_concurrency(engine, tmp_path, spark):
             try:
                 counts.append(one_cat())
             except Exception as exc:  # noqa: BLE001
-                msg = str(exc)
-                # FAILED_READ_FILE covers the NO_HINT spelling: the
-                # FileNotFoundException cause can sit past py4j's
-                # message window when DSv2 wraps the task failure
-                if ("FILE_NOT_EXIST" in msg or "FileNotFound" in msg
-                        or "FAILED_READ_FILE" in msg):
-                    try:
-                        counts.append(one_cat())  # documented single retry
-                    except Exception as exc2:  # noqa: BLE001
-                        read_errors.append("retry failed: " + repr(exc2))
-                else:
-                    read_errors.append(repr(exc))
+                read_errors.append(repr(exc))
             time.sleep(0.1)
 
     def compactor():

@@ -28,9 +28,9 @@ and grow-only counters never go backwards. Writer-side transients are
 tolerated only in their documented classes (compact hours_vanished /
 hours_contended, expire-vs-staging). Each pair counts the reader
 errors in _RETRYABLE (``read_retries``). cat-compact,
-compact-compact and ingest-compact run no expire and no live sink,
-so only a compaction could cause one — and compact deletes no file
-a reader listed — so those pairs FAIL on any.
+compact-compact, ingest-compact and sink-compact run no expire, and
+none of their writers deletes a file a reader listed or exposes one
+mid-write, so those pairs FAIL on any.
 
 Before the r10 compact fix this harness's compact-compact leg could
 corrupt: both crons shared one FIXED staging name, so B's entry
@@ -63,13 +63,15 @@ ROOT = "/tmp/stress_race_matrix"
 _RETRYABLE = ("FILE_NOT_EXIST", "FileNotFound", "PATH_NOT_FOUND",
               "UNABLE_TO_INFER_SCHEMA",
               # execution-time vanish of a planned file (an expire
-              # between plan and open) or a sink file read mid-write:
-              # loud-then-heal satisfies the invariant
+              # between plan and open): loud-then-heal satisfies the
+              # invariant
               "FAILED_READ_FILE")
 
-#: pairs with no expire and no live sink: a compaction is their only
-#: writer that could fail a read, and it must never
-_NO_READ_RETRY = ("cat-compact", "compact-compact", "ingest-compact")
+#: pairs with no expire: their writers (compact, backfill ingest, the
+#: live sink) rename only whole files into place and delete no file a
+#: reader listed, so none may ever fail a read
+_NO_READ_RETRY = ("cat-compact", "compact-compact", "ingest-compact",
+                  "sink-compact")
 
 
 class Harness:
@@ -149,8 +151,9 @@ class Harness:
             time.sleep(0.01)
 
     def sink(self):
-        """Repeated once-triggered store runs: each await_once lands a
-        micro-batch file + manifest commit that compact/cat race."""
+        """Repeated once-triggered store runs: each await_once stages a
+        micro-batch and renames its part files into the hour that
+        compact/cat race."""
         k = 0
         prod = self.eng.producer(batch_size=5)
         while not self.stop.is_set():
@@ -418,9 +421,9 @@ class Harness:
             # retention cron next to the LIVE streaming sink (r10
             # verdict #6 — the last uncovered sibling): expire churns
             # an old date (ingest staging + date-dir rmtree) while
-            # file-sink micro-batch commits land in the current hour.
-            # The sink's manifest/checkpoint state at the root and its
-            # committed rows must never be clipped by the retention
+            # micro-batch commits land in the current hour. The sink's
+            # staging at the root and its committed rows must never be
+            # clipped by the retention
             # walk; both the stable window and the sink counter are
             # grow-only under both readers
             writers = [self.sink, self.expirer]
@@ -471,7 +474,7 @@ class Harness:
         if pair in _NO_READ_RETRY and self.ops["read_retries"]:
             self.problems.append(
                 f"{self.ops['read_retries']} reader errors with no "
-                f"expire or sink running (first: {self.first_retry})")
+                f"expire running (first: {self.first_retry})")
         return {"pair": pair, **self.ops,
                 "problems": self.problems[:5]}
 
